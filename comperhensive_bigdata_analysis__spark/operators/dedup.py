@@ -328,7 +328,7 @@ def minhash_lsh_pairs(
             f"size(filter(zip_with(sig_a, sig_b, (p, q) -> p = q), m -> m))"
             f" / CAST({k} AS DOUBLE) AS est_jaccard",
         )
-        .filter(f"est_jaccard >= CAST('{min_est!r}' AS DOUBLE)")
+        .filter(F.col("est_jaccard") >= F.lit(float(min_est)))
     )
 
 

@@ -31,7 +31,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .session import apply_runtime_confs
+from .session import apply_runtime_confs, register
 from .sources.ingest import ingest_csv, ingest_folder
 
 _ORDER_BY_RE = re.compile(r"\border\s+by\b", re.IGNORECASE)
@@ -857,8 +857,8 @@ class Engine:
         return self.sql(q).toPandas()
 
     # -- catalog -----------------------------------------------------------
-    def register(self, df: DataFrame, name: str) -> None:
-        df.createOrReplaceTempView(name)
+    def register(self, df: DataFrame, name: str) -> DataFrame:
+        return register(self.spark, df, name)
 
     def table_exists(self, name: str) -> bool:
         return self.spark.catalog.tableExists(name)

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Confs every session needs, whether we created it or the host did.
 #: - UTC session time zone: deterministic timestamp rendering regardless
@@ -35,9 +35,13 @@ RUNTIME_CONFS = {
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply engine-required runtime confs to an existing session.
 
-    Called at the top of every public query entry point so the engine
-    behaves identically on a session it did not create (e.g. the test
-    driver's). All keys in RUNTIME_CONFS are runtime-settable.
+    Called once per session so the engine behaves identically on a
+    session it did not create (e.g. a notebook host's): by ``get_spark``,
+    by ``query.Engine`` on construction, and by ``sources.tables`` before
+    a session's first ``load_table`` (memoized per SparkSession, since
+    these are per-session SQL confs). A caller that mutates one of them
+    mid-session calls this again itself. All keys in RUNTIME_CONFS are
+    runtime-settable.
     """
     for k, v in RUNTIME_CONFS.items():
         try:
@@ -101,7 +105,25 @@ def table_exists(spark: SparkSession, name: str) -> bool:
     return spark.catalog.tableExists(name)
 
 
-def register(spark: SparkSession, df, name: str) -> None:
+def register(spark: SparkSession, df: DataFrame, name: str) -> DataFrame:
     """Register a DataFrame as a queryable view (reference: Hive external
-    table per parquet dir, aws_utils.py:203-220)."""
+    table per parquet dir, aws_utils.py:203-220) and return the frame
+    the view resolves to.
+
+    A relation that reads files and whose planner size estimate (the
+    statistic the broadcast-join choice reads) is at most
+    ``spark.sql.files.openCostInBytes`` — Spark's own measure of the
+    bytes one task scans in the time it takes to open a file — is
+    registered as ``df.coalesce(1)``: its one partition satisfies every
+    required distribution, so aggregates, windows and global sorts over
+    it plan without an exchange and an analyst query runs as one Spark
+    job instead of one per stage (plus a sampling job per global sort).
+    Larger relations, and frames that read no files, register as they
+    are. Nothing is cached; the view is still a lazy plan.
+    """
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    if size <= open_cost and df.inputFiles():
+        df = df.coalesce(1)
     df.createOrReplaceTempView(name)
+    return df

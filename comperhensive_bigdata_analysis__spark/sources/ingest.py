@@ -25,6 +25,8 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import register
+
 #: helper_utils.py:107 — "max for int is 2**31 but we will go with 2**30"
 INT_WIDTH_BOUND = 2**30
 
@@ -80,6 +82,14 @@ def _try_ts(col):
     return expr
 
 
+def _ts_candidate(col):
+    """Cheap necessary condition for ``_try_ts(col)`` to be non-NULL:
+    every pattern starts with a digit field, which the parser accepts
+    with one leading sign. A failed ``try_to_timestamp`` costs far more
+    than this regex, and most strings in a wide CSV fail all five."""
+    return col.rlike("^[+-]?[0-9]")
+
+
 def preprocess(df: DataFrame) -> DataFrame:
     """Reference preprocess_file semantics (helper_utils.py:83-95) in two
     distributed passes:
@@ -100,7 +110,9 @@ def preprocess(df: DataFrame) -> DataFrame:
     aggs = [
         F.count(F.col(c)).alias(f"__nn_{i}") for i, c in enumerate(df.columns)
     ] + [
-        F.count(F.when(_try_ts(F.col(c)).isNotNull(), 1)).alias(f"__ts_{i}")
+        F.count(
+            F.when(_ts_candidate(F.col(c)) & _try_ts(F.col(c)).isNotNull(), 1)
+        ).alias(f"__ts_{i}")
         for i, c in enumerate(df.columns)
         if c in string_cols
     ]
@@ -161,7 +173,10 @@ def ingest_csv(
     parquet_dir: str | None = None,
     register_view: bool = True,
 ) -> DataFrame:
-    """Full single-file pipeline (reference Main_File.py:23-35 behavior)."""
+    """Full single-file pipeline (reference Main_File.py:23-35 behavior).
+    Returns the registered frame (``session.register``: a small table
+    comes back as one partition) or, with ``register_view=False``, the
+    frame as read."""
     raw = spark.read.csv(path, header=True, inferSchema=True)
     df = _narrow_ints(preprocess(sanitize_columns(raw)))
     name = table or table_name_for(path)
@@ -170,7 +185,7 @@ def ingest_csv(
         df.write.mode("overwrite").parquet(out)
         df = spark.read.parquet(out)
     if register_view:
-        df.createOrReplaceTempView(name)
+        df = register(spark, df, name)
     return df
 
 
@@ -241,5 +256,5 @@ def ingest_csv_audited(
         F.col("_corrupt_record").alias("raw_line")
     )
     if register_view:
-        clean.createOrReplaceTempView(table or table_name_for(path))
+        clean = register(spark, clean, table or table_name_for(path))
     return clean, rejects

@@ -14,6 +14,7 @@ no UDF, no extra scan.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,39 +58,35 @@ def _nanos_to_ntz(col_name: str):
 #: round trips, and ~50 ms of DataSource resolution — 0.1-0.4 s of
 #: DRIVER time per query BUILD (a 4-table join pays it 4x), pure
 #: planning overhead at any scale. The cache holds the analyzed base
-#: DataFrame handle per (SparkContext, absolute path, mtime_ns, size)
-#: — the exact semantics of registering each table as a temp view once
-#: (``register_all``, the reference's shared-copy contract), just
-#: keyed automatically. A DataFrame handle is an immutable logical
-#: plan, NOT data: every action still scans the parquet files, results
-#: are recomputed on every invocation, and nothing persists across
-#: processes. A rewritten table (new mtime/size) or a new session
-#: (new applicationId) misses the cache and re-resolves.
-_TABLE_CACHE: dict[tuple[str, str, int, int], DataFrame] = {}
-_CONFS_APPLIED: set[str] = set()
+#: DataFrame handle per (SparkSession, SparkContext, absolute path,
+#: mtime_ns, size) — the exact semantics of registering each table as a
+#: temp view once (``register_all``, the reference's shared-copy
+#: contract), just keyed automatically. A DataFrame handle is an
+#: immutable logical plan, NOT data: every action still scans the
+#: parquet files, results are recomputed on every invocation, and
+#: nothing persists across processes. A rewritten table (new
+#: mtime/size), another session on the same context (its own confs and
+#: catalog) or a new context (new applicationId) misses the cache and
+#: re-resolves.
+_TABLE_CACHE: dict[tuple[SparkSession, str, str, int, int], DataFrame] = {}
+_CONFS_APPLIED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def _ensure_confs(spark: SparkSession) -> None:
-    """apply_runtime_confs once per underlying SparkContext — the confs
-    are engine invariants (UTC, nanosAsLong, AQE) that nothing in the
-    engine unsets; callers that deliberately mutate them mid-session
-    can call session.apply_runtime_confs directly."""
-    try:
-        key = spark.sparkContext.applicationId
-    except Exception:
-        key = None
-    if key is None or key not in _CONFS_APPLIED:
+    """apply_runtime_confs once per SparkSession. RUNTIME_CONFS are
+    per-session SQL confs — a ``newSession()`` on the same context
+    starts from the defaults — and engine invariants (UTC, nanosAsLong,
+    AQE) that nothing in the engine unsets; callers that deliberately
+    mutate them mid-session can call session.apply_runtime_confs
+    directly."""
+    if spark not in _CONFS_APPLIED:
         apply_runtime_confs(spark)
-        if key is not None:
-            _CONFS_APPLIED.add(key)
+        _CONFS_APPLIED.add(spark)
 
 
-def _read_table(spark: SparkSession, path: str) -> DataFrame:
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     df = spark.read.parquet(path)
-    if path.rstrip("/").endswith("events.parquet") and dict(df.dtypes).get("ts") in (
-        "bigint",
-        "long",
-    ):
+    if name == "events" and dict(df.dtypes).get("ts") in ("bigint", "long"):
         df = df.withColumn("ts", _nanos_to_ntz("ts"))
     return df
 
@@ -102,11 +99,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         st = os.stat(path)
         app = spark.sparkContext.applicationId
     except Exception:
-        return _read_table(spark, path)  # unstat-able path — no caching
-    key = (app, os.path.abspath(path), st.st_mtime_ns, st.st_size)
+        return _read_table(spark, path, name)  # unstat-able path — no caching
+    key = (spark, app, os.path.abspath(path), st.st_mtime_ns, st.st_size)
     df = _TABLE_CACHE.get(key)
     if df is None:
-        df = _read_table(spark, path)
+        df = _read_table(spark, path, name)
         _TABLE_CACHE[key] = df
     return df
 

@@ -35,6 +35,22 @@ def test_register_and_existence_probe(spark, sf_dir):
     assert not table_exists(spark, "cba_probe_view")
 
 
+def test_load_table_is_per_session(spark, sf_dir):
+    """RUNTIME_CONFS are per-session SQL confs: a second session on the
+    same context (e.g. a host's, lacking them) gets them from its first
+    load_table, and table handles bound to itself, never the first
+    session's."""
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    other = spark.newSession()
+    other.conf.set(nanos, "false")
+    mine = load_table(spark, sf_dir, "events")
+    theirs = load_table(other, sf_dir, "events")
+    assert other.conf.get(nanos) == "true"
+    assert theirs is not mine and theirs.sparkSession is other
+    assert dict(theirs.dtypes)["ts"] == "timestamp_ntz"
+    assert theirs.count() == mine.count()
+
+
 def test_cli_list_names_all_plans(capsys):
     from comperhensive_bigdata_analysis__spark import plans
     from comperhensive_bigdata_analysis__spark.__main__ import main

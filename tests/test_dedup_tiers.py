@@ -303,3 +303,18 @@ def test_winnowing_cap_keeps_planted_pairs_in_boilerplate_swamp(spark, tmp_path)
     assert ev["n_true_pairs"] == 780
     assert ev["n_kept_pairs"] == 5
     assert ev["recall_ppm"] == 5 * 1000000 // 780
+
+
+def test_min_est_accepts_any_real_scalar(spark):
+    """The est_jaccard threshold is a typed literal, so numpy scalars
+    and Decimals filter exactly like the equal float."""
+    from decimal import Decimal
+
+    import numpy as np
+
+    d = _fixture(spark)
+    want = _pairs(minhash_lsh_pairs(d, "doc_id", "text", min_est=0.5))
+    assert (1, 2) in want and (1, 4) not in want
+    for threshold in (np.float64(0.5), np.float32(0.5), Decimal("0.5")):
+        got = _pairs(minhash_lsh_pairs(d, "doc_id", "text", min_est=threshold))
+        assert got == want, threshold

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import csv
 import os
+import uuid
 
 import pytest
 
@@ -225,3 +226,83 @@ def test_audited_ingest_quarantines_malformed_rows(spark, tmp_path):
     assert any("never" in b for b in bad)
     # registered and queryable
     assert spark.table("dirty").count() == 2
+
+
+_Q6 = """select technology, sum(electrical_capacity) electrical_capacity_sum
+from {table}
+group by technology
+order by electrical_capacity_sum desc"""
+
+
+def _plants_csv(path, n=2000):
+    techs = ["Photovoltaics", "Onshore", "Offshore", "Biomass and biogas"]
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(["technology", "electrical capacity", "commissioning date"])
+        for i in range(n):
+            w.writerow(
+                [techs[i % 4], f"{i * 37 % 1009 / 8:.3f}", f"20{10 + i % 10}-01-{1 + i % 28:02d}"]
+            )
+    return str(path)
+
+
+def _run_counting_jobs(spark, df):
+    """(rows, number of Spark jobs the collect ran), counted through a
+    job group of its own."""
+    sc = spark.sparkContext
+    group = f"cba-job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_small_ingested_table_runs_a_query_as_one_job(spark, tmp_path):
+    """A table under spark.sql.files.openCostInBytes registers as one
+    partition, so GROUP BY + ORDER BY plan no exchange: one job."""
+    from comperhensive_bigdata_analysis__spark.query import Engine
+
+    eng = Engine(spark)
+    df = eng.ingest(
+        _plants_csv(tmp_path / "plants.csv"), table="small_plants",
+        parquet_dir=str(tmp_path / "pq"),
+    )
+    assert df.rdd.getNumPartitions() == 1
+    rows, jobs = _run_counting_jobs(spark, eng.sql(_Q6.format(table="small_plants")))
+    assert jobs == 1
+    sums = [r["electrical_capacity_sum"] for r in rows]
+    assert len(rows) == 4 and sums == sorted(sums, reverse=True)
+
+
+def test_table_over_open_cost_keeps_parallel_scan(spark, tmp_path):
+    """The same table with openCostInBytes lowered below its size keeps
+    its multi-partition scan, and the query its exchange."""
+    from comperhensive_bigdata_analysis__spark.query import Engine
+
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        eng = Engine(spark)
+        df = eng.ingest(
+            _plants_csv(tmp_path / "plants.csv"), table="big_plants",
+            parquet_dir=str(tmp_path / "pq"),
+        )
+        assert "Coalesce" not in df._jdf.queryExecution().optimizedPlan().toString()
+        assert spark.table("big_plants").rdd.getNumPartitions() > 1
+        rows, jobs = _run_counting_jobs(spark, eng.sql(_Q6.format(table="big_plants")))
+    finally:
+        spark.conf.set(key, before)
+    assert jobs > 1
+    assert len(rows) == 4
+
+
+def test_register_leaves_non_file_frames_unchanged(spark):
+    from comperhensive_bigdata_analysis__spark.session import register
+
+    df = spark.range(8).repartition(3)
+    assert register(spark, df, "cba_range_view") is df
+    assert spark.table("cba_range_view").rdd.getNumPartitions() == 3
+    spark.catalog.dropTempView("cba_range_view")

@@ -1,12 +1,14 @@
 """Property-based tests (hypothesis) for the pure-Python ingest
 semantics — SURVEY §5.2 item 3: sanitization idempotent, output charset
-closed, collapse rule total. Pure functions, no Spark session."""
+closed, collapse rule total — plus the timestamp probe's cheap gate,
+which needs the Spark session to evaluate."""
 
 from __future__ import annotations
 
 import re
 
-from hypothesis import given
+import pytest
+from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from comperhensive_bigdata_analysis__spark.sources.ingest import (
@@ -53,3 +55,62 @@ def test_sanitize_collisions_are_resolved_deterministically(cols):
         seen.setdefault(s, 0)
         out.append(s)
     assert len(set(out)) == len(out)  # no residual collisions
+
+
+# -- the timestamp probe's cheap gate (needs Spark) -------------------------
+
+_TS_ALPHABET = "0123456789+-/: T\t.Zaz"
+
+
+@pytest.fixture(scope="module")
+def ts_probe(spark):
+    from pyspark.sql import functions as F
+
+    from comperhensive_bigdata_analysis__spark.sources.ingest import (
+        _try_ts,
+        _ts_candidate,
+    )
+
+    def probe(values):
+        df = spark.createDataFrame([(v,) for v in values], "s string")
+        return {
+            r["s"]: (r["gate"], r["parses"])
+            for r in df.select(
+                "s",
+                _ts_candidate(F.col("s")).alias("gate"),
+                _try_ts(F.col("s")).isNotNull().alias("parses"),
+            ).collect()
+        }
+
+    return probe
+
+
+def test_ts_gate_admits_signed_years_and_rejects_padding(ts_probe):
+    out = ts_probe(["-2020-01-01", "+02020/01/01", " 2020-01-01", "01/02/2020"])
+    assert out["-2020-01-01"] == (True, True)
+    assert out["+02020/01/01"] == (True, True)
+    assert out["01/02/2020"] == (True, True)
+    assert out[" 2020-01-01"] == (False, False)
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.text(alphabet=_TS_ALPHABET, max_size=24),
+            st.text(max_size=12),
+            st.dates().map(str).flatmap(
+                lambda d: st.sampled_from([d, f"-{d}", f"+{d}", f" {d}", f"{d} 12:00:00"])
+            ),
+        ),
+        min_size=1,
+        max_size=40,
+        unique=True,
+    )
+)
+def test_ts_gate_false_implies_unparseable(ts_probe, values):
+    """_ts_candidate is a necessary condition: whenever it is false,
+    every probed format fails, so gating the probe never changes which
+    columns ingest coerces to timestamp."""
+    for v, (gate, parses) in ts_probe(values).items():
+        assert gate or not parses, repr(v)
