@@ -44,10 +44,36 @@ def _prophet_available() -> bool:
         return False
 
 
+def _band_forecast(
+    pdf, horizon: int, interval_width: float, resid_sd: float, predict
+):
+    """Shared tail of the closed-form tiers: the ``horizon`` days after
+    the history's last ``ds``, ``yhat = predict(ordinal days)`` and a
+    gaussian band of ``z * resid_sd`` around it."""
+    import numpy as np
+    import pandas as pd
+
+    # z for the central interval_width mass (0.95 -> 1.96) without scipy.
+    z = {0.8: 1.2816, 0.9: 1.6449, 0.95: 1.96, 0.99: 2.5758}.get(
+        round(interval_width, 2), 1.96
+    )
+    last = pdf["ds"].max()
+    future = pd.date_range(last, periods=horizon + 1, freq="D")[1:]
+    fx = np.array([d.toordinal() for d in future], dtype="float64")
+    yhat = predict(fx)
+    return pd.DataFrame(
+        {
+            "ds": future.date,
+            "yhat": yhat,
+            "yhat_lower": yhat - z * resid_sd,
+            "yhat_upper": yhat + z * resid_sd,
+        }
+    )
+
+
 def _fit_predict_linear(pdf, horizon: int, interval_width: float):
     """Closed-form linear trend + gaussian residual band."""
     import numpy as np
-    import pandas as pd
 
     pdf = pdf.sort_values("ds")
     x = pdf["ds"].map(lambda d: d.toordinal()).to_numpy(dtype="float64")
@@ -58,21 +84,8 @@ def _fit_predict_linear(pdf, horizon: int, interval_width: float):
     else:
         slope, intercept = np.polyfit(x, y, 1)
         resid_sd = float(np.std(y - (intercept + slope * x)))
-    # z for the central interval_width mass (0.95 -> 1.96) without scipy.
-    z = {0.8: 1.2816, 0.9: 1.6449, 0.95: 1.96, 0.99: 2.5758}.get(
-        round(interval_width, 2), 1.96
-    )
-    last = pdf["ds"].max()
-    future = pd.date_range(last, periods=horizon + 1, freq="D")[1:]
-    fx = np.array([d.toordinal() for d in future], dtype="float64")
-    yhat = intercept + slope * fx
-    return pd.DataFrame(
-        {
-            "ds": future.date,
-            "yhat": yhat,
-            "yhat_lower": yhat - z * resid_sd,
-            "yhat_upper": yhat + z * resid_sd,
-        }
+    return _band_forecast(
+        pdf, horizon, interval_width, resid_sd, lambda fx: intercept + slope * fx
     )
 
 
@@ -92,7 +105,6 @@ def _fit_predict_seasonal(
     solve well-posed on short histories. Residual-sd gaussian band,
     same convention as the linear tier."""
     import numpy as np
-    import pandas as pd
 
     pdf = pdf.sort_values("ds")
     x = pdf["ds"].map(lambda d: d.toordinal()).to_numpy(dtype="float64")
@@ -116,20 +128,8 @@ def _fit_predict_seasonal(
     lam = np.diag([0.0, 0.0] + [ridge] * (X.shape[1] - 2))
     w = np.linalg.solve(X.T @ X + lam, X.T @ y)
     resid_sd = float(np.std(y - X @ w))
-    z = {0.8: 1.2816, 0.9: 1.6449, 0.95: 1.96, 0.99: 2.5758}.get(
-        round(interval_width, 2), 1.96
-    )
-    last = pdf["ds"].max()
-    future = pd.date_range(last, periods=horizon + 1, freq="D")[1:]
-    fx = np.array([d.toordinal() for d in future], dtype="float64")
-    yhat = design(fx) @ w
-    return pd.DataFrame(
-        {
-            "ds": future.date,
-            "yhat": yhat,
-            "yhat_lower": yhat - z * resid_sd,
-            "yhat_upper": yhat + z * resid_sd,
-        }
+    return _band_forecast(
+        pdf, horizon, interval_width, resid_sd, lambda fx: design(fx) @ w
     )
 
 

@@ -243,7 +243,6 @@ def minhash_lsh_pairs(
     bands: int = MINHASH_BANDS,
     min_est: float = 0.25,
     hash_fn: str = "md5",
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """LSH candidate pairs + estimated jaccard.
 
@@ -253,16 +252,14 @@ def minhash_lsh_pairs(
     fraction of matching signature components.
     ``hash_fn``: 'md5' = oracle-replayable tier; 'xxhash64' = production
     tier (~2x faster; see _salted_hash).
-    ``persist_signatures``: the signature relation feeds three consumers
-    (banding + both sides of the rescore join); recomputing it triples
-    the shingle-explode cost (measured ~3x wall on the K=64 bench
-    tier), so it is cached by default. Repeated calls do NOT accumulate
-    cache entries: Spark's CacheManager keys on the canonicalized plan,
-    so an identical call reuses the existing entry (and logs "already
+    The signature relation is persisted: it feeds three consumers
+    (banding + both sides of the rescore join), and recomputing it
+    triples the shingle-explode cost (measured ~3x wall on the K=64
+    bench tier). Repeated calls do NOT accumulate cache entries:
+    Spark's CacheManager keys on the canonicalized plan, so an
+    identical call reuses the existing entry (and logs "already
     cached") — one entry lives per DISTINCT input corpus/parameters,
-    released on session stop or spark.catalog.clearCache(). Pass False
-    to opt out (e.g. one-shot calls where the triple recompute is
-    cheaper than the cache write).
+    released on session stop or spark.catalog.clearCache().
     Returns (id_a, id_b, est_jaccard) with id_a < id_b.
     """
     r = k // bands
@@ -298,9 +295,7 @@ def minhash_lsh_pairs(
     mins = ", ".join(f"min({_salted_hash_sql(i, hash_fn)})" for i in range(k))
     sig = spark.sql(
         f"SELECT doc, array({mins}) AS sig FROM {{sh}} GROUP BY doc", sh=sh
-    )
-    if persist_signatures:
-        sig = sig.persist()
+    ).persist()
     structs = ", ".join(
         f"named_struct('band', {b}, 'bucket', {band_bucket_sql(b)})"
         for b in range(bands)

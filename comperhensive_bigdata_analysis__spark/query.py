@@ -45,7 +45,17 @@ def _mask_literals(q: str) -> str:
     escape) with spaces, preserving every character position, so the
     keyword/paren scans below can't be fooled by SQL text inside a
     string or a quoted column name like "order by". Quote characters
-    themselves are kept."""
+    themselves are kept.
+
+    Raises ValueError when a quoted region never closes: the scans
+    would otherwise treat the rest of the text as quoted content, and
+    rewrites on such garbage are not stable. Dialect contract: this
+    front door speaks PRESTO string-literal rules, where a quote inside
+    a literal is escaped by DOUBLING (``'it''s'``) and a backslash is an
+    ordinary character. Spark's non-default backslash spelling
+    (``'it\\'s'``) therefore reads as a literal ``it\\`` followed by an
+    unterminated ``s'`` and is rejected by design — matching what
+    Presto itself would do."""
     out = list(q)
     i, n = 0, len(q)
     while i < n:
@@ -61,41 +71,16 @@ def _mask_literals(q: str) -> str:
                     break
                 out[j] = " "
                 j += 1
+            if j >= n:
+                raise ValueError(
+                    "unterminated quote in SQL text — refusing to rewrite "
+                    "(this Presto-dialect door escapes quotes by doubling: "
+                    "'it''s', never backslash)"
+                )
             i = j + 1
         else:
             i += 1
     return "".join(out)
-
-
-def _unterminated_quote(q: str) -> bool:
-    """True when a single- or double-quoted region never closes — the
-    masking scans would otherwise treat the rest of the text as quoted
-    content, and rewrites on such garbage are not stable.
-
-    Dialect contract: this front door speaks PRESTO string-literal
-    rules, where a quote inside a literal is escaped by DOUBLING
-    (``'it''s'``) and a backslash is an ordinary character. Spark's
-    non-default backslash spelling (``'it\\'s'``) therefore reads as a
-    literal ``it\\`` followed by an unterminated ``s'`` and is rejected
-    here by design — matching what Presto itself would do."""
-    i, n = 0, len(q)
-    while i < n:
-        if q[i] in ("'", '"'):
-            quote = q[i]
-            j = i + 1
-            while j < n:
-                if q[j] == quote:
-                    if j + 1 < n and q[j + 1] == quote:
-                        j += 2
-                        continue
-                    break
-                j += 1
-            if j >= n:
-                return True
-            i = j + 1
-        else:
-            i += 1
-    return False
 
 
 def _literal_flags(q: str) -> list[bool]:
@@ -812,13 +797,7 @@ def translate(q: str) -> str:
     q = q.strip()
     while q.endswith(";"):
         q = q[:-1].rstrip()
-    if _unterminated_quote(q):
-        raise ValueError(
-            "unterminated quote in SQL text — refusing to rewrite "
-            "(this Presto-dialect door escapes quotes by doubling: "
-            "'it''s', never backslash)"
-        )
-    if _UNNEST_RE.search(_mask_literals(q)):
+    if _UNNEST_RE.search(_mask_literals(q)):  # raises on an unclosed quote
         q = _rewrite_unnest(q)
     for pat, repl in _TOKEN_REWRITES:
         # recomputed per pass — earlier rewrites shift literal offsets

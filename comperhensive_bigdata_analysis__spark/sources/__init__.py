@@ -5,7 +5,6 @@ from .ingest import (  # noqa: F401
     sanitize_name,
     sanitize_columns,
     preprocess,
-    infer_sql_schema,
     ingest_csv,
     ingest_folder,
 )

@@ -1,20 +1,24 @@
 """CSV -> typed, sanitized, registered table — the reference's core pipeline.
 
 Re-expresses the behavioral contract of the reference's ingestion path
-(``helper_utils.py:27-197``, ``Main_File.py:23-67``) as one Spark job:
+(``helper_utils.py:27-197``, ``Main_File.py:23-67``):
 
   read CSV (header, inferred schema)              [S1, helper_utils.py:173]
   -> sanitize column names to [A-Za-z0-9_]        [F6, helper_utils.py:27-36]
-  -> drop all-NULL columns                        [helper_utils.py:88-90]
-  -> eager string->timestamp coercion             [helper_utils.py:91-95]
-  -> int-width minimization at +/-2**30           [helper_utils.py:105-110]
+  -> profile every column in ONE aggregate: non-null count, timestamp
+     parse count (strings), min/max (integral columns)
+  -> apply every change in ONE projection:
+       drop all-NULL columns                      [helper_utils.py:88-90]
+       eager string->timestamp coercion           [helper_utils.py:91-95]
+       date -> timestamp
+       int-width minimization at +/-2**30         [helper_utils.py:105-110]
   -> write parquet + register in catalog          [S2/S5, helper_utils.py:177]
 
-Scale notes: the all-NULL probe and int-width probe are ONE aggregate
-pass each (count/min/max per column, map-side combined), not per-column
-scans; timestamp coercion is a try-cast expression, not a Python loop.
-At 100 TB the whole pipeline is scan -> aggregate -> scan -> write, all
-whole-stage-codegen'd, no driver-side row handling.
+Scale notes: the profile is one map-side-combined aggregate over all
+columns, not per-column scans; timestamp coercion is a try-cast
+expression, not a Python loop. At 100 TB the whole pipeline is
+scan -> aggregate -> scan -> write, all whole-stage-codegen'd, no
+driver-side row handling.
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from ..session import register
 
 #: helper_utils.py:107 — "max for int is 2**31 but we will go with 2**30"
 INT_WIDTH_BOUND = 2**30
+_INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
 def sanitize_name(name: str) -> str:
@@ -50,15 +55,18 @@ def table_name_for(path: str) -> str:
 
 def sanitize_columns(df: DataFrame) -> DataFrame:
     """Rename all columns through sanitize_name, deduplicating collisions
-    with a numeric suffix (pure metadata op — no job runs)."""
-    seen: dict[str, int] = {}
+    with the next numeric suffix not already taken (pure metadata op —
+    no job runs). Names compare case-insensitively, as Spark resolves
+    them by default."""
+    taken: set[str] = set()
+    last_suffix: dict[str, int] = {}
     new = []
     for c in df.columns:
-        s = sanitize_name(c)
-        if s in seen:
-            seen[s] += 1
-            s = f"{s}_{seen[s]}"
-        seen.setdefault(s, 0)
+        base = s = sanitize_name(c)
+        while s.lower() in taken:
+            last_suffix[base] = last_suffix.get(base, 0) + 1
+            s = f"{base}_{last_suffix[base]}"
+        taken.add(s.lower())
         new.append(s)
     return df.toDF(*new)
 
@@ -91,79 +99,52 @@ def _ts_candidate(col):
 
 
 def preprocess(df: DataFrame) -> DataFrame:
-    """Reference preprocess_file semantics (helper_utils.py:83-95) in two
-    distributed passes:
+    """Reference preprocess_file semantics (helper_utils.py:83-110) in
+    two distributed passes:
 
-    pass 1 (one aggregate): per string column, does every non-null value
-      parse as a timestamp? per any column, is it entirely NULL?
-    pass 2: apply drops + coercions as column expressions.
+    pass 1 (one aggregate): per column, is it entirely NULL? per string
+      column, does every non-null value parse as a timestamp? per
+      integral column, its min and max.
+    pass 2 (one projection): drop all-NULL columns, coerce timestamp
+      strings, cast dates to timestamps (Spark's CSV inference may yield
+      `date`; the reference's pandas path always lands on datetime64)
+      and narrow integers.
+
+    Int-width rule (helper_utils.py:105-110): an integral column
+    entirely strictly inside +/-2**30 is `int`, anything else is
+    `bigint` — in BOTH directions (a value in (2**30, 2**31) fits int32
+    but the reference still declares bigint).
     """
-    # Spark's CSV inference may already yield `date`; the reference's
-    # pandas path always lands on datetime64 -> normalize to timestamp.
-    df = df.select(
-        *[
-            F.col(c).cast("timestamp").alias(c) if t == "date" else F.col(c)
-            for c, t in df.dtypes
-        ]
-    )
-    string_cols = [c for c, t in df.dtypes if t == "string"]
-    aggs = [
-        F.count(F.col(c)).alias(f"__nn_{i}") for i, c in enumerate(df.columns)
-    ] + [
-        F.count(
-            F.when(_ts_candidate(F.col(c)) & _try_ts(F.col(c)).isNotNull(), 1)
-        ).alias(f"__ts_{i}")
-        for i, c in enumerate(df.columns)
-        if c in string_cols
-    ]
+    aggs = []
+    for i, (c, t) in enumerate(df.dtypes):
+        col = F.col(c)
+        aggs.append(F.count(col).alias(f"__nn_{i}"))
+        if t == "string":
+            aggs.append(
+                F.count(F.when(_ts_candidate(col) & _try_ts(col).isNotNull(), 1))
+                .alias(f"__ts_{i}")
+            )
+        elif t in _INTEGRAL_TYPES:
+            aggs.append(F.min(col).alias(f"__mn_{i}"))
+            aggs.append(F.max(col).alias(f"__mx_{i}"))
     stats = df.agg(*aggs).first()
 
-    keep, coerce = [], set()
-    str_idx = {c: i for i, c in enumerate(df.columns) if c in string_cols}
-    for i, c in enumerate(df.columns):
-        if stats[f"__nn_{i}"] == 0:  # all-NULL column -> drop (hu:88-90)
+    out = []
+    for i, (c, t) in enumerate(df.dtypes):
+        col = F.col(c)
+        nn = stats[f"__nn_{i}"]
+        if nn == 0:  # all-NULL column -> drop (hu:88-90)
             continue
-        keep.append(c)
-        if c in str_idx and stats[f"__ts_{i}"] == stats[f"__nn_{i}"]:
-            coerce.add(c)  # every non-null value is a timestamp (hu:91-95)
-    out = df.select(
-        *[
-            _try_ts(F.col(c)).alias(c) if c in coerce else F.col(c)
-            for c in keep
-        ]
-    )
-    return out
-
-
-def _narrow_ints(df: DataFrame) -> DataFrame:
-    """Reference int-width rule (helper_utils.py:105-110): an integral
-    column entirely strictly inside +/-2**30 is `int`, anything else is
-    `bigint` — in BOTH directions (a value in (2**30, 2**31) fits int32
-    but the reference still declares bigint). One min/max aggregate."""
-    int_cols = [c for c, t in df.dtypes if t in ("int", "bigint", "long", "smallint", "tinyint")]
-    if not int_cols:
-        return df
-    stats = df.agg(
-        *[F.min(c).alias(f"mn_{i}") for i, c in enumerate(int_cols)],
-        *[F.max(c).alias(f"mx_{i}") for i, c in enumerate(int_cols)],
-    ).first()
-    width = {}
-    for i, c in enumerate(int_cols):
-        mn, mx = stats[f"mn_{i}"], stats[f"mx_{i}"]
-        narrow = mn is not None and mn > -INT_WIDTH_BOUND and mx < INT_WIDTH_BOUND
-        width[c] = "int" if narrow else "bigint"
-    return df.select(
-        *[
-            F.col(c).cast(width[c]).alias(c) if c in width else F.col(c)
-            for c in df.columns
-        ]
-    )
-
-
-def infer_sql_schema(df: DataFrame) -> list[tuple[str, str]]:
-    """The reference's {table_name, columns} registry payload
-    (helper_utils.py:174-181): list of (name, spark_sql_type)."""
-    return df.dtypes
+        if t == "string" and stats[f"__ts_{i}"] == nn:
+            col = _try_ts(col)  # every non-null value is a timestamp (hu:91-95)
+        elif t == "date":
+            col = col.cast("timestamp")
+        elif t in _INTEGRAL_TYPES:
+            mn, mx = stats[f"__mn_{i}"], stats[f"__mx_{i}"]
+            narrow = mn > -INT_WIDTH_BOUND and mx < INT_WIDTH_BOUND
+            col = col.cast("int" if narrow else "bigint")
+        out.append(col.alias(c))
+    return df.select(*out)
 
 
 def ingest_csv(
@@ -171,22 +152,18 @@ def ingest_csv(
     path: str,
     table: str | None = None,
     parquet_dir: str | None = None,
-    register_view: bool = True,
 ) -> DataFrame:
     """Full single-file pipeline (reference Main_File.py:23-35 behavior).
     Returns the registered frame (``session.register``: a small table
-    comes back as one partition) or, with ``register_view=False``, the
-    frame as read."""
+    comes back as one partition)."""
     raw = spark.read.csv(path, header=True, inferSchema=True)
-    df = _narrow_ints(preprocess(sanitize_columns(raw)))
+    df = preprocess(sanitize_columns(raw))
     name = table or table_name_for(path)
     if parquet_dir:
         out = os.path.join(parquet_dir, name)
         df.write.mode("overwrite").parquet(out)
         df = spark.read.parquet(out)
-    if register_view:
-        df = register(spark, df, name)
-    return df
+    return register(spark, df, name)
 
 
 def ingest_folder(
@@ -202,7 +179,7 @@ def ingest_folder(
         if not fname.lower().endswith(extensions):
             continue
         df = ingest_csv(spark, os.path.join(folder, fname), parquet_dir=parquet_dir)
-        registry[table_name_for(fname)] = infer_sql_schema(df)
+        registry[table_name_for(fname)] = df.dtypes
     return registry
 
 
@@ -228,7 +205,6 @@ def ingest_csv_audited(
     path: str,
     schema: str,
     table: str | None = None,
-    register_view: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Schema-enforced CSV ingest that QUARANTINES malformed rows
     instead of silently nulling (Spark's PERMISSIVE default) or
@@ -255,6 +231,5 @@ def ingest_csv_audited(
     rejects = raw.filter(F.col("_corrupt_record").isNotNull()).select(
         F.col("_corrupt_record").alias("raw_line")
     )
-    if register_view:
-        clean = register(spark, clean, table or table_name_for(path))
+    clean = register(spark, clean, table or table_name_for(path))
     return clean, rejects

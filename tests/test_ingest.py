@@ -27,12 +27,13 @@ def csv_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("csvs")
     rows = [
         # headers with spaces/hyphens/specials; all-null col; date col;
-        # small and large ints (around +/-2**30)
+        # small and large ints (around +/-2**30); headers that sanitize
+        # onto a suffixed name ("a-b" -> "a_b" -> "a_b_1" is taken)
         ["NUTS level", "Code-2021", "all null!", "commissioning date",
-         "small_int", "big int", "capacity (MW)"],
-        ["1", "DE1", "", "2011-12-16", "123", str(2**30 + 5), "1.5"],
-        ["2", "DE21", "", "2015-01-02", "-456", str(-(2**31) + 7), "2.75"],
-        ["3", "DE212", "", "1999-07-31", "789", "42", "0.25"],
+         "small_int", "big int", "capacity (MW)", "a_b_1", "a b", "a-b"],
+        ["1", "DE1", "", "2011-12-16", "123", str(2**30 + 5), "1.5", "x", "y", "z"],
+        ["2", "DE21", "", "2015-01-02", "-456", str(-(2**31) + 7), "2.75", "x", "y", "z"],
+        ["3", "DE212", "", "1999-07-31", "789", "42", "0.25", "x", "y", "z"],
     ]
     p = d / "Power Plants-DE.csv"
     with open(p, "w", newline="") as f:
@@ -54,14 +55,13 @@ def test_table_name_for():
 
 
 def test_ingest_semantics(spark, csv_dir):
-    df = ingest_csv(
-        spark, os.path.join(csv_dir, "Power Plants-DE.csv"), register_view=True
-    )
+    df = ingest_csv(spark, os.path.join(csv_dir, "Power Plants-DE.csv"))
     cols = dict(df.dtypes)
     # all-NULL column dropped (helper_utils.py:88-90)
     assert not any("null" in c for c in cols)
-    # names sanitized
+    # names sanitized, collisions suffixed with a name not yet taken
     assert "NUTS_level" in cols and "Code_2021" in cols and "capacity_MW_" in cols
+    assert df.columns[-3:] == ["a_b_1", "a_b", "a_b_2"]
     # string date column coerced to timestamp (helper_utils.py:91-95)
     assert cols["commissioning_date"] == "timestamp"
     # +/-2**30 widening rule (helper_utils.py:105-110)
@@ -79,13 +79,43 @@ def test_ingest_semantics(spark, csv_dir):
 
 def test_int_bound_is_exactly_2_pow_30(spark):
     df = spark.createDataFrame(
-        [(INT_WIDTH_BOUND - 1, INT_WIDTH_BOUND)], "at_bound long, over long"
+        [(INT_WIDTH_BOUND - 1, INT_WIDTH_BOUND, -INT_WIDTH_BOUND + 1, -INT_WIDTH_BOUND)],
+        "at_bound long, over long, at_neg_bound long, under long",
     )
-    from comperhensive_bigdata_analysis__spark.sources.ingest import _narrow_ints
-
-    out = dict(_narrow_ints(df).dtypes)
+    out = dict(preprocess(df).dtypes)
     assert out["at_bound"] == "int"  # strictly inside (-2**30, 2**30)
     assert out["over"] == "bigint"  # max == 2**30 -> NOT narrowed
+    assert out["at_neg_bound"] == "int"
+    assert out["under"] == "bigint"  # min == -2**30 -> NOT narrowed
+
+
+def test_preprocess_applies_every_rule_in_one_frame(spark):
+    """All-NULL drop, timestamp coercion, date -> timestamp and the
+    int-width rule, each on its own column of one frame."""
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [
+            (None, "2011-12-16", dt.date(2020, 1, 2), 7, INT_WIDTH_BOUND + 5, "x"),
+            (None, "2012-01-01 10:00:00", dt.date(2021, 3, 4), -7, -3, "y"),
+        ],
+        "nulls bigint, ts string, d date, small bigint, big int, s string",
+    )
+    out = preprocess(df)
+    assert out.dtypes == [
+        ("ts", "timestamp"),
+        ("d", "timestamp"),
+        ("small", "int"),
+        ("big", "bigint"),
+        ("s", "string"),
+    ]
+    rows = out.orderBy("small").selectExpr(
+        *[f"CAST({c} AS STRING)" for c in out.columns]
+    ).collect()
+    assert [tuple(r) for r in rows] == [
+        ("2012-01-01 10:00:00", "2021-03-04 00:00:00", "-7", "-3", "y"),
+        ("2011-12-16 00:00:00", "2020-01-02 00:00:00", "7", str(INT_WIDTH_BOUND + 5), "x"),
+    ]
 
 
 def test_preprocess_keeps_non_datetime_strings(spark):
@@ -257,6 +287,42 @@ def _run_counting_jobs(spark, df):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _ingest_counting_jobs(spark, path, parquet_dir):
+    sc = spark.sparkContext
+    group = f"cba-job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        df = ingest_csv(spark, path, parquet_dir=parquet_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_int_width_rule_adds_no_ingest_job(spark, tmp_path):
+    """The int-width rule reads the same profile aggregate as the
+    all-NULL and timestamp rules: ingesting a table with integral
+    columns runs as many Spark jobs as the same table with those
+    columns fractional."""
+    counts = {}
+    for kind, fmt in (("ints", "{}"), ("fracs", "{}.5")):
+        p = tmp_path / f"{kind}.csv"
+        with open(p, "w", newline="") as f:
+            w = csv.writer(f)
+            w.writerow(["code", "n", "big", "when"])
+            for i in range(50):
+                w.writerow([f"c{i}", fmt.format(i), fmt.format(2**31 + i), "2020-01-02"])
+        df, counts[kind] = _ingest_counting_jobs(
+            spark, str(p), str(tmp_path / f"pq_{kind}")
+        )
+        types = dict(df.dtypes)
+        assert types["when"] == "timestamp"
+        if kind == "ints":
+            assert (types["n"], types["big"]) == ("int", "bigint")
+        else:
+            assert (types["n"], types["big"]) == ("double", "double")
+    assert counts["ints"] == counts["fracs"], counts
 
 
 def test_small_ingested_table_runs_a_query_as_one_job(spark, tmp_path):

@@ -1,14 +1,14 @@
 """Property-based tests (hypothesis) for the pure-Python ingest
 semantics — SURVEY §5.2 item 3: sanitization idempotent, output charset
-closed, collapse rule total — plus the timestamp probe's cheap gate,
-which needs the Spark session to evaluate."""
+closed, collapse rule total — plus the column dedup and the timestamp
+probe's cheap gate, which need the Spark session to evaluate."""
 
 from __future__ import annotations
 
 import re
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from comperhensive_bigdata_analysis__spark.sources.ingest import (
@@ -34,27 +34,28 @@ def test_table_name_lowercase_and_stable(stem):
     assert name == table_name_for(f"other/dir/{stem}.csv")
 
 
+@settings(deadline=None)
 @given(
     st.lists(
-        st.sampled_from(["a b", "a-b", "a_b", "A B", "a.b", "a  b"]),
+        st.sampled_from(
+            ["a b", "a-b", "a_b", "A B", "a.b", "a  b", "a_b_1", "a b 1", "A_B_2", "a_b_1_1"]
+        ),
         min_size=1,
         max_size=6,
     )
 )
-def test_sanitize_collisions_are_resolved_deterministically(cols):
-    # sanitize_columns dedup logic mirrored: same inputs -> same outputs
-    from comperhensive_bigdata_analysis__spark.sources.ingest import sanitize_name
+@example(["a_b_1", "a b", "a-b"])
+def test_sanitize_collisions_are_resolved_deterministically(spark, cols):
+    from pyspark.sql import functions as F
 
-    seen: dict[str, int] = {}
-    out = []
-    for c in cols:
-        s = sanitize_name(c)
-        if s in seen:
-            seen[s] += 1
-            s = f"{s}_{seen[s]}"
-        seen.setdefault(s, 0)
-        out.append(s)
-    assert len(set(out)) == len(out)  # no residual collisions
+    from comperhensive_bigdata_analysis__spark.sources.ingest import sanitize_columns
+
+    df = spark.range(1).select(*[F.lit(i).alias(c) for i, c in enumerate(cols)])
+    out = sanitize_columns(df).columns
+    assert out == sanitize_columns(df).columns  # same inputs -> same outputs
+    assert [sanitize_name(c) for c in out] == out
+    # no residual collisions, also under Spark's case-insensitive resolution
+    assert len({c.lower() for c in out}) == len(out)
 
 
 # -- the timestamp probe's cheap gate (needs Spark) -------------------------

@@ -703,3 +703,22 @@ def test_tablesample_non_numeric_rates_raise_with_guidance():
     ):
         with pytest.raises(ValueError):
             translate(q)
+
+
+def test_unterminated_quote_is_rejected():
+    """An unclosed literal or identifier raises instead of masking the
+    rest of the text; the backslash escape is not Presto's, so
+    'it\\'s' leaves a quote open too."""
+    import pytest
+
+    for q in (
+        "SELECT a FROM t WHERE b = 'abc",
+        'SELECT "col FROM t',
+        "SELECT a FROM t WHERE b = 'it\\'s' ORDER BY a",
+        "SELECT 'x''",
+    ):
+        with pytest.raises(ValueError, match="unterminated quote"):
+            translate(q)
+    assert translate("SELECT a FROM t WHERE b = 'it''s'") == (
+        "SELECT a FROM t WHERE b = 'it''s'"
+    )
