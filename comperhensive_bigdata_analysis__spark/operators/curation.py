@@ -8,9 +8,9 @@ the caller can persist and reuse across ingest batches), and
 fixed model — the fit-once / score-increments shape a real pipeline
 runs, where the model from last month's fit scores this week's crawl.
 
-The oracle-checked plan ``plans.training.dsir_importance_weights``
-composes fit+score over one corpus; the incremental contract is pinned
-by tests/test_training_plans.py.
+The oracle-checked plan ``plans.training.dsir_importance_weights`` is
+featurize -> fit -> score over one corpus; the incremental contract is
+pinned by tests/test_training_plans.py.
 
 100 TB: featurize is scan-side (explode + md5 — whole-stage codegen);
 fit is one map-side-combined 64-group aggregate; score joins the
@@ -28,11 +28,9 @@ from pyspark.sql.window import Window
 #: for features hashed at the same width.
 DSIR_BUCKETS = 64
 
-#: Canonical bigram expression over a token-array column named ``t`` —
-#: the fused plan (plans/training.dsir_importance_weights) imports this
-#: so featurization can never drift between the oracle and the
-#: production operators. (sequence(2, size(t)) would DESCEND for
-#: single-token docs, hence the CASE guard.)
+#: Bigram expression over a token-array column named ``t``.
+#: (sequence(2, size(t)) would DESCEND for single-token docs, hence the
+#: CASE guard.)
 BIGRAMS_EXPR = (
     "CASE WHEN size(t) >= 2 THEN "
     "transform(sequence(2, size(t)), "
@@ -42,8 +40,8 @@ BIGRAMS_EXPR = (
 
 
 def dsir_bucket_col(feature_col: str = "f"):
-    """The canonical md5 feature-hash bucket expression (shared with the
-    fused plan for the same no-drift reason as BIGRAMS_EXPR)."""
+    """The md5 feature-hash bucket expression — the oracle's
+    ``CAST('0x' || substr(md5(f), 1, 8) AS BIGINT) % 64``."""
     return (
         F.conv(
             F.substring(F.md5(F.col(feature_col).cast("binary")), 1, 8), 16, 10
@@ -139,35 +137,24 @@ ESS_W = 16
 
 
 def exact_substr_span_table(docs: DataFrame, id_col: str,
-                            text_col: str, w: int = ESS_W,
-                            dup_shape: str = "census") -> DataFrame:
+                            text_col: str, w: int = ESS_W) -> DataFrame:
     """(doc_id, s, e) maximal corpus-duplicated spans — the census the
     plan ``exact_substr_spans`` aggregates; here exposed per-span so the
     scrubber (and any masking/annotation pass) can consume it.
     Positions are 1-based token indices, inclusive.
 
-    ``dup_shape`` picks the corpus-duplicate test's physical shape —
-    both produce identical rows:
-
-    - ``"census"`` (default since r10): lazily persist the shingle
-      frame, then partial-aggregated ``groupBy(dg).count()`` census ->
-      ``df > 1`` filter -> LEFT SEMI join back on dg. The census
-      groupBy map-side-combines (a hot digest sends at most one
-      partial row per map task), the semi join broadcasts or
-      AQE-skew-splits — no stage ever colocates one digest's full
-      mass in one task — and the cache means the tokenize+md5 scan
-      (the dominant stage) runs once even though the legs share no
-      runtime exchange. Measured r10 on the planted-hot-key probe
-      corpus (one boilerplate digest carrying ~47% of shingle mass):
-      faster than the window shape at EVERY point — uniform 1x/8x
-      0.73/1.99s vs 1.04/2.22s, planted-skew 1x/8x 1.33/3.69s vs
-      1.65/4.39s.
-    - ``"window"`` (the r9 shape, kept as the planted-skew probe's
-      measured negative control): ONE window count partitioned by dg
-      with an in-place filter — one scan, no cache, but ALL rows of
-      one digest land in one window task, and AQE skew-splitting does
-      not apply to windows. At 100 TB one hot boilerplate shingle
-      makes that task the job; no cluster size fixes a single task.
+    The corpus-duplicate test lazily persists the shingle frame, then
+    runs a partial-aggregated ``groupBy(dg).count()`` census ->
+    ``df > 1`` filter -> LEFT SEMI join back on dg. The census groupBy
+    map-side-combines (a hot digest sends at most one partial row per
+    map task), the semi join broadcasts or AQE-skew-splits — no stage
+    ever colocates one digest's full mass in one task — and the cache
+    means the tokenize+md5 scan (the dominant stage) runs once even
+    though the legs share no runtime exchange. Measured r10 on the
+    planted-hot-key probe corpus (one boilerplate digest carrying ~47%
+    of shingle mass) against a single window count partitioned by dg:
+    faster at EVERY point — uniform 1x/8x 0.73/1.99s vs 1.04/2.22s,
+    planted-skew 1x/8x 1.33/3.69s vs 1.65/4.39s (SCALE_PROBE.md).
     """
     from ..functions.text import tokens
 
@@ -190,37 +177,25 @@ def exact_substr_span_table(docs: DataFrame, id_col: str,
     sh = tk.select("doc_id", F.explode(windows).alias("x")).select(
         "doc_id", F.col("x.pos").alias("pos"), F.col("x.dg").alias("dg")
     )
-    if dup_shape == "window":
-        # r9 shape — see the docstring; kept callable as the planted-
-        # skew probe's negative control.
-        dup = (
-            sh.withColumn(
-                "f", F.count(F.lit(1)).over(Window.partitionBy("dg"))
-            )
-            .filter(F.col("f") > 1)
-            .select("doc_id", "pos")
-        )
-    else:
-        # LAZY persist (no jobs at construction — the r9 localCheckpoint
-        # lesson): the census leg and the join-back leg prune different
-        # columns, so runtime ReuseExchange never fires (measured r9)
-        # and without the cache the tokenize+md5 scan — the dominant
-        # stage — runs twice. With it, both legs read one materialized
-        # shingle frame; a production ExactSubstr pass materializes
-        # this relation anyway (it is the suffix-table analog).
-        # Lifecycle-registered (cache.py, VERDICT r10 "What's wrong
-        # #1"): the session owner unpersists at phase boundaries via
-        # release_plan_caches().
-        from ..cache import register_plan_cache
+    # LAZY persist (no jobs at construction — the r9 localCheckpoint
+    # lesson): the census leg and the join-back leg prune different
+    # columns, so runtime ReuseExchange never fires (measured r9) and
+    # without the cache the tokenize+md5 scan — the dominant stage —
+    # runs twice. With it, both legs read one materialized shingle
+    # frame; a production ExactSubstr pass materializes this relation
+    # anyway (it is the suffix-table analog). Lifecycle-registered
+    # (cache.py, VERDICT r10 "What's wrong #1"): the session owner
+    # unpersists at phase boundaries via release_plan_caches().
+    from ..cache import register_plan_cache
 
-        sh = register_plan_cache(sh)
-        dup_dg = (
-            sh.groupBy("dg")
-            .agg(F.count(F.lit(1)).alias("f"))
-            .filter(F.col("f") > 1)
-            .select("dg")
-        )
-        dup = sh.join(dup_dg, "dg", "left_semi").select("doc_id", "pos")
+    sh = register_plan_cache(sh)
+    dup_dg = (
+        sh.groupBy("dg")
+        .agg(F.count(F.lit(1)).alias("f"))
+        .filter(F.col("f") > 1)
+        .select("dg")
+    )
+    dup = sh.join(dup_dg, "dg", "left_semi").select("doc_id", "pos")
     w_doc = Window.partitionBy("doc_id").orderBy("pos")
     prev_max = F.max("pos").over(
         w_doc.rowsBetween(Window.unboundedPreceding, -1)

@@ -45,7 +45,7 @@ MINHASH_BANDS = 4
 #: in the one signature groupBy (still a single shuffle whose rows are
 #: 8x wider) and b band rows per doc in the bucket join (4x the join
 #: input). est_jaccard precision also tightens (sd = sqrt(j(1-j)/K),
-#: ~0.18 -> 0.06 at j=0.5). Bench: q15_minhash_k64 (xxhash64 tier).
+#: ~0.18 -> 0.06 at j=0.5).
 MINHASH_K_PROD = 64
 MINHASH_BANDS_PROD = 16
 
@@ -176,34 +176,17 @@ def char_jaccard_pairs(
     )
 
 
-def _salted_hash(seed: int, hash_fn: str = "md5"):
-    """Two hash tiers: 'md5' (60-bit BIGINT from the md5 hex prefix —
-    portable, DuckDB oracles replay it exactly via CAST('0x'||substr))
-    and 'xxhash64' (native 64-bit long — ~2x faster hashing). BOTH tiers
-    min over fixed-width longs, so the signature aggregate stays a
-    HashAggregate; a hex-string min here would demote the grouped agg to
-    SortAggregate and sort every exploded shingle row per partition."""
-    if hash_fn == "md5":
-        return lambda col: F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"mh{seed}:"), col).cast("binary")), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-    return lambda col: F.xxhash64(F.lit(f"mh{seed}:"), col)
-
-
-def _salted_hash_sql(seed: int, hash_fn: str, col: str = "s") -> str:
-    """SQL spelling of _salted_hash — expression-identical (same
-    functions, same literals), used by the one-statement builders
-    below. Keep the two spellings in sync."""
-    if hash_fn == "md5":
-        return (
-            f"CAST(conv(substring(md5(CAST(concat('mh{seed}:', {col}) "
-            f"AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
-        )
-    return f"xxhash64('mh{seed}:', {col})"
+def _salted_hash_sql(seed: int, col: str = "s") -> str:
+    """Salted shingle hash: a 60-bit BIGINT from the md5 hex prefix —
+    portable, DuckDB oracles replay it exactly via CAST('0x'||substr).
+    It mins over fixed-width longs, so the signature aggregate stays a
+    HashAggregate; a hex-string min here would demote the grouped agg
+    to SortAggregate and sort every exploded shingle row per
+    partition."""
+    return (
+        f"CAST(conv(substring(md5(CAST(concat('mh{seed}:', {col}) "
+        f"AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
+    )
 
 
 def minhash_signatures(
@@ -212,7 +195,6 @@ def minhash_signatures(
     text_col: str,
     n: int = 3,
     k: int = MINHASH_K,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """(doc, mh_0..mh_{k-1}): per-document MinHash signature — the min of
     each salted hash over the document's shingle set. One explode + one
@@ -227,7 +209,7 @@ def minhash_signatures(
     the same expressions), so values are bit-identical."""
     sh = _shingle_rows(df, id_col, text_col, n)
     mins = ", ".join(
-        f"min({_salted_hash_sql(i, hash_fn)}) AS mh_{i}" for i in range(k)
+        f"min({_salted_hash_sql(i)}) AS mh_{i}" for i in range(k)
     )
     return df.sparkSession.sql(
         f"SELECT doc, {mins} FROM {{sh}} GROUP BY doc", sh=sh
@@ -242,7 +224,6 @@ def minhash_lsh_pairs(
     k: int = MINHASH_K,
     bands: int = MINHASH_BANDS,
     min_est: float = 0.25,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """LSH candidate pairs + estimated jaccard.
 
@@ -250,8 +231,6 @@ def minhash_lsh_pairs(
     sharing any band bucket become candidates (equality join on the
     band-bucket digest — uniform shuffle keys). Estimated jaccard =
     fraction of matching signature components.
-    ``hash_fn``: 'md5' = oracle-replayable tier; 'xxhash64' = production
-    tier (~2x faster; see _salted_hash).
     The signature relation is persisted: it feeds three consumers
     (banding + both sides of the rescore join), and recomputing it
     triples the shingle-explode cost (measured ~3x wall on the K=64
@@ -284,15 +263,13 @@ def minhash_lsh_pairs(
     # against the previous spelling and the oracle at sf0.001-0.1).
     def band_bucket_sql(b: int) -> str:
         band = f"slice(sig, {b * r + 1}, {r})"
-        if hash_fn == "md5":
-            return (
-                f"md5(CAST(array_join(transform({band}, "
-                f"v -> CAST(v AS STRING)), '|') AS BINARY))"
-            )
-        return f"xxhash64({band})"
+        return (
+            f"md5(CAST(array_join(transform({band}, "
+            f"v -> CAST(v AS STRING)), '|') AS BINARY))"
+        )
 
     sh = _shingle_rows(df, id_col, text_col, n)
-    mins = ", ".join(f"min({_salted_hash_sql(i, hash_fn)})" for i in range(k))
+    mins = ", ".join(f"min({_salted_hash_sql(i)})" for i in range(k))
     sig = spark.sql(
         f"SELECT doc, array({mins}) AS sig FROM {{sh}} GROUP BY doc", sh=sh
     ).persist()

@@ -956,8 +956,8 @@ def _winnow_fingerprints(spark, sf_dir):
     fully declarative (no checkpoint: an eager materialization here ran
     Spark jobs at plan-CONSTRUCTION time and hid the parquet scan
     behind a LogicalRDD leaf, blinding the scan-reuse audit — r9 review
-    finding). The capped consumer executes this scan exactly once by
-    plan shape (window count, see ``_winnow_pair_counts``); the
+    finding). The capped consumer executes this scan exactly once
+    through its persisted frame (see ``_winnow_pair_counts``); the
     uncapped self-join control recomputes it per side, which is part of
     what that negative control measures."""
     d = load_table(spark, sf_dir, "documents")
@@ -993,76 +993,60 @@ _PAIR_EXPLODE = (
 )
 
 
-def _winnow_pair_counts(spark, sf_dir, max_df: int | None,
-                        cap_shape: str = "census"):
+def _winnow_pair_counts(spark, sf_dir, max_df: int | None):
     """(id_a, id_b, n_shared) for every doc pair sharing >= 3 surviving
     fingerprints, NOT limited — the census head and the recall eval
-    both build on this. Three physical shapes on purpose:
+    both build on this. Two physical shapes on purpose:
 
-    - capped ``cap_shape="census"`` (default since r10): lazily
-      persist the fingerprint frame, partial-aggregated
-      ``groupBy(f).count()`` census -> BROADCAST ANTI join of the
-      tiny over-cap blacklist (the cap costs the main leg no shuffle)
-      -> groupBy f collect_list (buffers BOUNDED at cap elements
-      because over-cap fingerprints never reach the collect) ->
-      explode bounded pair structs -> one pair aggregate. The census
+    - capped (default): lazily persist the fingerprint frame,
+      partial-aggregated ``groupBy(f).count()`` census -> BROADCAST
+      ANTI join of the tiny over-cap blacklist (the cap costs the main
+      leg no shuffle) -> groupBy f collect_list (buffers BOUNDED at cap
+      elements because over-cap fingerprints never reach the collect)
+      -> explode bounded pair structs -> one pair aggregate. The census
       map-side-combines (a boilerplate fingerprint sends one partial
-      row per map task, not its full doc list) and after the anti
-      join EVERY surviving key has <= cap rows, so the collect_list
-      shuffle is uniform by construction — no stage colocates one
+      row per map task, not its full doc list) and after the anti join
+      EVERY surviving key has <= cap rows, so the collect_list shuffle
+      is uniform by construction — no stage colocates one
       fingerprint's whole mass in one task. The cache means the
       char-gram+md5 fingerprint scan (the dominant cost) runs once.
-      Measured r10: faster than the window shape at every point —
-      uniform 1x/8x 1.06/3.89s vs 1.20/4.95s, planted-skew 1x/8x
-      2.78/18.85s vs 3.34/19.54s.
-    - capped ``cap_shape="window"`` (the r9 shape, kept as the
-      planted-skew probe's measured negative control): ONE window
-      count partitioned by f with an in-place df filter — one scan,
-      one shuffle, but a fingerprint present in N docs puts all N of
-      its rows in ONE window task (array_distinct bounds it at one
-      row per doc, so that task grows with CORPUS SIZE — the 100 TB
-      tail), and AQE skew-splitting does not apply to windows.
-    - uncapped (max_df=None): the r8 self-join shape, kept ONLY as the
-      scale probe's measured negative control (22.78x at 8x when last
-      uncapped) — group-list explode without the cap would materialize
-      unbounded arrays in a single task, which is strictly worse than
-      the join's streamed pair blowup.
+      Measured r10 against a single window count partitioned by f:
+      faster at every point — uniform 1x/8x 1.06/3.89s vs 1.20/4.95s,
+      planted-skew 1x/8x 2.78/18.85s vs 3.34/19.54s (SCALE_PROBE.md).
+    - uncapped (max_df=None): the r8 self-join shape, the reference
+      census of ``winnowing_cap_recall`` and the scale probe's
+      measured negative control (22.78x at 8x when last uncapped) —
+      group-list explode without the cap would materialize unbounded
+      arrays in a single task, which is strictly worse than the join's
+      streamed pair blowup.
     """
     fp = _winnow_fingerprints(spark, sf_dir)
     if max_df is not None:
-        if cap_shape == "window":
-            from pyspark.sql.window import Window
+        # LAZY persist (no jobs at construction — the r9
+        # localCheckpoint lesson): the char-level k-gram+md5
+        # fingerprint scan is the dominant cost and the census leg
+        # never shares an exchange with the join leg at runtime; the
+        # cache makes both legs read one materialized frame. Then ANTI
+        # join against the OVER-cap blacklist, not a semi join against
+        # its complement: the blacklist (boilerplate fingerprints,
+        # df > cap) is census-sized — at most |fp rows| / cap distinct
+        # values and in practice tiny — so AQE broadcasts it and the
+        # cap costs the main leg no shuffle at all; the under-cap set
+        # is nearly the whole vocabulary and would force a full-mass
+        # shuffle join (measured: semi-on-complement 38.3s vs anti
+        # 35.6s vs anti+persist 18.9s on the planted-skew 8x corpus).
+        # Lifecycle-registered (cache.py): released by the session
+        # owner at phase boundaries via release_plan_caches().
+        from ..cache import register_plan_cache
 
-            kept = fp.withColumn(
-                "df", F.count(F.lit(1)).over(Window.partitionBy("f"))
-            ).filter(F.col("df") <= max_df)
-        else:
-            # LAZY persist (no jobs at construction — the r9
-            # localCheckpoint lesson): the char-level k-gram+md5
-            # fingerprint scan is the dominant cost and the census leg
-            # never shares an exchange with the join leg at runtime;
-            # the cache makes both legs read one materialized frame.
-            # Then ANTI join against the OVER-cap blacklist, not a
-            # semi join against its complement: the blacklist
-            # (boilerplate fingerprints, df > cap) is census-sized —
-            # at most |fp rows| / cap distinct values and in practice
-            # tiny — so AQE broadcasts it and the cap costs the main
-            # leg no shuffle at all; the under-cap set is nearly the
-            # whole vocabulary and would force a full-mass shuffle
-            # join (measured: semi-on-complement 38.3s vs anti 35.6s
-            # vs anti+persist 18.9s on the planted-skew 8x corpus).
-            # Lifecycle-registered (cache.py): released by the session
-            # owner at phase boundaries via release_plan_caches().
-            from ..cache import register_plan_cache
-
-            fp = register_plan_cache(fp)
-            blacklist = (
-                fp.groupBy("f")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") > max_df)
-                .select("f")
-            )
-            kept = fp.join(blacklist, "f", "left_anti")
+        fp = register_plan_cache(fp)
+        blacklist = (
+            fp.groupBy("f")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") > max_df)
+            .select("f")
+        )
+        kept = fp.join(blacklist, "f", "left_anti")
         pairs = (
             kept.groupBy("f")
             .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
@@ -1085,17 +1069,15 @@ def _winnow_pair_counts(spark, sf_dir, max_df: int | None,
     )
 
 
-def winnowing_pairs_at(spark, sf_dir, max_df: int | None,
-                       cap_shape: str = "census"):
+def winnowing_pairs_at(spark, sf_dir, max_df: int | None):
     """The top-20 winnowing pair census at an explicit df cap.
     ``max_df=None`` disables the cap — kept callable as the scale
     probe's measured NEGATIVE CONTROL (the uncapped shape was 27.6x at
     8x growth; the probe re-measures it every round so the cap's value
     stays an empirical row, not a one-time claim — same pattern as the
-    LSH fixed-band control). ``cap_shape="window"`` exposes the r9
-    window-count shape for the probe's planted-skew control row."""
+    LSH fixed-band control)."""
     return (
-        _winnow_pair_counts(spark, sf_dir, max_df, cap_shape=cap_shape)
+        _winnow_pair_counts(spark, sf_dir, max_df)
         .orderBy(F.desc("n_shared"), "id_a", "id_b")
         .limit(20)
     )

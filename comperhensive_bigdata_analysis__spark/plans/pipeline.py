@@ -53,9 +53,10 @@ def run_phase(spark, sf_dir, plan_names, consume=None):
     ``results`` keyed by plan name. Within the phase, repeated
     executions of one plan still hit the warm cache entries; the
     release happens once, after ALL the phase's actions, so it is never
-    inside anyone's timed region. bench.py deliberately does NOT route
-    through this runner — its warm-median protocol requires caches to
-    survive across repeated runs of the same plan (cache.py docstring).
+    inside anyone's timed region. perfbench's curation workload does
+    NOT route through this runner: it releases once per round
+    (cache.release_plan_caches), so repeated runs of one plan within a
+    round keep their caches (cache.py docstring).
     """
     from ..cache import release_plan_caches
     from . import QUERIES

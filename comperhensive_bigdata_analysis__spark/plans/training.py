@@ -1968,14 +1968,11 @@ def tokenizer_vocab_coverage(spark, sf_dir):
 # (damped-transcendental rule, DETERMINISM.md §4); per-doc
 # contributions are DECIMAL(28,12)-truncated before the
 # order-insensitive sum and the total floor-rounds to 1e-6.
-# 100 TB: ONE tokenize/hash pass — the (doc, lang, bucket) partial
-# feeds both the scoring leg and the 64-bucket model via
-# ReuseExchange; totals are a window over the 64-row model; only the
-# 64-row ratio table broadcasts. Linear, no all-pairs anywhere.
+# 100 TB: the 64-bucket model is one map-side-combined aggregate and
+# only the 64-row model broadcasts. Linear, no all-pairs anywhere.
 # ---------------------------------------------------------------------------
 
-# Shared with operators/curation.py — one definition of the feature
-# hash so the oracle plan and the production fit/score can never drift.
+# The oracle hashes into the operators' bucket width.
 from ..operators.curation import DSIR_BUCKETS as _DSIR_BUCKETS  # noqa: E402
 
 _DSIR_ORACLE = rf"""
@@ -2033,92 +2030,29 @@ def dsir_importance_weights(spark, sf_dir):
     curation family (SURVEY §7.6) alongside source_temperature_weights
     and weighted_sample_docs.
 
-    100 TB: ONE scan+tokenize+hash pass — the (doc, lang, bucket)
-    map-side-combined partial is the only full-size exchange, reused
-    (ReuseExchange) by both the scoring leg and the 64-bucket model;
-    totals are an unpartitioned window over the 64-row model; the
-    64-row ratio table broadcasts back onto the doc partials — no
-    global sort, no all-pairs, linear in corpus size.
+    Built from the production operators (operators/curation.py): the
+    lang='en' slice is the target, ``dsir_fit`` learns the 64-bucket
+    model over the whole corpus and ``dsir_score`` weights every doc
+    against it — the same calls a fit-once / score-increments pipeline
+    makes, here over one corpus.
 
-    Production twins: operators/curation.py splits this flow into
-    dsir_featurize / dsir_fit / dsir_score for the fit-once /
-    score-increments pipeline (persist the 64-row model, score each
-    new crawl batch). This plan keeps its FUSED shape — the modular
-    composition aggregates the feature relation separately per phase,
-    while here one (doc, lang, bucket) partial feeds both legs via
-    ReuseExchange. tests/test_training_plans.py pins the two paths
-    equal row-for-row.
+    100 TB: linear, no all-pairs — the model is a map-side-combined
+    64-group aggregate and only the 64-row model broadcasts back onto
+    the (doc, bucket) partials.
     """
-    from ..functions.text import tokens
-    from ..operators.curation import BIGRAMS_EXPR, dsir_bucket_col
+    from ..operators.curation import dsir_featurize, dsir_fit, dsir_score
     from ..sources.tables import fan_out
 
     # fan_out: tokenize + bigram concat + per-feature md5 is the
-    # heaviest single-scan stage in the bench set, and a one-row-group
-    # input runs it as ONE task (guide §2.5). No-op on split-capable
-    # layouts; the shared tf3 subtree keeps its ReuseExchange dedup
-    # (the fan-out exchange sits below it, identically in both legs).
-    # Measured 1.36x interleaved at sf0.1.
-    d = fan_out(load_table(spark, sf_dir, "documents"))
-    docs = d.filter(F.length(F.trim("text")) > 0).select(
-        "doc_id", "lang", tokens(F.col("text")).alias("t")
+    # heaviest single-scan stage in the curation set, and a
+    # one-row-group input runs it as ONE task (guide §2.5). No-op on
+    # split-capable layouts.
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    hashed = dsir_featurize(
+        docs.withColumn("is_en", F.col("lang") == "en"),
+        "doc_id", "text", "is_en",
     )
-    feats = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(F.concat(F.col("t"), F.expr(BIGRAMS_EXPR))).alias("f"),
-    )
-    # The explicit isnotnull(bucket) matches the constraint the scoring
-    # join infers on its leg — without it the two tf3 copies differ by
-    # that one inferred Filter and ReuseExchange cannot dedup them.
-    hashed = feats.select(
-        "doc_id", "lang", dsir_bucket_col("f").alias("bucket")
-    ).filter(F.col("bucket").isNotNull())
-    # ONE tokenize/hash pass: the (doc, lang, bucket) partial feeds BOTH
-    # the per-doc scoring leg and the 64-bucket model (lang is
-    # functionally dependent on doc_id, so carrying it adds no groups);
-    # Spark's ReuseExchange then executes the scan+explode+combine
-    # once. The model totals come from an unpartitioned window over the
-    # 64-row model — a third scan-free aggregate, not a third pass.
-    tf3 = hashed.groupBy("doc_id", "lang", "bucket").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    doc_tf = tf3.select("doc_id", "bucket", "tf")
-    model = tf3.groupBy("bucket").agg(
-        F.sum(
-            F.when(F.col("lang") == "en", F.col("tf")).otherwise(F.lit(0))
-        ).alias("p_cnt"),
-        F.sum("tf").alias("q_cnt"),
-    )
-    from pyspark.sql.window import Window as _W
-
-    w_all = _W.partitionBy()
-    b = F.lit(_DSIR_BUCKETS)
-    ratio = model.select(
-        "bucket",
-        F.log(
-            (
-                (F.col("p_cnt") + F.lit(1.0))
-                / (F.sum("p_cnt").over(w_all) + b)
-            )
-            / (
-                (F.col("q_cnt") + F.lit(1.0))
-                / (F.sum("q_cnt").over(w_all) + b)
-            )
-        ).alias("logr"),
-    )
-    contrib = (F.col("tf") * F.col("logr")).cast("decimal(28,12)")
-    return (
-        doc_tf.join(F.broadcast(ratio), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_feats"),
-            (F.floor(F.sum(contrib).cast("double") * 1e6) / 1e6).alias(
-                "dsir_logw"
-            ),
-        )
-        .orderBy("doc_id")
-    )
+    return dsir_score(hashed, dsir_fit(hashed)).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------

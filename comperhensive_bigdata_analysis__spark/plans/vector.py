@@ -5,8 +5,8 @@ fold order differs from DuckDB's list internals. The oracle-checked
 plans therefore compute dot products the EXACT way — posexplode the
 vectors, multiply per position in double (IEEE-deterministic per row),
 cast each product to DECIMAL(28,12) and sum (order-insensitive). The
-fast fold-based operators (operators/similarity.py) are what bench.py
-exercises; tests assert the two tiers agree to 1e-9.
+fast fold-based operators (operators/similarity.py) are the production
+tiers; tests assert the two tiers agree to 1e-9.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Key-disjoint corpus inflation — the shared machinery behind
-tools/scale_probe.py and bench.py's large-scale tier.
+tools/scale_probe.py and perfbench's curation_corpus set-up.
 
 Inflating by N preserves each table's distribution shape while keeping
 copies disjoint in key space, so join/agg fan-out grows like real data

@@ -1,12 +1,11 @@
-"""MinHash hash-fn tiers: the xxhash64 production tier must honor the
-same LSH contract as the md5 oracle tier — docs with identical shingle
-sets surface as est_jaccard 1.0 pairs under BOTH tiers, and disjoint
-docs under neither."""
+"""MinHash LSH contract at the oracle (K=8) and production (K=64)
+signature sizes — docs with identical shingle sets surface as
+est_jaccard 1.0 pairs, and disjoint docs never pair — plus the
+curation dedup operators' planted-fixture contracts."""
 
 from __future__ import annotations
 
 from comperhensive_bigdata_analysis__spark.operators.dedup import minhash_lsh_pairs
-from comperhensive_bigdata_analysis__spark.sources.tables import load_table
 
 
 def _pairs(df):
@@ -27,23 +26,15 @@ def _fixture(spark):
 
 
 def test_tiers_agree_on_known_dups(spark):
+    """K=8 oracle tier on the known-dup fixture; test_k64_production_tier
+    holds the K=64 tier to the same contract."""
     d = _fixture(spark)
-    md5 = _pairs(minhash_lsh_pairs(d, "doc_id", "text", min_est=0.0, hash_fn="md5"))
-    xx = _pairs(minhash_lsh_pairs(d, "doc_id", "text", min_est=0.0, hash_fn="xxhash64"))
-    for tier in (md5, xx):
-        assert tier[(1, 2)] == 1.0
-        assert tier[(4, 5)] == 1.0
-        assert (1, 4) not in tier and (1, 5) not in tier  # disjoint content
-        assert all(a < b for a, b in tier)
-        assert all(0.0 <= v <= 1.0 for v in tier.values())
-
-
-def test_xxhash_tier_on_corpus(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    fast = _pairs(minhash_lsh_pairs(d, "doc_id", "text", hash_fn="xxhash64"))
-    assert fast, "tier found no candidate pairs"
-    assert all(a < b for a, b in fast)
-    assert all(0.0 <= v <= 1.0 for v in fast.values())
+    got = _pairs(minhash_lsh_pairs(d, "doc_id", "text", min_est=0.0))
+    assert got[(1, 2)] == 1.0
+    assert got[(4, 5)] == 1.0
+    assert (1, 4) not in got and (1, 5) not in got  # disjoint content
+    assert all(a < b for a, b in got)
+    assert all(0.0 <= v <= 1.0 for v in got.values())
 
 
 def test_k64_production_tier(spark):
@@ -57,26 +48,24 @@ def test_k64_production_tier(spark):
     )
 
     d = _fixture(spark)
-    for fn in ("md5", "xxhash64"):
-        got = _pairs(
-            minhash_lsh_pairs(
-                d,
-                "doc_id",
-                "text",
-                k=MINHASH_K_PROD,
-                bands=MINHASH_BANDS_PROD,
-                min_est=0.0,
-                hash_fn=fn,
-            )
+    got = _pairs(
+        minhash_lsh_pairs(
+            d,
+            "doc_id",
+            "text",
+            k=MINHASH_K_PROD,
+            bands=MINHASH_BANDS_PROD,
+            min_est=0.0,
         )
-        assert got[(1, 2)] == 1.0
-        assert got[(4, 5)] == 1.0
-        assert (1, 4) not in got and (1, 5) not in got
-        # near-dup (1,3): true jaccard ~ 12/(12+4)=0.75; K=64 estimate
-        # must land within 4 sd (~0.22) of it
-        assert abs(got[(1, 3)] - 0.75) < 0.25
-        # est granularity is 1/64 steps
-        assert all(round(v * MINHASH_K_PROD, 6) == round(v * MINHASH_K_PROD) for v in got.values())
+    )
+    assert got[(1, 2)] == 1.0
+    assert got[(4, 5)] == 1.0
+    assert (1, 4) not in got and (1, 5) not in got
+    # near-dup (1,3): true jaccard ~ 12/(12+4)=0.75; K=64 estimate
+    # must land within 4 sd (~0.22) of it
+    assert abs(got[(1, 3)] - 0.75) < 0.25
+    # est granularity is 1/64 steps
+    assert all(round(v * MINHASH_K_PROD, 6) == round(v * MINHASH_K_PROD) for v in got.values())
 
 
 def test_semantic_greedy_bounded_by_census(spark, sf_dir):

@@ -459,7 +459,6 @@ _BROADCAST_ALLOWLIST = {
     ("plans/training.py", "bm25_top_docs"),
     ("plans/training.py", "ccnet_bucket_by_thresholds"),
     ("plans/training.py", "dense_month_status_grid"),
-    ("plans/training.py", "dsir_importance_weights"),
     ("plans/training.py", "sigma_clip_outliers"),
     ("plans/training.py", "source_temperature_weights"),
     ("plans/training.py", "tfidf_top_terms"),

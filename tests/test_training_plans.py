@@ -225,6 +225,36 @@ def test_dsir_operators_fit_once_score_increments(spark, sf_dir):
     assert all(r["dsir_logw"] is not None for r in scored)
 
 
+def test_dsir_plan_is_the_operator_composition(spark, sf_dir):
+    """DSIR has one implementation: the oracle-checked plan optimizes to
+    the same plan as dsir_featurize -> dsir_fit -> dsir_score over the
+    fanned-out corpus (expression ids aside)."""
+    import re
+
+    from comperhensive_bigdata_analysis__spark.operators.curation import (
+        dsir_featurize,
+        dsir_fit,
+        dsir_score,
+    )
+    from comperhensive_bigdata_analysis__spark.sources.tables import (
+        fan_out,
+        load_table,
+    )
+
+    def optimized(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+", "#", plan)
+
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    hashed = dsir_featurize(
+        docs.withColumn("is_en", F.col("lang") == "en"),
+        "doc_id", "text", "is_en",
+    )
+    composed = dsir_score(hashed, dsir_fit(hashed)).orderBy("doc_id")
+    got = plans.QUERIES["dsir_importance_weights"](spark, sf_dir)
+    assert optimized(got) == optimized(composed)
+
+
 def test_dsir_dense_model_scores_unseen_buckets(spark):
     """Review fix: the model must be DENSE (all 64 buckets, smoothed
     default for unseen ones) so scoring a later batch never silently

@@ -250,11 +250,10 @@ PICKS = {
         "broadcast audit)."
     ),
     "dsir_importance_weights": (
-        "DSIR data selection in ONE tokenize/hash pass: the (doc, lang, "
-        "bucket) partial feeds both the scoring leg and the 64-bucket "
-        "model — AQE ReuseExchange dedups the two copies at runtime "
-        "(static plan shows both; executed plan scans once); totals are "
-        "a window over the 64-row model; only the 64-row ratio table "
+        "DSIR data selection as operators/curation.py's featurize -> "
+        "fit -> score over the corpus (target = lang 'en'): the model "
+        "is one map-side-combined 64-group aggregate, scoring joins "
+        "it back onto (doc, bucket) partials; only the 64-row model "
         "broadcasts."
     ),
     "exact_substr_spans": (

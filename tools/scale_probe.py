@@ -4,7 +4,7 @@ key-disjoint inflation of their input tables, then compare wall-clock
 growth against the linear-ish growth the SCALE_AUDIT ledger claims
 structurally. Writes SCALE_PROBE.md.
 
-Inflation machinery is shared with bench.py's large-scale tier:
+Inflation machinery is shared with perfbench's curation_corpus set-up:
 comperhensive_bigdata_analysis__spark/sources/inflate.py (key-disjoint
 per-copy transforms; both corpora written by the same Spark writer at
 the same file count so the ratio isolates data VOLUME).
@@ -54,8 +54,7 @@ PROBES = {
 
 
 def _minhash_k64(spark, sf_dir):
-    """The K=64/16-band production dedup tier (VERDICT r2 ask #5) —
-    same callable shape as bench.py's q15 headliner."""
+    """The K=64/16-band production dedup tier (VERDICT r2 ask #5)."""
     from comperhensive_bigdata_analysis__spark.operators.dedup import (
         MINHASH_BANDS_PROD,
         MINHASH_K_PROD,
@@ -66,7 +65,7 @@ def _minhash_k64(spark, sf_dir):
     return minhash_lsh_pairs(
         d, "doc_id", "text", n=3,
         k=MINHASH_K_PROD, bands=MINHASH_BANDS_PROD,
-        min_est=0.25, hash_fn="xxhash64",
+        min_est=0.25,
     )
 
 
@@ -168,8 +167,8 @@ def _time(fn, spark, sf_dir) -> float:
 
 
 def _ensure_corpus(spark, base: str, out: str, copies: int) -> None:
-    """Marker-keyed reuse (same contract as bench.py's _scale_dir):
-    re-running the probe must not rebuild identical corpora."""
+    """Marker-keyed reuse: re-running the probe must not rebuild
+    identical corpora."""
     marker = os.path.join(out, "_MARKER")
     want = f"{base}|{copies}"
     if os.path.exists(marker) and open(marker).read() == want:
@@ -336,31 +335,26 @@ def main() -> None:
     # 8x. Scored rows run the PRODUCTION census shape (persist +
     # partial-agg census + broadcast semi/anti join — no stage
     # colocates one key's mass); the bracketed [window-shape] rows are
-    # the r9 window-count shape kept as the skew negative control (all
-    # rows of one key in one window task; AQE cannot split a window).
+    # probe-local window-count controls (all rows of one key in one
+    # window task; AQE cannot split a window).
     from comperhensive_bigdata_analysis__spark.operators.curation import (
         exact_substr_span_table,
     )
     from pyspark.sql import functions as F
 
-    def _ess_at(shape):
-        def q(s, d):
-            docs = load_table(s, d, "documents")
-            spans = exact_substr_span_table(
-                docs, "doc_id", "text", dup_shape=shape
+    def _ess(s, d):
+        docs = load_table(s, d, "documents")
+        spans = exact_substr_span_table(docs, "doc_id", "text")
+        return (
+            spans.groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).cast("bigint").alias("n_dup_spans"),
+                F.sum(F.col("e") - F.col("s") + 1)
+                .cast("bigint")
+                .alias("dup_token_mass"),
             )
-            return (
-                spans.groupBy("doc_id")
-                .agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_dup_spans"),
-                    F.sum(F.col("e") - F.col("s") + 1)
-                    .cast("bigint")
-                    .alias("dup_token_mass"),
-                )
-                .orderBy("doc_id")
-            )
-
-        return q
+            .orderBy("doc_id")
+        )
 
     # ccnet bare-window negative control (VERDICT r10 ask #4): the
     # exact shape the production plan replaced — NTILE(3) OVER
@@ -439,25 +433,15 @@ def main() -> None:
         return q
 
     skew_probes = [
-        ("exact_substr_spans[planted-skew]", _ess_at("census"), False,
+        ("exact_substr_spans[planted-skew]", _ess, False,
          SKEW_1X, SKEW_NX),
-        ("exact_substr_spans[window-shape planted-skew]",
-         _ess_at("window"), True, SKEW_1X, SKEW_NX),
         ("winnowing_pairs[planted-skew]",
          lambda s, d: winnowing_pairs_at(s, d, max_df=WINNOW_MAX_DF), False,
          SKEW_1X, SKEW_NX),
-        ("winnowing_pairs[window-shape planted-skew]",
-         lambda s, d: winnowing_pairs_at(s, d, max_df=WINNOW_MAX_DF,
-                                         cap_shape="window"), True,
-         SKEW_1X, SKEW_NX),
-        # ask #2: the doc-count axis — same pair of shapes, corpus
-        # where the hot fingerprint's rows scale with DOC COUNT
+        # ask #2: the doc-count axis — corpus where the hot
+        # fingerprint's rows scale with DOC COUNT
         ("winnowing_pairs[doc-skew]",
          lambda s, d: winnowing_pairs_at(s, d, max_df=WINNOW_MAX_DF), False,
-         DOCSKEW_1X, DOCSKEW_NX),
-        ("winnowing_pairs[window-shape doc-skew]",
-         lambda s, d: winnowing_pairs_at(s, d, max_df=WINNOW_MAX_DF,
-                                         cap_shape="window"), True,
          DOCSKEW_1X, DOCSKEW_NX),
         # ask #4: the deepest r10 distributed_scan conversion vs the
         # bare ntile window it replaced, on the planted hot-lang bed
@@ -635,26 +619,20 @@ def main() -> None:
                         f"| {ts[3]}ms | {ts[2]} |\n"
                     )
             f.write(
-                "\nReading: the exact-substr [window-shape] control is\n"
-                "where the planted hot digest shows — its dg-window\n"
-                "stage's max task runs a MULTIPLE of the stage p50 (the\n"
-                "~47%-mass digest sorted and counted in ONE task; the\n"
-                "multiple grows with corpus scale), while the census\n"
-                "shape's significant stages stay near 1 (partial\n"
-                "aggregation + broadcast semi join never colocate the\n"
-                "key). The winnowing TOKEN-MASS rows read near-balanced\n"
-                "in BOTH shapes: array_distinct bounds the hot\n"
-                "fingerprint at one row per doc and the char-gram md5\n"
-                "scan dominates that corpus — the window shape's\n"
-                "exposure there grows with DOC COUNT, which is what the\n"
-                "[doc-skew] rows measure (VERDICT r10 ask #2): 256x the\n"
-                "docs at ~8-20 chars each, ONE hot fingerprint in half\n"
-                "of them. In the FULL plan the pair explode fuses into\n"
-                "the same stage as the df window and dilutes the\n"
-                "signal, so the winnow_df_filter pair isolates the\n"
-                "stage whose shape actually differs (same fingerprint\n"
-                "relation, cheap doc_id downstream): the [window-shape]\n"
-                "control's hot count-task reads records 9.3x / runtime\n"
+                "\nReading: the census shapes' significant stages stay\n"
+                "near 1 on the planted corpus (partial aggregation +\n"
+                "broadcast semi/anti join never colocate the key). The\n"
+                "winnowing TOKEN-MASS rows read near-balanced:\n"
+                "array_distinct bounds the hot fingerprint at one row\n"
+                "per doc and the char-gram md5 scan dominates that\n"
+                "corpus — a window count's exposure there grows with DOC\n"
+                "COUNT, which is what the [doc-skew] rows measure\n"
+                "(VERDICT r10 ask #2): 256x the docs at ~8-20 chars\n"
+                "each, ONE hot fingerprint in half of them. The\n"
+                "winnow_df_filter pair isolates the df-cap stage (same\n"
+                "fingerprint relation, cheap doc_id downstream): the\n"
+                "probe-local [window-shape] control's hot count-task\n"
+                "reads records 9.3x / runtime\n"
                 "4.7x (713ms p50 -> 3355ms hot) while the census shape\n"
                 "reads 1.0 — the doc-count exposure, now a number. The\n"
                 "ccnet [lang-skew] pair (ask #4) makes the same\n"
@@ -759,20 +737,19 @@ def main() -> None:
             "  edge list (also linear at capped occupancy).\n"
             "- dsir_importance_weights is the heaviest token-fanout plan\n"
             "  (~2 hashed features per token: unigrams + bigrams), but\n"
-            "  the whole plan is ONE tokenize/hash pass: the (doc,\n"
-            "  lang, bucket) map-side-combined partial feeds both the\n"
-            "  scoring leg and the 64-bucket model via AQE\n"
-            "  ReuseExchange, totals are a window over the 64-row\n"
-            "  model, and only the 64-row ratio table broadcasts — the\n"
-            "  ratio pins the fanout constant, not a growth term.\n"
+            "  featurize -> fit -> score is linear: the model is one\n"
+            "  map-side-combined 64-group aggregate, scoring another\n"
+            "  over (doc, bucket) partials, and only the 64-row model\n"
+            "  broadcasts — the ratio pins the fanout constant, not a\n"
+            "  growth term.\n"
             "- exact_substr_spans emits ~1 digest row per token\n"
             "  (stride-1 16-token windows, md5-keyed so shingle\n"
             "  STRINGS never shuffle); since r10 the corpus-duplicate\n"
             "  test is a lazily-PERSISTED shingle frame feeding a\n"
             "  partial-aggregated digest census and a broadcast/AQE\n"
-            "  semi join back (the r9 window-count shape put ALL rows\n"
-            "  of one digest in one window task — the planted-skew\n"
-            "  rows below measure exactly that exposure; the cache\n"
+            "  semi join back (a window count puts ALL rows of one\n"
+            "  digest in one window task — the planted-skew row below\n"
+            "  runs on exactly that exposure; the cache\n"
             "  replaces the double scan the r8 shape paid), and the\n"
             "  island merge is one window pass inside the per-doc\n"
             "  partitioning — linear, no stage colocating one key's\n"
@@ -816,9 +793,9 @@ def main() -> None:
             "  frame, builds a partial-aggregated df census, and\n"
             "  broadcast-ANTI-joins the tiny over-cap blacklist, so\n"
             "  every key reaching the collect_list has <= cap rows and\n"
-            "  the shuffle is uniform by construction (the r9 window\n"
-            "  shape instead colocated each fingerprint's full mass in\n"
-            "  one window task — the planted-skew rows below price\n"
+            "  the shuffle is uniform by construction (a window count\n"
+            "  instead colocates each fingerprint's full mass in one\n"
+            "  window task — the winnow_df_filter rows below price\n"
             "  that). The [uncapped] row is its NEGATIVE CONTROL — the\n"
             "  Zipfian-bucket m^2/2 pair blowup (27.6x at 8x when\n"
             "  first measured in round 8), kept on the self-join shape\n"
@@ -831,8 +808,9 @@ def main() -> None:
             "  key form of a Zipfian corpus head, which the\n"
             "  key-disjoint corpora above cannot express. The scored\n"
             "  rows are the production census shapes and must stay\n"
-            "  at-worst-linear; the bracketed [window-shape] rows keep\n"
-            "  the r9 window-count shape measured beside them. The\n"
+            "  at-worst-linear; the bracketed [window-shape] rows\n"
+            "  measure probe-local window-count controls beside them.\n"
+            "  The\n"
             "  structural difference the wall-clock ratios price: the\n"
             "  census shapes never colocate one key's mass (partial\n"
             "  aggregation combines map-side; the semi/anti join\n"
