@@ -12,11 +12,11 @@ Layout
 - ``session``    SparkSession factory + catalog helpers (SURVEY §2.10, §3.1)
 - ``sources``    scans/sinks: parquet/CSV ingest with the reference's
                  sanitize/infer semantics (SURVEY §2.1, helper_utils.py:27-197)
-- ``operators``  relational building blocks: joins, dedup, top-k, windows
-- ``functions``  scalar/vector/text function library (JVM-side first)
+- ``operators``  relational building blocks: joins, dedup, top-k, windows,
+                 exact kNN, curation (DSIR, ExactSubstr)
+- ``functions``  scalar/vector/text function library (JVM built-ins only)
 - ``plans``      the query catalog: every SURVEY §2 query shape as a
                  (spark, sf_dir) -> DataFrame callable with a DuckDB oracle
-- ``streaming``  Structured Streaming ports of the batch operators
 - ``forecast``   grouped time-series forecasting (SURVEY §2.9, Prophet-style)
 - ``cache``      plan-cache lifecycle: census-shaped plans lazily persist
                  shared frames; session owners release them at phase

@@ -1,10 +1,11 @@
-"""Scalar/text/vector function library (SURVEY §2.7 + extensions).
+"""Scalar/text/vector/bloom function library (SURVEY §2.7 + extensions).
 
 Everything here returns Column expressions built from pyspark.sql.functions
-builtins — JVM-side, whole-stage-codegen'd. No Python UDFs in this package.
+builtins — JVM-side, whole-stage-codegen'd. No Python UDFs.
 """
 
 from .text import (  # noqa: F401
+    bpe_ish_token_count,
     token_count,
     punct_count,
     stopword_count,

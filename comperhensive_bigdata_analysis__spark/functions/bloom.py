@@ -1,9 +1,7 @@
-"""Shared bloom-filter bit arithmetic — ONE definition of the
-md5-derived position scheme used by both the batch membership plan
-(plans/dedup.py:bloom_filter_probe) and the streaming dedup operator
-(streaming/ops.py:streaming_bloom_dedup), so the two filters can never
-silently de-synchronize. The scheme is DuckDB-replayable (the batch
-plan's oracle restates it in SQL): for seed s and content digest d,
+"""Bloom-filter bit arithmetic — the md5-derived position scheme of the
+membership plan (plans/dedup.py:bloom_filter_probe). The scheme is
+DuckDB-replayable (the plan's oracle restates it in SQL): for seed s
+and content digest d,
 
     bitpos(s, d) = int(md5('bf' || s || ':' || d)[:8], 16) mod m_bits
     slot = bitpos div 63,  mask = 1 << (bitpos mod 63)

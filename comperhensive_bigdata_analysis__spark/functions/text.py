@@ -36,6 +36,17 @@ def token_count(col) -> Column:
     )
 
 
+#: One "token" per word piece of <=4 letters, digit run, or symbol —
+#: a deterministic stand-in for a BPE vocabulary's piece lengths.
+BPE_ISH_PATTERN = r"[A-Za-z]{1,4}|[0-9]+|[^A-Za-z0-9\s]"
+
+
+def bpe_ish_token_count(col) -> Column:
+    """GPT-style token estimate: word pieces + digit runs + non-space
+    symbols, counted by regexp_count inside codegen."""
+    return F.regexp_count(_c(col), F.lit(BPE_ISH_PATTERN))
+
+
 def tokens(col) -> Column:
     """Whitespace token array (lowercased).
 

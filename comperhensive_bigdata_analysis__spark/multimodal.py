@@ -635,9 +635,8 @@ def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     ops behave. PNG content gets the REAL pixel tier (channel moments +
     luminance histogram over actually-decoded pixels); other payloads
     get the deterministic md5-expansion stand-in (the seam where an
-    image/audio encoder plugs in). Output plugs STRAIGHT into the
-    similarity tier: extract_features -> operators/similarity.py
-    cosine_pairs_above_np is the multimodal near-dup pipeline."""
+    image/audio encoder plugs in). Byte-identical payloads get identical
+    vectors, so a cosine threshold over the output finds media near-dups."""
     import math
 
     import pandas as pd

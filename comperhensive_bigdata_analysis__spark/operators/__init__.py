@@ -8,14 +8,7 @@ from .dedup import (  # noqa: F401
     minhash_lsh_pairs,
     simhash_signatures,
 )
-from .similarity import (  # noqa: F401
-    brute_force_knn,
-    brute_force_knn_np,
-    cosine_pairs_above,
-    cosine_pairs_above_np,
-    ivf_knn_fast,
-    lsh_band_pairs_fast,
-)
+from .similarity import brute_force_knn  # noqa: F401
 from .relational import as_of_join, sessionize  # noqa: F401
 from .merge import merge_upsert, scd2_apply  # noqa: F401
 from .bucketing import colocated_join, write_bucketed  # noqa: F401

@@ -1,16 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-Two implementations of nearest-neighbor:
-
-- brute_force_knn: the exact baseline. Query vectors are broadcast; each
-  partition scores its rows with a single codegen'd fold expression
-  (functions.vectors.dot_product) — no shuffle until the final top-k,
-  which Spark executes as TakeOrderedAndProject (per-partition heaps +
-  driver merge of k rows, never a global sort).
-- cosine_pairs_above: exact all-pairs above a threshold. Quadratic —
-  kept as the oracle baseline; at scale use lsh_bucket_pairs (random
-  hyperplane signs -> candidate buckets), which turns all-pairs into an
-  equality join exactly like MinHash banding does for text.
+brute_force_knn is the exact nearest-neighbor operator. Query vectors
+are broadcast; each partition scores its rows with a single codegen'd
+fold expression (functions.vectors.cosine_similarity) and the per-query
+top-k is a ranked window. The catalog's ANN and near-dup shapes (LSH
+banding, IVF, PQ, all-pairs above a threshold) are plans in plans/ann.py
+and plans/vector.py.
 """
 
 from __future__ import annotations
@@ -18,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_similarity, dot_product, l2_norm
+from ..functions.vectors import cosine_similarity
 
 
 def brute_force_knn(
@@ -52,509 +47,3 @@ def brute_force_knn(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def cosine_pairs_above(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-) -> DataFrame:
-    """Exact all-pairs cosine >= threshold (embedding near-dup dedup).
-
-    Norms are precomputed once per row before the self-join so the join
-    condition is a single fold per candidate pair.
-    """
-    normed = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
-    )
-    a, b = normed.alias("a"), normed.alias("b")
-    cos = dot_product(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
-    return (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def _normalized_matrix(vectors: DataFrame, id_col: str, vec_col: str):
-    """Driver-side (ids, unit-row matrix) of the whole vector set.
-
-    Only valid when the vector set fits on the driver (bench/test scale,
-    or the candidate side of an LSH bucket). numpy float64 throughout.
-    """
-    import numpy as np
-
-    pdf = vectors.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy()
-    mat = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return ids, mat / norms
-
-
-def brute_force_knn_np(
-    vectors: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 10,
-) -> DataFrame:
-    """Arrow/numpy tier of brute_force_knn: broadcast the (small)
-    normalized query matrix; each partition computes one blocked matmul
-    per Arrow batch and emits its local top-k, merged by a final global
-    top-k. This is the production brute-force path — vectorized math,
-    one pass over the scan side, k·q rows shuffled per partition."""
-    import numpy as np
-    import pandas as pd
-
-    spark = vectors.sparkSession
-    qids, qmat = _normalized_matrix(queries, query_id_col, vec_col)
-    b_q = spark.sparkContext.broadcast((qids, qmat))
-
-    out_schema = f"{query_id_col} long, {id_col} long, cosine double"
-
-    def score(batches):
-        qi, qm = b_q.value
-        for pdf in batches:
-            a = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            nrm = np.linalg.norm(a, axis=1, keepdims=True)
-            nrm[nrm == 0] = 1.0
-            sims = (a / nrm) @ qm.T  # (batch, n_queries)
-            ids = pdf[id_col].to_numpy()
-            for j, qid in enumerate(qi):
-                col = sims[:, j]
-                mask = ids != qid
-                take = min(k, int(mask.sum()))
-                idx = np.argpartition(-col[mask], take - 1)[:take]
-                yield pd.DataFrame(
-                    {
-                        query_id_col: qid,
-                        id_col: ids[mask][idx],
-                        "cosine": col[mask][idx],
-                    }
-                )
-
-    from pyspark.sql.window import Window
-
-    local = vectors.mapInPandas(score, schema=out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return local.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def cosine_pairs_above_np(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-) -> DataFrame:
-    """Arrow/numpy tier of cosine_pairs_above: the full normalized matrix
-    is broadcast once; each partition matmuls its Arrow batches against
-    it and emits only above-threshold pairs with id_a < id_b.
-
-    Valid while the matrix fits in executor memory (~1e7 x 64 doubles =
-    5 GB); beyond that, bucket first (lsh_bucket_pairs) and run this
-    inside buckets."""
-    import numpy as np
-    import pandas as pd
-
-    spark = vectors.sparkSession
-    ids, mat = _normalized_matrix(vectors, id_col, vec_col)
-    b_all = spark.sparkContext.broadcast((ids, mat))
-
-    def pairs(batches):
-        all_ids, all_mat = b_all.value
-        for pdf in batches:
-            a = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            nrm = np.linalg.norm(a, axis=1, keepdims=True)
-            nrm[nrm == 0] = 1.0
-            sims = (a / nrm) @ all_mat.T
-            ids_a = pdf[id_col].to_numpy()
-            ii, jj = np.nonzero(
-                (sims >= threshold) & (ids_a[:, None] < all_ids[None, :])
-            )
-            yield pd.DataFrame(
-                {
-                    "id_a": ids_a[ii],
-                    "id_b": all_ids[jj],
-                    "cosine": sims[ii, jj],
-                }
-            )
-
-    return vectors.mapInPandas(pairs, schema="id_a long, id_b long, cosine double")
-
-
-def lsh_band_pairs_fast(
-    vectors: DataFrame,
-    signs: list[list[int]],
-    bits_per_band: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-) -> DataFrame:
-    """Banded sign-LSH candidates + exact rescoring, all JVM-fold math
-    (the production tier of plans/ann.lsh_band_pairs).
-
-    ``signs``: one +/-1 hyperplane per bit, bits grouped into bands of
-    ``bits_per_band``; a pair is a candidate when ANY band's full bit
-    string matches. Per-row cost is len(signs) fold dot-products inside
-    whole-stage codegen; the candidate join shuffles n*bands rows keyed
-    by (band, bucket) — never the n^2 pair space.
-    """
-    nbits = len(signs)
-    bands = nbits // bits_per_band
-    bits = [
-        F.when(
-            dot_product(
-                F.col(vec_col), F.array(*[F.lit(float(s)) for s in h])
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0"))
-        for h in signs
-    ]
-    band_keys = F.array(
-        *[
-            F.concat(*bits[b * bits_per_band : (b + 1) * bits_per_band])
-            for b in range(bands)
-        ]
-    )
-    # NARROW candidate join: only (id, band, bucket) flows through the
-    # bucket shuffle and pair dedup — the 64-dim payload re-joins AFTER
-    # dedup, so each surviving pair moves two vectors exactly once
-    # (pre-dedup candidates can be ~10^2 x the final pair count).
-    buckets = vectors.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(band_keys).alias("band", "bucket"),
-    )
-    # Shared exchange below both join legs (see lsh_band_pairs_np):
-    # without it each alias re-evaluates the nbits fold dot-products
-    # over its own scan; with it the sign-bit pass runs once.
-    buckets = buckets.repartition(F.col("band"), F.col("bucket"))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    payload = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
-    )
-    va = payload.select(
-        F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    vb = payload.select(
-        F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    cos = dot_product(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def ivf_knn_fast(
-    vectors: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    query_vec: list[float],
-    nprobe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """IVF probe with driver-held centroids (production tier of
-    plans/ann.ivf_knn). Assignment = argmax over ncentroids fold
-    cosines (map-side, codegen); probed-cluster filter + exact rescore
-    against the broadcast query vector; final top-k is
-    TakeOrderedAndProject. At scale, persist the assignment and
-    partition by it so the probe is a pruned scan."""
-    import math
-
-    def unit(v):
-        n = math.sqrt(sum(x * x for x in v)) or 1.0
-        return [x / n for x in v]
-
-    cent_arrs = {cid: unit(v) for cid, v in centroids}
-    q_unit = unit(query_vec)
-
-    def cos_to(center):
-        arr = F.array(*[F.lit(float(x)) for x in center])
-        return dot_product(F.col(vec_col), arr) / l2_norm(F.col(vec_col))
-
-    # nearest centroid per row: sort (cos desc, cid asc) via struct key
-    scored_struct = F.array(
-        *[
-            F.struct((-cos_to(v)).alias("neg"), F.lit(cid).alias("cid"))
-            for cid, v in cent_arrs.items()
-        ]
-    )
-    assigned = vectors.withColumn(
-        "__cid", F.array_sort(scored_struct)[0]["cid"]
-    )
-    q_sims = sorted(
-        (
-            (-sum(a * b for a, b in zip(cv, q_unit)), cid)
-            for cid, cv in cent_arrs.items()
-        )
-    )
-    probe_ids = [cid for _, cid in q_sims[:nprobe]]
-    q_arr = F.array(*[F.lit(float(x)) for x in q_unit])
-    out = (
-        assigned.filter(F.col("__cid").isin(probe_ids))
-        .filter(F.col(id_col) != exclude_id if exclude_id is not None else F.lit(True))
-        .select(
-            id_col,
-            (dot_product(F.col(vec_col), q_arr) / l2_norm(F.col(vec_col))).alias(
-                "cosine"
-            ),
-        )
-    )
-    return out.orderBy(F.col("cosine").desc(), id_col).limit(k)
-
-
-def lsh_band_pairs_np(
-    vectors: DataFrame,
-    signs: list[list[int]],
-    bits_per_band: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-) -> DataFrame:
-    """numpy tier of lsh_band_pairs_fast: sign bits come from one
-    vectorized matmul per Arrow batch (plan stays tiny — the JVM fold
-    tier pays seconds of planning/codegen for its nbits x dim literal
-    trees), then the same narrow candidate join; rescoring is the
-    broadcast numpy matmul of cosine_pairs_above_np restricted to
-    candidate ids. Fastest tier while the vector set fits the driver."""
-    import numpy as np
-    import pandas as pd
-
-    spark = vectors.sparkSession
-    H = np.asarray(signs, dtype="float64")  # (nbits, dim)
-    bands = H.shape[0] // bits_per_band
-    b_H = spark.sparkContext.broadcast(H)
-
-    def bucketize(batches):
-        Hm = b_H.value
-        weights = 2 ** np.arange(bits_per_band)
-        for pdf in batches:
-            a = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            bits = (a @ Hm.T) >= 0  # (batch, nbits)
-            ids = pdf[id_col].to_numpy()
-            out = {"id": [], "band": [], "bucket": []}
-            for b in range(bands):
-                chunk = bits[:, b * bits_per_band : (b + 1) * bits_per_band]
-                codes = chunk @ weights
-                out["id"].extend(ids)
-                out["band"].extend([b] * len(ids))
-                out["bucket"].extend(codes.astype("int64"))
-            yield pd.DataFrame(out)
-
-    buckets = vectors.mapInPandas(bucketize, schema="id long, band int, bucket long")
-    # Pin ONE exchange below both sides of the self-join: without it
-    # each alias plans its own scan+matmul subtree and the Python
-    # bucketize stage executes TWICE (measured: 2 MapInPandas scans, 0
-    # reused exchanges in the final adaptive plan). An explicit hash
-    # repartition on the join key makes the two legs canonically
-    # identical shuffle stages, which AQE deduplicates — the matmul
-    # runs once and the join reads the same shuffle output from both
-    # sides. The exchange itself adds nothing: the equality join needs
-    # (band, bucket) clustering anyway.
-    buckets = buckets.repartition(F.col("band"), F.col("bucket"))
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    ids, mat = _normalized_matrix(vectors, id_col, vec_col)
-    b_all = spark.sparkContext.broadcast((ids, mat))
-
-    import pandas as pd  # noqa: F811
-
-    def rescore(batches):
-        all_ids, all_mat = b_all.value
-        pos = {int(i): k for k, i in enumerate(all_ids)}
-        for pdf in batches:
-            ia = [pos[int(x)] for x in pdf["id_a"]]
-            ib = [pos[int(x)] for x in pdf["id_b"]]
-            import numpy as np
-
-            cos = np.einsum("ij,ij->i", all_mat[ia], all_mat[ib])
-            keep = cos >= threshold
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].to_numpy()[keep],
-                    "id_b": pdf["id_b"].to_numpy()[keep],
-                    "cosine": cos[keep],
-                }
-            )
-
-    return cand.mapInPandas(rescore, schema="id_a long, id_b long, cosine double")
-
-
-def ivf_knn_np(
-    vectors: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    query_vec: list[float],
-    nprobe: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """numpy tier of ivf_knn_fast: one mapInPandas pass does
-    assignment (batch matmul vs the broadcast centroid matrix), probe
-    filtering, and query scoring — no joins, no big literal trees; the
-    global top-k is the only ordered step."""
-    import numpy as np
-    import pandas as pd
-
-    spark = vectors.sparkSession
-    C = np.stack([np.asarray(v, dtype="float64") for _, v in centroids])
-    C = C / np.linalg.norm(C, axis=1, keepdims=True)
-    cids = np.asarray([cid for cid, _ in centroids])
-    q = np.asarray(query_vec, dtype="float64")
-    q = q / (np.linalg.norm(q) or 1.0)
-    order = np.lexsort((cids, -(C @ q)))  # cos desc, cid asc
-    probe = set(cids[order[:nprobe]].tolist())
-    b = spark.sparkContext.broadcast((C, cids, q, probe))
-
-    def score(batches):
-        Cm, cid_arr, qv, probe_set = b.value
-        for pdf in batches:
-            a = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            nrm = np.linalg.norm(a, axis=1, keepdims=True)
-            nrm[nrm == 0] = 1.0
-            au = a / nrm
-            assign = cid_arr[np.argmax(au @ Cm.T, axis=1)]
-            ids = pdf[id_col].to_numpy()
-            keep = np.array([c in probe_set for c in assign])
-            if exclude_id is not None:
-                keep &= ids != exclude_id
-            yield pd.DataFrame(
-                {id_col: ids[keep], "cosine": (au[keep] @ qv)}
-            )
-
-    scored = vectors.mapInPandas(score, schema=f"{id_col} long, cosine double")
-    return scored.orderBy(F.col("cosine").desc(), id_col).limit(k)
-
-
-def lsh_bucket_pairs(
-    vectors: DataFrame,
-    hyperplanes: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
-) -> DataFrame:
-    """Random-hyperplane LSH candidate pairs, then exact rescoring.
-
-    Bucket key = sign bits of dot(v, h_j) for the given hyperplanes
-    (caller supplies deterministic hyperplanes — e.g. seeded numpy on
-    the driver). All-pairs becomes an equality join on the bucket key;
-    survivors are rescored exactly, so the result is a subset of
-    cosine_pairs_above limited to same-bucket candidates.
-    """
-    sign_bits = F.concat_ws(
-        "",
-        *[
-            F.when(dot_product(F.col(vec_col), F.array(*[F.lit(float(x)) for x in h])) >= 0,
-                   F.lit("1")).otherwise(F.lit("0"))
-            for h in hyperplanes
-        ],
-    )
-    bucketed = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
-        sign_bits.alias("bucket"),
-    )
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    cos = dot_product(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
-    return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
-def pq_adc_knn_np(
-    vectors: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    query_vec: list[float],
-    n_sub: int = 4,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """numpy tier of plans/ann.py:pq_adc_knn — product-quantization ADC
-    scoring in one mapInPandas pass: per batch, quantize each subvector
-    against the broadcast codebook (batched squared-distance matmul,
-    ties broken toward the lower codeword id like the oracle tier's
-    (dist, c) ordering), then sum the precomputed query-to-codeword
-    lookup table by code. The declarative plan is the DECIMAL-exact
-    oracle tier; this is what a cluster runs (no 5M-row explode-join —
-    the same arithmetic as a dense matmul per Arrow batch). At scale
-    codes are computed ONCE at ingest and stored as nibbles; this
-    operator then only pays the LUT gather."""
-    import numpy as np
-    import pandas as pd
-
-    spark = vectors.sparkSession
-    C = np.stack([np.asarray(v, dtype="float64") for _, v in centroids])
-    dim = C.shape[1]
-    sub = dim // n_sub
-    # (n_sub, n_cent, sub): codebook per subspace.
-    CB = np.stack([C[:, m * sub : (m + 1) * sub] for m in range(n_sub)])
-    q = np.asarray(query_vec, dtype="float64")
-    # LUT[m, c] = ||q_m - CB[m, c]||^2
-    LUT = np.stack(
-        [((q[m * sub : (m + 1) * sub] - CB[m]) ** 2).sum(axis=1) for m in range(n_sub)]
-    )
-    b = spark.sparkContext.broadcast((CB, LUT))
-
-    def score(batches):
-        CBm, lut = b.value
-        for pdf in batches:
-            a = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            ids = pdf[id_col].to_numpy()
-            if exclude_id is not None:
-                keep = ids != exclude_id
-                a, ids = a[keep], ids[keep]
-            if len(ids) == 0:
-                continue
-            dist = np.zeros(len(ids))
-            for m in range(n_sub):
-                am = a[:, m * sub : (m + 1) * sub]
-                # (batch, n_cent) squared distances; argmin takes the
-                # first (lowest c) on ties, matching the oracle tier.
-                d2 = ((am[:, None, :] - CBm[m][None, :, :]) ** 2).sum(axis=2)
-                codes = np.argmin(d2, axis=1)
-                dist += lut[m][codes]
-            yield pd.DataFrame({id_col: ids, "adc_dist": dist})
-
-    scored = vectors.mapInPandas(score, schema=f"{id_col} long, adc_dist double")
-    return scored.orderBy("adc_dist", id_col).limit(k)

@@ -32,8 +32,7 @@ constants embedded in BOTH engines' queries):
 
 Float discipline: sign bits and cosines are computed the oracle way —
 per-position products in double, cast DECIMAL(28,12), summed (order-
-insensitive, bit-identical across engines). operators/similarity.py
-holds the fold/numpy production tiers.
+insensitive, bit-identical across engines).
 """
 
 from __future__ import annotations

@@ -331,10 +331,9 @@ def incremental_dedup_census(spark, sf_dir):
     exact duplicates (digest already present) vs novel documents.
 
     100 TB: the base collapses to DISTINCT digests once (persistable
-    across runs — the state a streaming/batch dedup service keeps);
-    the probe join shuffles on the uniform digest key and its cost
-    scales with the BATCH, not the corpus. streaming/ops.py's
-    watermarked streaming_dedup is the continuous twin of this plan.
+    across runs — the state a batch dedup service keeps); the probe
+    join shuffles on the uniform digest key and its cost scales with
+    the BATCH, not the corpus.
     """
     d = load_table(spark, sf_dir, "documents")
     sig = F.md5(F.col("text").cast("binary"))
@@ -456,8 +455,7 @@ def bloom_filter_probe(spark, sf_dir):
     bloom exists), so the exact leg here is demo-scale-only machinery
     to PRICE the false-positive rate; production keeps just the sketch.
     Dedup pipelines use this shape to skip re-deduping documents
-    already ingested in earlier runs (streaming twin:
-    streaming/ops.py:streaming_bloom_dedup).
+    already ingested in earlier runs.
     """
     d = load_table(spark, sf_dir, "documents")
     # NULL text -> no digest -> neither buildable nor probeable (the
@@ -469,8 +467,7 @@ def bloom_filter_probe(spark, sf_dir):
     seen = base.filter(F.col("doc_id") % 2 == 0)
     cand = base.filter(F.col("doc_id") % 2 == 1)
 
-    # Shared position scheme (functions/bloom.py) — the same expressions
-    # the streaming filter maintains, so the two can never diverge.
+    # Position scheme (functions/bloom.py), restated by the oracle.
     filt = (
         bloom_positions(seen.select("digest"), "digest")
         .select("slot", "mask")

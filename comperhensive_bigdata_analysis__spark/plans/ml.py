@@ -11,10 +11,8 @@ DuckDB. Ranking ties break on centroid id.
 Scale: centroids are tiny (K rows) and BROADCAST; assignment is
 map-side per vector component — one shuffle per aggregation level,
 nothing quadratic. Full Lloyd iterations = repeat (assign, update) with
-a localCheckpoint per round, exactly the operators/graph.py iteration
-discipline; at production scale the per-vector inner loop moves to the
-numpy mapInPandas tier (operators/similarity.py pattern) while keeping
-THIS formulation as the correctness oracle.
+a localCheckpoint per round, the operators/graph.py iteration
+discipline.
 """
 
 from __future__ import annotations

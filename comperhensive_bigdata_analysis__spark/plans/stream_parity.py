@@ -1,13 +1,11 @@
-"""Stream-parity plans: the streaming operators' window specs run on the
-batch events frame and checked against DuckDB oracles. Because every
-operator in streaming/ops.py is expressed on an unbounded DataFrame with
-the SAME transformations batch-side, these plans pin the windowing
-semantics the streams rely on (tumbling, sliding, session windows) to
-the oracle — the streaming tests then only need stream==batch parity.
+"""Event-time window plans: tumbling, sliding and session windows over
+the batch events frame, each checked against a DuckDB oracle. They pin
+the window semantics a Structured Streaming job would share with batch
+(the same ``window`` / ``session_window`` specs), including the
+NULL-event-time contract stated on ``_TUMBLING_ORACLE``.
 
 Scale: tumbling/sliding aggs shuffle on (window, key) — bounded state,
-uniform keys. Session windows shuffle per user; watermarks bound state
-in the streaming tier.
+uniform keys. Session windows shuffle per user.
 """
 
 from __future__ import annotations
@@ -15,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from ..streaming.ops import tumbling_counts
 from . import plan
 
 DEC = "decimal(18,6)"
@@ -24,7 +21,7 @@ TS_FMT_DUCK = "%Y-%m-%d %H:%M:%S"
 
 
 # ---------------------------------------------------------------------------
-# Tumbling 1-hour counts — EXACTLY ops.tumbling_counts on the batch frame.
+# Tumbling 1-hour counts per event type.
 # ---------------------------------------------------------------------------
 
 _TUMBLING_ORACLE = f"""
@@ -45,26 +42,28 @@ _TUMBLING_ORACLE = f"""
 @plan("tumbling_hourly_counts", _TUMBLING_ORACLE)
 def tumbling_hourly_counts(spark, sf_dir):
     e = load_table(spark, sf_dir, "events")
-    w = tumbling_counts(e, window="1 hour")  # batch frame -> no watermark
-    return w.select(
-        F.date_format("window_start", TS_FMT).alias("window_start"),
-        "event_type",
-        "n_events",
-    ).orderBy("window_start", "event_type")
+    return (
+        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.date_format("w.start", TS_FMT).alias("window_start"),
+            "event_type",
+            "n_events",
+        )
+        .orderBy("window_start", "event_type")
+    )
 
 
 # ---------------------------------------------------------------------------
 # Sliding 1-hour/30-minute value sums. Each event lands in exactly two
 # 30-minute-aligned windows; the oracle replays that expansion with a
-# UNION ALL of the two shifted bucketings. Decimal sums for exactness
-# (the streaming tier sums doubles incrementally — same spec, weaker
-# float guarantee, which is why the oracle pins THIS plan instead).
+# UNION ALL of the two shifted bucketings. Decimal sums for exactness.
 # ---------------------------------------------------------------------------
 
 _SLIDING_ORACLE = f"""
     WITH expanded AS (
       -- ts IS NOT NULL: F.window drops NULL event times (pinned
-      -- streaming contract; see _TUMBLING_ORACLE)
+      -- NULL-event-time contract; see _TUMBLING_ORACLE)
       SELECT time_bucket(INTERVAL '30 minutes', ts) AS ws, event_type, value
       FROM events WHERE ts IS NOT NULL
       UNION ALL
@@ -106,7 +105,7 @@ def sliding_value_sums_30m(spark, sf_dir):
 _SESSION_WINDOW_ORACLE = f"""
     WITH flagged AS (
       -- ts IS NOT NULL: F.session_window drops NULL event times
-      -- (pinned streaming contract; see _TUMBLING_ORACLE)
+      -- (pinned NULL-event-time contract; see _TUMBLING_ORACLE)
       SELECT user_id, ts, value,
              CASE WHEN lag(ts) OVER w IS NULL
                        OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..functions.text import (
+    bpe_ish_token_count,
     punct_count,
     quality_score_col,
     stopword_count,
@@ -172,8 +173,7 @@ def doc_fingerprint(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # BPE-ish token estimate (word pieces + digit runs + symbols) — the
-# LLM-pipeline token accounting pass. JVM regexp tier here; the scalar
-# pandas_udf tier (functions/udfs.py) is pinned equal by tests.
+# LLM-pipeline token accounting pass (functions/text.bpe_ish_token_count).
 # ---------------------------------------------------------------------------
 
 
@@ -189,14 +189,12 @@ def doc_fingerprint(spark, sf_dir):
     """,
 )
 def bpe_token_estimate(spark, sf_dir):
-    from ..functions.udfs import bpe_ish_token_count_jvm
-
     d = load_table(spark, sf_dir, "documents")
     return (
         d.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(bpe_ish_token_count_jvm("text")).alias("est_tokens"),
+            F.sum(bpe_ish_token_count("text")).alias("est_tokens"),
         )
         .orderBy("source")
     )

@@ -441,9 +441,7 @@ _GSETS_ORACLE = """
 # array expressions (sequence -> posexplode -> slice -> concat_ws): the
 # token array is materialized once per doc, chunk boundaries are integer
 # arithmetic, and the output is ~n_tokens/stride rows per doc with
-# content fingerprints. The Python-UDTF twin (functions/udfs.py
-# chunk_docs_udtf) demonstrates the table-function API over the same
-# semantics; parity-tested, but THIS codegen path is the production tier.
+# content fingerprints.
 # ---------------------------------------------------------------------------
 
 CHUNK_SIZE = 50

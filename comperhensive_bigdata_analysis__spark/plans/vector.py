@@ -5,8 +5,9 @@ fold order differs from DuckDB's list internals. The oracle-checked
 plans therefore compute dot products the EXACT way — posexplode the
 vectors, multiply per position in double (IEEE-deterministic per row),
 cast each product to DECIMAL(28,12) and sum (order-insensitive). The
-fast fold-based operators (operators/similarity.py) are the production
-tiers; tests assert the two tiers agree to 1e-9.
+fold-based kNN operator (operators/similarity.brute_force_knn) is
+tested against knn_bruteforce: same neighbours in order, cosine within
+1e-6.
 """
 
 from __future__ import annotations
@@ -82,8 +83,8 @@ def knn_bruteforce(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Exact all-pairs cosine >= 0.35 — embedding near-dup detection.
-# The exploded pair join is the exact/oracle tier; the fold-based
-# cosine_pairs_above + LSH bucketing is the production tier.
+# The exploded pair join is exact; plans/ann.lsh_band_pairs is the
+# banded-LSH candidate shape of the same search.
 # ---------------------------------------------------------------------------
 
 _PAIRS_ORACLE = """

@@ -81,8 +81,7 @@ def sessionize_events(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Running (cumulative) per-user totals — the batch analog of the
-# streaming running_user_totals operator.
+# Running (cumulative) per-user totals.
 # ---------------------------------------------------------------------------
 
 _RUNNING_ORACLE = """

@@ -29,6 +29,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import register_plan_cache
 from ..session import register
 
 #: helper_utils.py:107 — "max for int is 2**31 but we will go with 2**30"
@@ -226,7 +227,9 @@ def ingest_csv_audited(
     ).csv(path, schema=full)
     # Spark leaves _corrupt_record null for clean rows and sets it to the
     # raw line when any field failed to parse under the declared schema.
-    raw = raw.cache()  # one scan feeds both split sides
+    # one scan feeds both split sides; registered so the session
+    # owner's release_plan_caches() drops it (DEPLOY.md)
+    raw = register_plan_cache(raw)
     clean = sanitize_columns(raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record"))
     rejects = raw.filter(F.col("_corrupt_record").isNotNull()).select(
         F.col("_corrupt_record").alias("raw_line")

@@ -1,8 +1,7 @@
-"""Property-based tests for the chunk grid semantics shared by the
-codegen plan (plans/training.py:doc_chunks) and the UDTF
-(functions/udfs.py). The grid logic is pure arithmetic — hypothesis
-drives it over arbitrary token counts without touching Spark; the
-cross-tier parity test (test_training_plans) pins the Spark plumbing."""
+"""Property-based tests for the chunk grid semantics of the codegen
+plan (plans/training.py:doc_chunks). The grid logic is pure arithmetic —
+hypothesis drives it over arbitrary token counts without touching
+Spark; the doc_chunks oracle row pins the Spark plumbing."""
 
 from __future__ import annotations
 
@@ -16,7 +15,7 @@ from comperhensive_bigdata_analysis__spark.plans.training import (
 
 
 def chunk_grid(n_tokens: int, size: int = CHUNK_SIZE, stride: int = CHUNK_STRIDE):
-    """Reference implementation of the grid both tiers must follow:
+    """Reference implementation of the grid the plan must follow:
     starts at 1, 1+stride, ... up to max(n,1); chunk i covers
     [start, min(start+size-1, n)]."""
     n = max(n_tokens, 1)

@@ -6,8 +6,6 @@
 - hash_embed_topk: the r13 fusion keeps the corpus-tokenize legs at
   two (query-vector leg + fused dot/norm leg) — a third Generate
   means the dot/norm split regressed.
-- lsh_band_pairs_np: the bucketize Python stage executes once — the
-  self-join's legs share one (band, bucket) exchange.
 """
 
 from __future__ import annotations
@@ -69,23 +67,3 @@ def test_hash_embed_topk_tokenizes_at_most_twice(spark, sf_dir):
     ex = _explain(plans.QUERIES["hash_embed_topk"](spark, sf_dir))
     n_generate = len(re.findall(r"\(\d+\) Generate", ex))
     assert n_generate <= 2, f"hash_embed_topk re-grew a tokenize leg: {n_generate}"
-
-
-def test_lsh_np_bucketize_executes_once(spark, sf_dir):
-    """The band self-join's legs must share one (band, bucket)
-    exchange so the Python sign-bit stage runs once: the FINAL
-    adaptive plan carries exactly two Python stages (bucketize +
-    rescore), not three."""
-    from comperhensive_bigdata_analysis__spark.operators.similarity import (
-        lsh_band_pairs_np,
-    )
-    from comperhensive_bigdata_analysis__spark.plans.ann import (
-        BITS_PER_BAND,
-        _SIGNS,
-    )
-
-    e = load_table(spark, sf_dir, "embeddings")
-    df = lsh_band_pairs_np(e, _SIGNS, BITS_PER_BAND, threshold=0.35)
-    df.collect()  # finalize the adaptive plan
-    final = _explain(df).split("== Initial Plan ==")[0]
-    assert final.count("MapInPandas") == 2, final

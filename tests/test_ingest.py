@@ -258,6 +258,33 @@ def test_audited_ingest_quarantines_malformed_rows(spark, tmp_path):
     assert spark.table("dirty").count() == 2
 
 
+def test_ingest_csv_audited_cache_is_released(spark, tmp_path):
+    """The scan cache shared by the clean and reject sides is a
+    registered plan cache: release_plan_caches() leaves the
+    CacheManager empty."""
+    from comperhensive_bigdata_analysis__spark.cache import release_plan_caches
+    from comperhensive_bigdata_analysis__spark.sources.ingest import (
+        ingest_csv_audited,
+    )
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    release_plan_caches()
+    spark.catalog.clearCache()
+    assert cache_manager.isEmpty()
+
+    p = tmp_path / "audited.csv"
+    p.write_text("id,amount\n1,10.5\n2,oops\n3,30.25\n")
+    clean, rejects = ingest_csv_audited(
+        spark, str(p), "id INT, amount DOUBLE", table="audited"
+    )
+    assert clean.count() == 2
+    assert rejects.count() == 1
+    assert not cache_manager.isEmpty()
+
+    release_plan_caches()
+    assert cache_manager.isEmpty()
+
+
 _Q6 = """select technology, sum(electrical_capacity) electrical_capacity_sum
 from {table}
 group by technology

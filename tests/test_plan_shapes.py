@@ -409,14 +409,7 @@ _BROADCAST_ALLOWLIST = {
     ("operators/curation.py", "dsir_score"),
     ("operators/merge.py", "merge_upsert"),
     ("operators/merge.py", "scd2_apply"),
-    ("operators/ml.py", "_assign"),
-    ("operators/ml.py", "kmeans_assign_np"),
     ("operators/similarity.py", "brute_force_knn"),
-    ("operators/similarity.py", "brute_force_knn_np"),
-    ("operators/similarity.py", "cosine_pairs_above_np"),
-    ("operators/similarity.py", "ivf_knn_np"),
-    ("operators/similarity.py", "lsh_band_pairs_np"),
-    ("operators/similarity.py", "pq_adc_knn_np"),
     ("operators/skew.py", "distributed_scan"),
     ("plans/analytics.py", "_dow_offsets"),
     ("plans/analytics.py", "forecast_mape"),
@@ -477,8 +470,6 @@ _BROADCAST_ALLOWLIST = {
     # first/last/third legs (<= |priorities| rows each) the bare
     # site was audited for
     ("plans/windows.py", "window_value_functions.nsjoin"),
-    ("streaming/ops.py", "stream_static_enrich"),
-    ("streaming/ops.py", "streaming_bloom_dedup.apply_batch"),
 }
 
 

@@ -1,24 +1,23 @@
-"""Degenerate-input behavior of the streaming operators (r12 — the
-batch catalog's empty/null/single-row audits don't reach
-streaming/ops.py because those ops aren't registered plans).
-
-Pins the NULL-event-time contract stated on tumbling_counts: rows
-with NULL ts are excluded from windowed aggregates (Spark's window()
-is generator-shaped — no bucket for NULL input, batch and streaming
-alike) while NULL grouping KEYS group normally; streaming_dedup and
-the stream-static enrich retain every row. Each op is also driven on
-a fully NULL-riddled and an empty stream to prove no crash.
+"""NULL-event-time contract of the event-time window plans
+(plans/stream_parity.py, stated on ``_TUMBLING_ORACLE``): rows with a
+NULL ``ts`` are excluded from windowed aggregates — Spark's window() is
+generator-shaped and produces no bucket for a NULL input — while NULL
+grouping KEYS group normally.
 """
 
 from __future__ import annotations
 
-import uuid
+import os
 from datetime import datetime
 
-import pytest
-from pyspark.sql import functions as F
+from comperhensive_bigdata_analysis__spark.plans.stream_parity import (
+    tumbling_hourly_counts,
+)
 
-from comperhensive_bigdata_analysis__spark.streaming import ops
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
 
 ROWS = [
     (1, datetime(2024, 1, 1, 10, 0, 0), 1, "view", 1.0, None),
@@ -29,68 +28,13 @@ ROWS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def null_stream_dir(spark, tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("null_events"))
-    spark.createDataFrame(ROWS, ops.EVENTS_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(d)
-    return d
-
-
-def _run_stream(spark, df, output_mode="append"):
-    name = f"deg_{uuid.uuid4().hex[:8]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+def test_batch_window_drops_null_ts_rows_only(spark, tmp_path):
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(ROWS, EVENTS_SCHEMA).coalesce(1).write.parquet(
+        os.path.join(sf_dir, "events.parquet")
     )
-    q.awaitTermination(120)
-    return spark.sql(f"SELECT * FROM {name}")
-
-
-def test_batch_window_drops_null_ts_rows_only(spark, null_stream_dir):
-    batch = spark.read.schema(ops.EVENTS_SCHEMA).parquet(null_stream_dir)
-    got = ops.tumbling_counts(batch).collect()
+    got = tumbling_hourly_counts(spark, sf_dir).collect()
     # 4 rows with a ts -> 4 (window, type) groups; the NULL-ts row is
     # excluded (generator semantics) while the NULL event_type GROUPS
     assert sum(r["n_events"] for r in got) == 4
     assert any(r["event_type"] is None for r in got)
-
-
-def test_streaming_dedup_retains_null_ts_and_matches_batch(
-    spark, null_stream_dir
-):
-    batch = spark.read.schema(ops.EVENTS_SCHEMA).parquet(null_stream_dir)
-    stream = ops.events_stream(spark, null_stream_dir)
-    got = _run_stream(spark, ops.streaming_dedup(stream))
-    assert got.count() == ops.streaming_dedup(batch).count() == len(ROWS)
-
-
-def test_stream_static_enrich_null_keys_pass_through(spark, null_stream_dir):
-    stream = ops.events_stream(spark, null_stream_dir)
-    dim = spark.createDataFrame([(1, "alpha"), (2, "beta")], "user_id long, seg string")
-    got = _run_stream(spark, ops.stream_static_enrich(stream, dim))
-    assert got.count() == len(ROWS)  # left join: NULL keys kept, seg NULL
-    assert got.filter(F.col("user_id").isNull() & F.col("seg").isNull()).count() == 1
-
-
-@pytest.mark.parametrize(
-    "op",
-    [ops.tumbling_counts, ops.sliding_value_sums, ops.session_windows,
-     ops.streaming_dedup],
-    ids=lambda f: f.__name__,
-)
-def test_windowed_ops_survive_all_null_and_empty_streams(
-    spark, tmp_path_factory, op
-):
-    all_null = [(i, None, None, None, None, None) for i in range(4)]
-    for rows in (all_null, []):
-        d = str(tmp_path_factory.mktemp("deg"))
-        spark.createDataFrame(rows, ops.EVENTS_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(d)
-        got = _run_stream(spark, op(ops.events_stream(spark, d)))
-        assert got.count() == 0 or op is ops.streaming_dedup

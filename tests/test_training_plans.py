@@ -46,50 +46,6 @@ def test_scrub_removes_stopwords(spark, sf_dir):
     assert out.count() == docs
 
 
-def test_chunk_udtf_matches_jvm_chunker(spark, sf_dir):
-    """Table-function tier == codegen tier: same chunk grid, same
-    content (UDTF emits text, plan emits its md5)."""
-    import hashlib
-
-    from comperhensive_bigdata_analysis__spark.functions.udfs import (
-        register_chunk_udtf,
-    )
-    from comperhensive_bigdata_analysis__spark.plans.training import (
-        CHUNK_SIZE,
-        CHUNK_STRIDE,
-    )
-    from comperhensive_bigdata_analysis__spark.sources.tables import load_table
-
-    register_chunk_udtf(spark)
-    load_table(spark, sf_dir, "documents").limit(50).createOrReplaceTempView(
-        "__chunk_docs"
-    )
-    udtf_rows = spark.sql(
-        f"SELECT d.doc_id, c.chunk_idx, c.n_tokens, c.chunk "
-        f"FROM __chunk_docs d, LATERAL chunk_doc(d.text, {CHUNK_SIZE}, {CHUNK_STRIDE}) c"
-    ).collect()
-    got = {
-        (r["doc_id"], r["chunk_idx"]): (
-            r["n_tokens"],
-            hashlib.md5(r["chunk"].encode()).hexdigest(),
-        )
-        for r in udtf_rows
-    }
-    plan_rows = (
-        plans.QUERIES["doc_chunks"](spark, sf_dir)
-        .join(
-            load_table(spark, sf_dir, "documents").limit(50).select("doc_id"),
-            "doc_id",
-        )
-        .collect()
-    )
-    want = {
-        (r["doc_id"], r["chunk_idx"]): (r["n_tokens"], r["chunk_sig"])
-        for r in plan_rows
-    }
-    assert got == want
-
-
 def test_tfidf_ranks_within_doc(spark, sf_dir):
     out = plans.QUERIES["tfidf_top_terms"](spark, sf_dir)
     bad = (
