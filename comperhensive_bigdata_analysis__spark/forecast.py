@@ -28,6 +28,8 @@ Pass model="linear" explicitly for the trend-only fit.
 
 from __future__ import annotations
 
+from statistics import NormalDist
+
 from pyspark.sql import DataFrame
 
 FORECAST_SCHEMA = (
@@ -53,10 +55,8 @@ def _band_forecast(
     import numpy as np
     import pandas as pd
 
-    # z for the central interval_width mass (0.95 -> 1.96) without scipy.
-    z = {0.8: 1.2816, 0.9: 1.6449, 0.95: 1.96, 0.99: 2.5758}.get(
-        round(interval_width, 2), 1.96
-    )
+    # z for the central interval_width mass (0.95 -> 1.959964) without scipy
+    z = NormalDist().inv_cdf((1 + interval_width) / 2)
     last = pdf["ds"].max()
     future = pd.date_range(last, periods=horizon + 1, freq="D")[1:]
     fx = np.array([d.toordinal() for d in future], dtype="float64")
@@ -166,6 +166,8 @@ def grouped_forecast(
     """
     import pandas as pd
 
+    if not 0 < interval_width < 1:
+        raise ValueError(f"interval_width must be in (0, 1), got {interval_width}")
     if model is None:
         model = "prophet" if _prophet_available() else "seasonal"
     fit = {

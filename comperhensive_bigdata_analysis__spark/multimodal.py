@@ -1,24 +1,23 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-Pattern (driver-mandated): the engine treats media as `binary` columns
-with a metadata struct; decode / feature-extract / resize / frame-sample
-run as Arrow-batched pandas iterators over mapInPandas, so bytes never
-leave the executor and flow batch-at-a-time (bounded by
+The engine treats media as `binary` columns with a metadata struct.
+Every per-row media kernel runs through `map_rows`: one Arrow-batched
+pandas pass in which a row yields zero or more output tuples,
+so bytes never leave the executor and flow batch-at-a-time (bounded by
 spark.sql.execution.arrow.maxRecordsPerBatch, NOT whole-partition
-materialization).
+materialization). `decode_media` and `resize_media` are the two
+column-level kernels; the media plans in plans/multimodal.py build on
+the same helper.
 
-Codec tiers (all stdlib; PIL/ffmpeg/librosa are NOT in this container):
+Codec tiers (all stdlib; no image, audio or video package is needed):
 
 - `codec_decoder` — real HEADER decode for PNG / GIF / BMP / JPEG
   (width/height/channels/digest from the actual container bytes).
 - `png_pixels` / `png_encode` — real PIXEL codec for 8-bit
   non-interlaced PNG: zlib-inflated IDAT, all five scanline filters
-  (None/Sub/Up/Average/Paeth) undone/applied, palette expansion. This
-  un-gates the whole pixel pipeline without PIL: `resize_media`
-  really resamples PNGs (nearest-neighbor, re-encoded), `sample_frames`
-  digests decoded pixel bands, `extract_features` computes channel
-  moments + luminance histograms from real pixels. PIL, where
-  installed, is the fast path (resize_png tries it first).
+  (None/Sub/Up/Average/Paeth) undone/applied, palette expansion.
+  `resize_media` really resamples PNG and GIF (nearest-neighbor,
+  re-encoded).
 - `jpegcodec.jpeg_pixels` / `jpeg_encode` — real baseline-JPEG ENTROPY
   codec (huffman bitstream, DC prediction, dezigzag, dequantize, 2-D
   IDCT; Annex-K tables, byte stuffing). Progressive/subsampled streams
@@ -53,7 +52,29 @@ DECODE_SCHEMA = (
     "channels int, digest string"
 )
 
-FRAME_SCHEMA = "id long, frame_idx int, frame_digest string"
+def map_rows(df: DataFrame, fn, schema: str) -> DataFrame:
+    """Per-row map over Arrow batches: ``fn`` gets one input row's
+    values, in ``df``'s column order, and yields zero or more output
+    tuples in ``schema``'s column order — yielding nothing drops the
+    row, yielding several explodes it. One ``mapInPandas`` pass: bytes
+    stay columnar in Arrow between JVM and Python, and a worker holds
+    one batch at a time. An empty batch comes back as an empty frame
+    with ``schema``'s columns."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    names = StructType.fromDDL(schema).names
+
+    def run(batches):
+        for pdf in batches:
+            rows = [
+                out
+                for row in pdf.itertuples(index=False, name=None)
+                for out in fn(*row)
+            ]
+            yield pd.DataFrame.from_records(rows, columns=names)
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def attach_fake_media(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
@@ -199,8 +220,8 @@ def png_pixels(content: bytes) -> tuple[int, int, int, bytes]:
     NotImplementedError (recognized container, codec capability gap —
     same plug-in class as an unknown format); a malformed stream raises
     ValueError (the skippable per-file class). This is the
-    correctness-first tier — per-byte Python unfiltering; plug PIL in
-    as the fast path where it's installed.
+    correctness-first tier — per-byte Python unfiltering; a faster
+    codec plugs in at the media_pixels seam.
     """
     if content[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG stream")
@@ -313,7 +334,7 @@ def codec_decoder(content: bytes, media_type: str) -> dict:
     """REAL header decode for PNG / GIF87a/89a / BMP / JPEG: parses the
     actual container format for width, height and channel count — the
     full DECODE_SCHEMA contract — using only the stdlib. Pixel-level
-    decoding (resampling, frame extraction) still needs PIL/ffmpeg.
+    decoding lives behind media_pixels.
 
     Error contract: NotImplementedError for formats this codec doesn't
     recognize (the plug-in seam for a pixel codec); ValueError for a
@@ -375,110 +396,37 @@ def codec_decoder(content: bytes, media_type: str) -> dict:
 def decode_media(
     media: DataFrame, decoder=fake_decoder, on_error: str = "raise"
 ) -> DataFrame:
-    """(id, content, media_type) -> DECODE_SCHEMA via Arrow-batched
-    mapInPandas. One Python worker per partition; bytes stay columnar in
-    Arrow buffers between JVM and Python.
+    """(id, content, media_type) -> DECODE_SCHEMA, one row per decoded
+    media object (``map_rows``).
 
     ``on_error``: "raise" (default) fails the job on the first decode
     error — right for curated inputs; "skip" drops undecodable rows —
     right for a crawled 100 TB corpus, where one truncated file must
     not kill a million-task job (count the dropped rows by diffing
     input/output counts)."""
-    import pandas as pd
-
     if on_error not in ("raise", "skip"):
         raise ValueError("on_error must be 'raise' or 'skip'")
 
-    def run(batches):
-        for pdf in batches:
-            rows = {
-                "id": [], "media_type": [], "n_bytes": [], "width": [],
-                "height": [], "channels": [], "digest": [],
-            }
-            for i, c, t in zip(pdf["id"], pdf["content"], pdf["media_type"]):
-                raw = bytes(c)
-                try:
-                    m = decoder(raw, t)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                rows["id"].append(i)
-                rows["media_type"].append(t)
-                rows["n_bytes"].append(len(raw))
-                rows["width"].append(m["width"])
-                rows["height"].append(m["height"])
-                rows["channels"].append(m["channels"])
-                rows["digest"].append(m["digest"])
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=DECODE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Frame sampling for "video" rows, emitting n_frames rows per
-    video — the row-explosion shape a real frame sampler has, with
-    bounded memory. Animated GIFs get REAL temporal frames: frame i is
-    the md5 of decoded frame floor(i * F / n_frames) — an actual
-    frame-sequence read from an actual animated container. Single-image
-    payloads (PNG/BMP/JPEG/still GIF) get the real pixel tier: frame i
-    is the md5 of the i-th equal-height band of decoded pixel rows.
-    Other payloads use the deterministic md5(content || i) stand-in
-    (the ffmpeg-backed sampler swaps in at the same seam)."""
-    import pandas as pd
-
-    def frame_digests(raw: bytes) -> list[str]:
-        if raw[:6] in (b"GIF87a", b"GIF89a"):
-            try:
-                decoded = gif_frames(raw)
-            except (NotImplementedError, ValueError):
-                decoded = []
-            if len(decoded) > 1:  # real animation: temporal sampling
-                return [
-                    hashlib.md5(
-                        decoded[f * len(decoded) // n_frames][3]
-                    ).hexdigest()
-                    for f in range(n_frames)
-                ]
+    def decode(i, content, media_type):
+        raw = bytes(content)
         try:
-            w, h, ch, pix = media_pixels(raw)
-        except NotImplementedError:
-            pix = None
-        if pix is not None:
-            stride = w * ch
-            return [
-                hashlib.md5(
-                    pix[(f * h // n_frames) * stride : ((f + 1) * h // n_frames)
-                        * stride]
-                ).hexdigest()
-                for f in range(n_frames)
-            ]
-        return [
-            hashlib.md5(raw + f.to_bytes(4, "big")).hexdigest()
-            for f in range(n_frames)
-        ]  # md5 stand-in: no stdlib pixel codec for this container
+            m = decoder(raw, media_type)
+        except Exception:
+            if on_error == "raise":
+                raise
+            return
+        yield (i, media_type, len(raw), m["width"], m["height"],
+               m["channels"], m["digest"])
 
-    def run(batches):
-        for pdf in batches:
-            vids = pdf[pdf["media_type"] == "video"]
-            out = {"id": [], "frame_idx": [], "frame_digest": []}
-            for i, c in zip(vids["id"], vids["content"]):
-                for f, dg in enumerate(frame_digests(bytes(c))):
-                    out["id"].append(i)
-                    out["frame_idx"].append(f)
-                    out["frame_digest"].append(dg)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)
+    return map_rows(
+        media.select("id", "content", "media_type"), decode, DECODE_SCHEMA
+    )
 
 
 RESIZE_SCHEMA = (
     "id long, media_type string, width int, height int, "
     "target_width int, target_height int, content binary"
 )
-
-FEATURE_SCHEMA = "id long, media_type string, features array<double>"
-
 
 def resample_nearest(
     pix: bytes, w: int, h: int, ch: int, tw: int, th: int
@@ -516,22 +464,9 @@ def _fit_dims(w: int, h: int, max_dim: int) -> tuple[int, int]:
 
 
 def resize_png(content: bytes, max_dim: int) -> tuple[bytes, int, int, int, int]:
-    """REAL aspect-preserving PNG resize (never upscales): PIL fast path
-    when installed, stdlib png_pixels -> nearest-neighbor -> png_encode
-    otherwise. Returns (new_png_bytes, orig_w, orig_h, new_w, new_h)."""
-    try:  # optional fast path; absent in this container
-        import io
-
-        from PIL import Image  # type: ignore
-
-        img = Image.open(io.BytesIO(content))
-        w, h = img.size
-        tw, th = _fit_dims(w, h, max_dim)
-        buf = io.BytesIO()
-        img.resize((tw, th)).save(buf, format="PNG")
-        return buf.getvalue(), w, h, tw, th
-    except ImportError:
-        pass
+    """REAL aspect-preserving PNG resize (never upscales), stdlib only:
+    png_pixels -> nearest-neighbor -> png_encode. Returns
+    (new_png_bytes, orig_w, orig_h, new_w, new_h)."""
     w, h, ch, pix = png_pixels(content)
     tw, th = _fit_dims(w, h, max_dim)
     if (tw, th) == (w, h):
@@ -539,133 +474,38 @@ def resize_png(content: bytes, max_dim: int) -> tuple[bytes, int, int, int, int]
     return png_encode(resample_nearest(pix, w, h, ch, tw, th), tw, th, ch), w, h, tw, th
 
 
-def resize_media(
-    media: DataFrame,
-    max_dim: int = 256,
-    decoder=fake_decoder,
-    pixel_tier: bool = True,
-) -> DataFrame:
+def resize_media(media: DataFrame, max_dim: int = 256) -> DataFrame:
     """Aspect-preserving resize (never upscale) over the media column.
-    PNG and GIF content take the REAL pixel tier by default: full
-    decode, nearest-neighbor resample, re-encode — the output `content`
-    column holds genuinely resized bytes (PIL fast path for PNG when
-    installed, stdlib codecs otherwise; GIF resamples the INDEX plane
-    so the palette carries over). A recognized container the stdlib
-    codec can't fully decode (16-bit/Adam7 PNG: NotImplementedError)
-    falls back to the metadata tier for THAT row instead of failing the
-    job. Other content — or everything, when ``pixel_tier=False``
-    (header-only metadata resize via ``decoder``) — keeps the metadata
-    tier: dims from ``decoder``, bytes passed through, target dims
-    computed — the seam where a PIL/ffmpeg-backed resampler plugs in.
-    Either way the Arrow bytes-in/bytes-out plumbing is identical."""
-    import pandas as pd
+    PNG and GIF content take the REAL pixel tier: full decode,
+    nearest-neighbor resample, re-encode — the output `content` column
+    holds genuinely resized bytes (GIF resamples the INDEX plane so the
+    palette carries over). A recognized container the stdlib codec
+    can't fully decode (16-bit/Adam7 PNG: NotImplementedError) falls
+    back to the metadata tier for THAT row instead of failing the job.
+    Other content keeps the metadata tier: dims from ``fake_decoder``,
+    bytes passed through, target dims computed."""
 
-    def run(batches):
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("id", "media_type", "width", "height",
-                     "target_width", "target_height", "content")}
-            for i, c, t in zip(pdf["id"], pdf["content"], pdf["media_type"]):
-                raw = bytes(c)
-                resized = None
-                if pixel_tier:
-                    try:
-                        if raw[:8] == b"\x89PNG\r\n\x1a\n":
-                            resized = resize_png(raw, max_dim)
-                        elif raw[:6] in (b"GIF87a", b"GIF89a"):
-                            resized = resize_gif(raw, max_dim)
-                    except NotImplementedError:
-                        resized = None  # codec capability gap -> metadata tier
-                if resized is not None:
-                    raw, w, h, tw, th = resized
-                else:
-                    m = decoder(raw, t)
-                    w, h = m["width"], m["height"]
-                    tw, th = _fit_dims(w, h, max_dim)
-                rows["id"].append(i)
-                rows["media_type"].append(t)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["target_width"].append(tw)
-                rows["target_height"].append(th)
-                rows["content"].append(raw)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-def pixel_features(content: bytes, dim: int = 16) -> list[float]:
-    """REAL image features from decoded pixels (PNG/GIF via
-    media_pixels): per-channel mean and std (up to 8 slots) followed by
-    a luminance histogram filling the remaining dims, unit-normalized.
-    Deterministic pure-integer accumulation before the final float
-    division, so the vector is bit-stable across platforms."""
-    import math
-
-    w, h, ch, pix = media_pixels(content)
-    n = w * h
-    sums = [0] * ch
-    sqs = [0] * ch
-    for i, b in enumerate(pix):
-        c = i % ch
-        sums[c] += b
-        sqs[c] += b * b
-    stats: list[float] = []
-    for c in range(min(ch, 4)):
-        mean = sums[c] / n
-        stats.append(mean / 255.0)
-        stats.append(math.sqrt(max(0.0, sqs[c] / n - mean * mean)) / 255.0)
-    nbins = max(1, dim - len(stats))
-    hist = [0] * nbins
-    if ch >= 3:
-        for i in range(n):
-            lum = (pix[i * ch] + pix[i * ch + 1] + pix[i * ch + 2]) // 3
-            hist[lum * nbins // 256] += 1
-    else:
-        for i in range(n):
-            hist[pix[i * ch] * nbins // 256] += 1
-    v = (stats + [b / n for b in hist])[:dim]
-    v += [0.0] * (dim - len(v))
-    norm = math.sqrt(sum(x * x for x in v)) or 1.0
-    return [x / norm for x in v]
-
-
-def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
-    """Feature vector per media object, unit-norm so downstream cosine
-    ops behave. PNG content gets the REAL pixel tier (channel moments +
-    luminance histogram over actually-decoded pixels); other payloads
-    get the deterministic md5-expansion stand-in (the seam where an
-    image/audio encoder plugs in). Byte-identical payloads get identical
-    vectors, so a cosine threshold over the output finds media near-dups."""
-    import math
-
-    import pandas as pd
-
-    def embed(raw: bytes) -> list[float]:
+    def resize(i, content, media_type):
+        raw = bytes(content)
+        resized = None
         try:
-            return pixel_features(raw, dim)
+            if raw[:8] == b"\x89PNG\r\n\x1a\n":
+                resized = resize_png(raw, max_dim)
+            elif raw[:6] in (b"GIF87a", b"GIF89a"):
+                resized = resize_gif(raw, max_dim)
         except NotImplementedError:
-            pass  # no stdlib pixel codec for this container
-        vals = []
-        seed = raw
-        while len(vals) < dim:
-            seed = hashlib.md5(seed).digest()
-            vals.extend(b / 255.0 - 0.5 for b in seed)
-        v = vals[:dim]
-        n = math.sqrt(sum(x * x for x in v)) or 1.0
-        return [x / n for x in v]
+            resized = None  # codec capability gap -> metadata tier
+        if resized is not None:
+            raw, w, h, tw, th = resized
+        else:
+            m = fake_decoder(raw, media_type)
+            w, h = m["width"], m["height"]
+            tw, th = _fit_dims(w, h, max_dim)
+        yield (i, media_type, w, h, tw, th, raw)
 
-    def run(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(),
-                    "media_type": pdf["media_type"].to_numpy(),
-                    "features": [embed(bytes(c)) for c in pdf["content"]],
-                }
-            )
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return map_rows(
+        media.select("id", "content", "media_type"), resize, RESIZE_SCHEMA
+    )
 
 
 def media_stats(media: DataFrame) -> DataFrame:

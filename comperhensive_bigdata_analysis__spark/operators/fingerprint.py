@@ -76,10 +76,3 @@ def fingerprint(
         F.max("__sig").alias("max_sig"),
     )
     return folded
-
-
-def fingerprints_match(a: DataFrame, b: DataFrame) -> bool:
-    """Driver-side equality of two (small) fingerprint frames."""
-    ka = {tuple(r) for r in a.collect()}
-    kb = {tuple(r) for r in b.collect()}
-    return ka == kb

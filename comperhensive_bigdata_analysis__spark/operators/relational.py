@@ -137,70 +137,3 @@ def coalesce_intervals(
         .groupBy(key, "island")
         .agg(F.min(start_col).alias(start_col), F.max(end_col).alias(end_col))
     )
-
-
-def funnel_counts(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    within_seconds: int | None = None,
-) -> DataFrame:
-    """Strict-sequence funnel over an arbitrary step list: how many
-    users reached step k via events in order (each step strictly after
-    the previous one; optionally all within ``within_seconds`` of that
-    user's FIRST step). Returns (step_idx, step, n_users).
-
-    Generalizes the fixed 3-step plans (funnel_view_click_purchase,
-    funnel_within_1h) into the engine API. Per stage: one filtered scan
-    joined to the survivors-so-far on the user key, reduced to one row
-    per user (min qualifying ts) before the next join — so the joined
-    relation never exceeds |users| rows regardless of event volume.
-    EAGER API: unlike the purely-lazy plan builders, calling this
-    executes the funnel immediately (each stage's survivor set is
-    cached and counted before the next stage builds on it), so the
-    whole funnel costs one events scan per stage (O(S)), never O(S^2)
-    re-execution of the prefix chain; driver traffic is S scalar
-    counts. Cached stages are unpersisted even if a stage fails.
-    """
-    if not steps:
-        raise ValueError("funnel_counts: empty step list")
-    cur = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("_t"))
-    )
-    if within_seconds is not None:
-        cur = cur.withColumn(
-            "_deadline",
-            (
-                F.col("_t").cast("timestamp").cast("double")
-                + F.lit(float(within_seconds))
-            ).cast("timestamp"),
-        )
-    cur = cur.persist()
-    prev = None
-    try:
-        counts = [cur.count()]
-        for step in steps[1:]:
-            nxt = events.filter(F.col(type_col) == step).select(
-                user_col, F.col(ts_col).alias("_ts_next")
-            )
-            joined = nxt.join(cur, user_col).filter(F.col("_ts_next") > F.col("_t"))
-            if within_seconds is not None:
-                joined = joined.filter(F.col("_ts_next") <= F.col("_deadline"))
-            agg = [F.min("_ts_next").alias("_t")]
-            if within_seconds is not None:
-                agg.append(F.first("_deadline").alias("_deadline"))
-            prev, cur = cur, joined.groupBy(user_col).agg(*agg).persist()
-            counts.append(cur.count())  # materializes cur's cache
-            prev.unpersist()
-            prev = None
-    finally:
-        cur.unpersist()
-        if prev is not None:
-            prev.unpersist()
-    spark = events.sparkSession
-    rows = [(i, step, n) for i, (step, n) in enumerate(zip(steps, counts))]
-    return spark.createDataFrame(rows, "step_idx int, step string, n_users bigint")

@@ -1,19 +1,27 @@
 """Multimodal plans over binary media columns.
 
 multimodal_meta / media_dedup_census pin the pure-JVM metadata pass
-(documents' bytes standing in for media payloads). media_real_decode_
-census goes further: it synthesizes REAL PNG files in the executors
-(stdlib encoder, multimodal.png_bytes), pushes them through the
-Arrow-batched mapInPandas decode path with the REAL header codec
-(multimodal.codec_decoder), and hash-checks the recovered dimensions
-against an arithmetic oracle — so the driver verifies an actual
-image-format round trip, not a fake."""
+(documents' bytes standing in for media payloads). Every other plan
+synthesizes REAL media files in the executors (stdlib encoders),
+decodes them back through the real codecs and checks the recovered
+dimensions, pixels or samples against an arithmetic oracle — so the
+driver verifies an actual format round trip, not a fake. Each per-row
+step is one ``multimodal.map_rows`` pass; the twin plans
+(``wav_audio_stats`` / ``_np``, ``jpeg_pixel_stats`` / ``_np``) share
+their synthesize-and-encode body and differ only in the decode-and-fold
+step."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..multimodal import attach_fake_media, codec_decoder, decode_media, media_stats
+from ..multimodal import (
+    attach_fake_media,
+    codec_decoder,
+    decode_media,
+    map_rows,
+    media_stats,
+)
 from ..sources.tables import load_table
 from . import ORACLES, plan
 
@@ -28,36 +36,37 @@ _PIX_W = "16 + doc_id % 17"
 _PIX_H = "9 + doc_id % 13"
 _PIX_B = "doc_id % 64"
 
+_MEDIA_SCHEMA = "id long, content binary, media_type string"
+
+#: The 4-colour palette of the GIF plans: colour c = (10c+1, 20c+2, 30c+3).
+_GIF_PALETTE = bytes(
+    v for c in range(4) for v in (10 * c + 1, 20 * c + 2, 30 * c + 3)
+)
+
+
+def _rgb_sums(pix: bytes) -> tuple[int, int, int]:
+    """Per-channel sums of an interleaved RGB buffer."""
+    return sum(pix[0::3]), sum(pix[1::3]), sum(pix[2::3])
+
 
 def _gradient_media(spark, sf_dir):
     """documents -> (id, content=real PNG bytes, media_type) with the
     deterministic gradient pixels above, encoded by the stdlib
     png_encode (cycling through all five PNG filter types)."""
-    import pandas as pd
-
     from ..multimodal import png_encode
 
+    def make(i):
+        w, h, b = 16 + i % 17, 9 + i % 13, i % 64
+        pix = bytes(
+            v
+            for y in range(h)
+            for x in range(w)
+            for v in (b + x + y, 2 * b + x, b + 2 * y)
+        )
+        yield (i, png_encode(pix, w, h, 3), "image")
+
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def make(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            content = []
-            for i in ids:
-                i = int(i)
-                w, h, b = 16 + i % 17, 9 + i % 13, i % 64
-                pix = bytes(
-                    v
-                    for y in range(h)
-                    for x in range(w)
-                    for v in (b + x + y, 2 * b + x, b + 2 * y)
-                )
-                content.append(png_encode(pix, w, h, 3))
-            yield pd.DataFrame(
-                {"id": ids, "content": content, "media_type": ["image"] * len(ids)}
-            )
-
-    return d.mapInPandas(make, schema="id long, content binary, media_type string")
+    return map_rows(d, make, _MEDIA_SCHEMA)
 
 
 @plan(
@@ -153,39 +162,24 @@ def media_dedup_census(spark, sf_dir):
 def media_real_decode_census(spark, sf_dir):
     """Real image round trip, driver-verified: per document, ENCODE a
     genuine PNG file (stdlib zlib encoder; dims are a pure function of
-    doc_id), DECODE it back through the Arrow-batched mapInPandas path
-    with the real header codec, and census the recovered dimensions.
+    doc_id), DECODE it back through decode_media with the real
+    header codec, and census the recovered dimensions.
     The oracle computes the same dims arithmetically, so a hash match
     proves the PNG bytes really carried the dimensions through
     encode -> binary column -> Arrow batch -> header parse.
 
     100 TB: embarrassingly parallel map (bytes never shuffle; the only
     exchange carries the 7-row census); Arrow batches bound Python
-    memory; this is the exact plumbing a PIL-backed pixel decoder
-    inherits by swapping `decoder=`.
+    memory; a full pixel decoder inherits this plumbing by swapping
+    `decoder=`.
     """
-    import pandas as pd
-
     from ..multimodal import png_bytes
 
+    def make(i):
+        yield (i, png_bytes(8 + i % 97, 8 + i % 53), "image")
+
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def make(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "content": [
-                        png_bytes(8 + int(i) % 97, 8 + int(i) % 53)
-                        for i in ids
-                    ],
-                    "media_type": ["image"] * len(ids),
-                }
-            )
-
-    media = d.mapInPandas(make, schema="id long, content binary, media_type string")
-    decoded = decode_media(media, decoder=codec_decoder)
+    decoded = decode_media(map_rows(d, make, _MEDIA_SCHEMA), decoder=codec_decoder)
     return (
         decoded.groupBy(F.expr("width div 16").alias("w_bucket"))
         .agg(
@@ -237,35 +231,19 @@ def media_pixel_stats(spark, sf_dir):
     100 TB: embarrassingly parallel map over the media column (bytes
     never shuffle; the only exchange carries one stats row per image);
     Arrow batches bound Python memory. The per-byte Python unfilter is
-    the correctness tier — swap PIL in via the same seam for throughput.
+    the correctness tier; a faster codec plugs in at the same seam.
     """
-    import pandas as pd
-
     from ..multimodal import png_pixels
 
-    media = _gradient_media(spark, sf_dir)
+    def stats(i, content, _media_type):
+        w, h, _ch, pix = png_pixels(bytes(content))
+        yield (i, w, h, *_rgb_sums(pix))
 
-    def stats(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "sum_r": [], "sum_g": [], "sum_b": []}
-            for i, c in zip(pdf["id"], pdf["content"]):
-                w, h, ch, pix = png_pixels(bytes(c))
-                sums = [0, 0, 0]
-                for j, v in enumerate(pix):
-                    sums[j % 3] += v
-                out["doc_id"].append(i)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["sum_r"].append(sums[0])
-                out["sum_g"].append(sums[1])
-                out["sum_b"].append(sums[2])
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
+    return map_rows(
+        _gradient_media(spark, sf_dir),
         stats,
-        schema="doc_id long, width int, height int, "
-               "sum_r bigint, sum_g bigint, sum_b bigint",
+        "doc_id long, width int, height int, "
+        "sum_r bigint, sum_g bigint, sum_b bigint",
     ).orderBy("doc_id")
 
 
@@ -302,7 +280,7 @@ def media_resize_roundtrip(spark, sf_dir):
     (integer round-half-up — see multimodal._fit_dims; every source
     image here exceeds max_dim, so all really resample).
 
-    100 TB: two chained NARROW mapInPandas stages — the second decode
+    100 TB: two chained NARROW map_rows stages — the second decode
     carries the source dims through the Python stage itself, so there
     is no row-identity join at all (the previous id equi-join both
     added an exchange and multiplied rows 9x under duplicated ids —
@@ -310,32 +288,18 @@ def media_resize_roundtrip(spark, sf_dir):
     is the tiny census aggregate. This is the standard image-corpus
     normalization pass (downscale-for-training) end to end.
     """
-    import pandas as pd
-
     from ..multimodal import pixel_decoder, resize_media
 
-    media = _gradient_media(spark, sf_dir)
-    resized = resize_media(media, max_dim=12)
+    def redecode(content, media_type, src_w, src_h):
+        # (resized bytes, src dims in) -> (measured target dims, src dims out)
+        m = pixel_decoder(bytes(content), media_type)
+        yield (m["width"], m["height"], src_w, src_h)
 
-    def redecode(batches):
-        # per-row passthrough: (resized bytes, src dims in) ->
-        # (measured target dims, src dims out)
-        for pdf in batches:
-            out = {"target_width": [], "target_height": [],
-                   "src_w": [], "src_h": []}
-            for c, t, sw, sh in zip(
-                pdf["content"], pdf["media_type"], pdf["width"], pdf["height"]
-            ):
-                m = pixel_decoder(bytes(c), t)
-                out["target_width"].append(int(m["width"]))
-                out["target_height"].append(int(m["height"]))
-                out["src_w"].append(int(sw))
-                out["src_h"].append(int(sh))
-            yield pd.DataFrame(out)
-
-    redecoded = resized.select("content", "media_type", "width", "height").mapInPandas(
+    resized = resize_media(_gradient_media(spark, sf_dir), max_dim=12)
+    redecoded = map_rows(
+        resized.select("content", "media_type", "width", "height"),
         redecode,
-        schema="target_width int, target_height int, src_w int, src_h int",
+        "target_width int, target_height int, src_w int, src_h int",
     )
     return (
         redecoded.groupBy("target_width", "target_height")
@@ -399,39 +363,21 @@ def gif_pixel_stats(spark, sf_dir):
     100 TB: embarrassingly parallel map over the media column (bytes
     never shuffle; the only exchange carries one stats row per image);
     Arrow batches bound Python memory. The pure-Python LZW is the
-    correctness tier; PIL swaps in at the media_pixels seam.
+    correctness tier; a faster codec plugs in at the media_pixels seam.
     """
-    import pandas as pd
-
     from ..multimodal import gif_encode, gif_pixels
 
+    def stats(i):
+        w, h = 4 + i % 29, 4 + i % 17
+        idx = bytes(j % 4 for j in range(w * h))
+        gw, gh, _ch, pix = gif_pixels(gif_encode(w, h, idx, _GIF_PALETTE))
+        yield (i, gw, gh, *_rgb_sums(pix))
+
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    palette = bytes(
-        v for c in range(4) for v in (10 * c + 1, 20 * c + 2, 30 * c + 3)
-    )
-
-    def stats(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "sum_r": [], "sum_g": [], "sum_b": []}
-            for i in pdf["doc_id"].astype("int64"):
-                w, h = 4 + int(i) % 29, 4 + int(i) % 17
-                idx = bytes(j % 4 for j in range(w * h))
-                gw, gh, _ch, pix = gif_pixels(gif_encode(w, h, idx, palette))
-                sums = [0, 0, 0]
-                for j, b in enumerate(pix):
-                    sums[j % 3] += b
-                out["doc_id"].append(int(i))
-                out["width"].append(gw)
-                out["height"].append(gh)
-                out["sum_r"].append(sums[0])
-                out["sum_g"].append(sums[1])
-                out["sum_b"].append(sums[2])
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(
+    return map_rows(
+        d,
         stats,
-        schema="doc_id long, width int, height int, "
+        "doc_id long, width int, height int, "
         "sum_r long, sum_g long, sum_b long",
     ).orderBy("doc_id")
 
@@ -453,6 +399,27 @@ def gif_pixel_stats(spark, sf_dir):
 
 _WAV_N = "32 + doc_id % 41"
 _WAV_B = "doc_id % 64"
+
+_WAV_SCHEMA = (
+    "doc_id long, n_samples long, sum_amp long, "
+    "sum_abs long, sum_sq long, peak long"
+)
+
+
+def _wav_audio_stats(spark, sf_dir, fold):
+    """The wav_audio_stats twins' shared body: per row, synthesize the
+    closed-form signal above, encode it as a real 16-bit mono WAV and
+    emit (doc_id, *fold(wav_bytes)) — fold decodes and returns
+    (n_samples, sum_amp, sum_abs, sum_sq, peak)."""
+    from ..multimodal import wav_encode
+
+    def stats(i):
+        n, b = 32 + i % 41, i % 64
+        sig = [((b * 37 + k * 17) % 2048) - 1024 for k in range(n)]
+        yield (i, *fold(wav_encode(sig, sample_rate=8000)))
+
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
+    return map_rows(d, stats, _WAV_SCHEMA).orderBy("doc_id")
 
 
 @plan(
@@ -495,85 +462,41 @@ def wav_audio_stats(spark, sf_dir):
     100 TB: embarrassingly parallel map over the audio column (bytes
     never shuffle; the only exchange carries one stats row per clip);
     Arrow batches bound Python memory. The per-sample Python fold is
-    the correctness tier — a numpy frombuffer tier drops in at the
-    same media_samples seam for throughput.
+    the correctness tier; wav_audio_stats_np is its numpy twin.
     """
-    import pandas as pd
+    from ..multimodal import media_samples
 
-    from ..multimodal import media_samples, wav_encode
+    def fold(wav):
+        _ch, _fr, _sw, dec = media_samples(wav)
+        return (len(dec), sum(dec), sum(abs(v) for v in dec),
+                sum(v * v for v in dec), max(dec))
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def stats(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "n_samples": [], "sum_amp": [],
-                   "sum_abs": [], "sum_sq": [], "peak": []}
-            for i in pdf["doc_id"].astype("int64"):
-                n, b = 32 + int(i) % 41, int(i) % 64
-                sig = [((b * 37 + k * 17) % 2048) - 1024 for k in range(n)]
-                _ch, _fr, _sw, dec = media_samples(
-                    wav_encode(sig, sample_rate=8000)
-                )
-                out["doc_id"].append(int(i))
-                out["n_samples"].append(len(dec))
-                out["sum_amp"].append(sum(dec))
-                out["sum_abs"].append(sum(abs(s) for s in dec))
-                out["sum_sq"].append(sum(s * s for s in dec))
-                out["peak"].append(max(dec))
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(
-        stats,
-        schema="doc_id long, n_samples long, sum_amp long, "
-        "sum_abs long, sum_sq long, peak long",
-    ).orderBy("doc_id")
+    return _wav_audio_stats(spark, sf_dir, fold)
 
 
 @plan("wav_audio_stats_np", ORACLES["wav_audio_stats"])
 def wav_audio_stats_np(spark, sf_dir):
     """The numpy throughput tier of wav_audio_stats (VERDICT r5 ask
-    #3): identical output contract and the SAME DuckDB oracle, but the
-    decode is one ``np.frombuffer`` view (multimodal.wav_samples_np)
-    and the amplitude folds are vectorized reductions instead of
-    per-sample Python. Tier equality is additionally pinned by
-    tests/test_multimodal.py.
+    #3): identical output contract, synthesize-and-encode body and
+    DuckDB oracle, but the decode is one ``np.frombuffer`` view
+    (multimodal.wav_samples_np) and the amplitude folds are vectorized
+    reductions instead of per-sample Python. Tier equality is
+    additionally pinned by tests/test_multimodal.py.
 
     100 TB: same shape as the correctness tier — embarrassingly
     parallel map, bytes never shuffle — with the per-sample Python
-    interpreter cost removed from the hot loop.
+    interpreter cost removed from the decode-and-fold step.
     """
-    import pandas as pd
+    from ..multimodal import media_samples_np
 
-    from ..multimodal import media_samples_np, wav_encode
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def stats(batches):
+    def fold(wav):
         import numpy as np
 
-        for pdf in batches:
-            out = {"doc_id": [], "n_samples": [], "sum_amp": [],
-                   "sum_abs": [], "sum_sq": [], "peak": []}
-            for i in pdf["doc_id"].astype("int64"):
-                n, b = 32 + int(i) % 41, int(i) % 64
-                sig = ((b * 37 + np.arange(n, dtype=np.int64) * 17)
-                       % 2048) - 1024
-                _ch, _fr, _sw, dec = media_samples_np(
-                    wav_encode(sig.tolist(), sample_rate=8000)
-                )
-                out["doc_id"].append(int(i))
-                out["n_samples"].append(int(dec.size))
-                out["sum_amp"].append(int(dec.sum()))
-                out["sum_abs"].append(int(np.abs(dec).sum()))
-                out["sum_sq"].append(int((dec * dec).sum()))
-                out["peak"].append(int(dec.max()))
-            yield pd.DataFrame(out)
+        _ch, _fr, _sw, dec = media_samples_np(wav)
+        return (int(dec.size), int(dec.sum()), int(np.abs(dec).sum()),
+                int((dec * dec).sum()), int(dec.max()))
 
-    return d.mapInPandas(
-        stats,
-        schema="doc_id long, n_samples long, sum_amp long, "
-        "sum_abs long, sum_sq long, peak long",
-    ).orderBy("doc_id")
+    return _wav_audio_stats(spark, sf_dir, fold)
 
 
 # ---------------------------------------------------------------------------
@@ -596,6 +519,32 @@ def wav_audio_stats_np(spark, sf_dir):
 _JPG_BW = "1 + doc_id % 5"   # blocks per row
 _JPG_BH = "1 + doc_id % 3"   # blocks per column
 _JPG_B = "doc_id % 64"
+
+_JPG_SCHEMA = "doc_id long, width int, height int, sum_lum long"
+
+
+def _jpeg_pixel_stats(d, fold):
+    """The jpeg_pixel_stats twins' shared body: per row of ``d``
+    (doc_id), synthesize the constant-block grayscale image above,
+    encode it as a real baseline JPEG and emit (doc_id,
+    *fold(jpeg_bytes)) — fold decodes and returns (width, height,
+    pixel sum)."""
+    from ..jpegcodec import QTABLE_FLAT, jpeg_encode
+
+    def stats(i):
+        bw, bh, b = 1 + i % 5, 1 + i % 3, i % 64
+        w, h = bw * 8, bh * 8
+        pix = bytearray(w * h)
+        for by in range(bh):
+            for bx in range(bw):
+                val = (b + 7 * bx + 11 * by) % 256
+                for y in range(8):
+                    row = (by * 8 + y) * w + bx * 8
+                    pix[row : row + 8] = bytes([val]) * 8
+        enc = jpeg_encode(bytes(pix), w, h, channels=1, qtable=QTABLE_FLAT)
+        yield (i, *fold(enc))
+
+    return map_rows(d, stats, _JPG_SCHEMA).orderBy("doc_id")
 
 
 @plan(
@@ -630,117 +579,58 @@ _JPG_B = "doc_id % 64"
     ORDER BY doc_id
     """,
 )
-def jpeg_pixel_stats(spark, sf_dir, sample_mod=None):
+def jpeg_pixel_stats(spark, sf_dir):
     """See module comment above — real baseline-JPEG entropy round
     trip verified against a closed-form oracle.
 
     100 TB: embarrassingly parallel map over the media column (bytes
     never shuffle; the only exchange carries one stats row per image);
     Arrow batches bound Python memory. The pure-Python DCT is the
-    correctness tier — jpeg_pixel_stats_np / PIL drop in at the
-    media_pixels seam for throughput. ``sample_mod`` (bench-only,
-    never set by the oracle gate) keeps only doc_id % mod == 0 so the
-    bench row pair costs seconds, not minutes.
+    correctness tier; jpeg_pixel_stats_np is its numpy twin.
     """
-    import pandas as pd
-
-    from ..jpegcodec import QTABLE_FLAT, jpeg_encode
     from ..multimodal import media_pixels
     from ..sources.tables import fan_out
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    if sample_mod:
-        d = d.filter(F.col("doc_id") % sample_mod == 0)
-    # fan_out: the pure-Python encode/entropy-decode below is by far
-    # the heaviest per-row Python work in the engine, and on a
-    # one-row-group input the whole mapInPandas runs in ONE Python
-    # worker (guide §2.5). No-op on split-capable layouts. The np
-    # tier measures neutral (its decode is too fast to amortize the
+    def fold(jpeg):
+        w, h, _ch, dec = media_pixels(jpeg)
+        return w, h, sum(dec)
+
+    # fan_out: the pure-Python encode/entropy-decode is by far the
+    # heaviest per-row Python work in the engine, and on a
+    # one-row-group input the whole map runs in ONE Python worker
+    # (guide §2.5). No-op on split-capable layouts. The np tier
+    # measures neutral (its decode is too fast to amortize the
     # exchange), so only this correctness tier fans out. Measured
-    # 1.90x interleaved at sf0.1/sample_mod=10.
-    d = fan_out(d)
-
-    def stats(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "sum_lum": []}
-            for i in pdf["doc_id"].astype("int64"):
-                bw, bh, b = 1 + int(i) % 5, 1 + int(i) % 3, int(i) % 64
-                w, h = bw * 8, bh * 8
-                pix = bytearray(w * h)
-                for by in range(bh):
-                    for bx in range(bw):
-                        val = (b + 7 * bx + 11 * by) % 256
-                        for y in range(8):
-                            row = (by * 8 + y) * w + bx * 8
-                            pix[row : row + 8] = bytes([val]) * 8
-                enc = jpeg_encode(bytes(pix), w, h, channels=1,
-                                  qtable=QTABLE_FLAT)
-                gw, gh, _ch, dec = media_pixels(enc)
-                out["doc_id"].append(int(i))
-                out["width"].append(gw)
-                out["height"].append(gh)
-                out["sum_lum"].append(sum(dec))
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, sum_lum long",
-    ).orderBy("doc_id")
+    # 1.90x interleaved at sf0.1 on a 1-in-10 doc_id sample.
+    d = fan_out(load_table(spark, sf_dir, "documents").select("doc_id"))
+    return _jpeg_pixel_stats(d, fold)
 
 
 @plan("jpeg_pixel_stats_np", ORACLES["jpeg_pixel_stats"])
-def jpeg_pixel_stats_np(spark, sf_dir, sample_mod=None):
+def jpeg_pixel_stats_np(spark, sf_dir):
     """The numpy throughput tier of jpeg_pixel_stats (VERDICT r5 ask
-    #3): identical output contract and the SAME DuckDB oracle, but the
-    reconstruction runs through jpegcodec.jpeg_pixels_np — batched
-    8x8-matmul IDCT over all blocks at once, vectorized dequantize /
-    placement / clamp — and the pixel fold is one np.frombuffer sum.
-    The entropy decode stays shared with the correctness tier (huffman
-    is sequential by nature). Bit-identical output is pinned by
-    tests/test_multimodal.py.
+    #3): identical output contract, synthesize-and-encode body and
+    DuckDB oracle, but the reconstruction runs through
+    jpegcodec.jpeg_pixels_np — batched 8x8-matmul IDCT over all blocks
+    at once, vectorized dequantize / placement / clamp — and the pixel
+    fold is one np.frombuffer sum. The entropy decode stays shared with
+    the correctness tier (huffman is sequential by nature). Bit-identical
+    output is pinned by tests/test_multimodal.py.
 
     100 TB: embarrassingly parallel map over the media column (bytes
     never shuffle); the O(pixels) Python interpreter cost is gone from
     the IDCT and fold hot loops.
     """
-    import pandas as pd
+    from ..jpegcodec import jpeg_pixels_np
 
-    from ..jpegcodec import QTABLE_FLAT, jpeg_encode, jpeg_pixels_np
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    if sample_mod:
-        d = d.filter(F.col("doc_id") % sample_mod == 0)
-
-    def stats(batches):
+    def fold(jpeg):
         import numpy as np
 
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "sum_lum": []}
-            for i in pdf["doc_id"].astype("int64"):
-                bw, bh, b = 1 + int(i) % 5, 1 + int(i) % 3, int(i) % 64
-                w, h = bw * 8, bh * 8
-                pix = bytearray(w * h)
-                for by in range(bh):
-                    for bx in range(bw):
-                        val = (b + 7 * bx + 11 * by) % 256
-                        for y in range(8):
-                            row = (by * 8 + y) * w + bx * 8
-                            pix[row : row + 8] = bytes([val]) * 8
-                enc = jpeg_encode(bytes(pix), w, h, channels=1,
-                                  qtable=QTABLE_FLAT)
-                gw, gh, _ch, dec = jpeg_pixels_np(enc)
-                out["doc_id"].append(int(i))
-                out["width"].append(gw)
-                out["height"].append(gh)
-                out["sum_lum"].append(
-                    int(np.frombuffer(dec, dtype=np.uint8).sum())
-                )
-            yield pd.DataFrame(out)
+        w, h, _ch, dec = jpeg_pixels_np(jpeg)
+        return w, h, int(np.frombuffer(dec, dtype=np.uint8).sum())
 
-    return d.mapInPandas(
-        stats,
-        schema="doc_id long, width int, height int, sum_lum long",
-    ).orderBy("doc_id")
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
+    return _jpeg_pixel_stats(d, fold)
 
 
 # ---------------------------------------------------------------------------
@@ -805,46 +695,25 @@ def gif_video_frames(spark, sf_dir):
     100 TB: embarrassingly parallel map over the media column with a
     bounded row explosion (F <= 4 frame rows per clip — the shape a
     real frame sampler has); bytes never shuffle. The per-pixel Python
-    compositor is the correctness tier; ffmpeg drops in at the
-    gif_frames seam for throughput.
+    compositor is the correctness tier; a faster decoder plugs in at
+    the gif_frames seam.
     """
-    import pandas as pd
-
     from ..multimodal import gif_encode_animated, gif_frames
 
+    def frames(i):
+        w, h, nf = 4 + i % 9, 4 + i % 7, 2 + i % 3
+        enc = gif_encode_animated(
+            w, h,
+            [bytes((j + f) % 4 for j in range(w * h)) for f in range(nf)],
+            _GIF_PALETTE,
+        )
+        for f, (gw, gh, _ch, rgb) in enumerate(gif_frames(enc)):
+            yield (i, f, gw, gh, *_rgb_sums(rgb))
+
     d = load_table(spark, sf_dir, "documents").select("doc_id")
-    palette = bytes(
-        v for c in range(4) for v in (10 * c + 1, 20 * c + 2, 30 * c + 3)
-    )
-
-    def stats(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "width": [], "height": [],
-                   "sum_r": [], "sum_g": [], "sum_b": []}
-            for i in pdf["doc_id"].astype("int64"):
-                w, h, nf = 4 + int(i) % 9, 4 + int(i) % 7, 2 + int(i) % 3
-                frames = [
-                    bytes((j + f) % 4 for j in range(w * h))
-                    for f in range(nf)
-                ]
-                decoded = gif_frames(
-                    gif_encode_animated(w, h, frames, palette)
-                )
-                for f, (gw, gh, _ch, rgb) in enumerate(decoded):
-                    sums = [0, 0, 0]
-                    for j, b in enumerate(rgb):
-                        sums[j % 3] += b
-                    out["doc_id"].append(int(i))
-                    out["frame_idx"].append(f)
-                    out["width"].append(gw)
-                    out["height"].append(gh)
-                    out["sum_r"].append(sums[0])
-                    out["sum_g"].append(sums[1])
-                    out["sum_b"].append(sums[2])
-            yield pd.DataFrame(out)
-
-    return d.mapInPandas(
-        stats,
-        schema="doc_id long, frame_idx long, width int, height int, "
+    return map_rows(
+        d,
+        frames,
+        "doc_id long, frame_idx long, width int, height int, "
         "sum_r long, sum_g long, sum_b long",
     ).orderBy("doc_id", "frame_idx")

@@ -2219,44 +2219,6 @@ def bigram_lm_surprisal(spark, sf_dir):
     )
 
 
-def ccnet_bucket_by_thresholds(spark, sf_dir, accuracy: int = 10000):
-    """The 100 TB tier of ccnet_quality_buckets: instead of sorting each
-    language partition for an exact NTILE, compute the two tercile
-    THRESHOLDS per language with approx_percentile (one aggregate, no
-    sort) and bucket every document by comparison — map-side, skew-
-    immune. Not oracled (approx_percentile is estimation, not a
-    cross-engine-replayable expression); pinned instead by the parity
-    test against the exact-NTILE plan (tests/test_training_plans.py).
-
-    Returns the same (lang, bucket, n_docs, n_tokens) shape minus the
-    mean column; bucket boundaries may differ from exact terciles by
-    the sketch error, which the test bounds.
-    """
-    s = unigram_lm_surprisal(spark, sf_dir)
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    j = s.join(d, "doc_id")
-    th = j.groupBy("lang").agg(
-        F.percentile_approx(
-            "avg_surprisal", [1.0 / 3.0, 2.0 / 3.0], accuracy
-        ).alias("th")
-    )
-    b = j.join(F.broadcast(th), "lang").withColumn(
-        "bucket",
-        F.when(F.col("avg_surprisal") <= F.col("th")[0], F.lit(1))
-        .when(F.col("avg_surprisal") <= F.col("th")[1], F.lit(2))
-        .otherwise(F.lit(3))
-        .cast("long"),
-    )
-    return (
-        b.groupBy("lang", "bucket")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-        )
-        .orderBy("lang", "bucket")
-    )
-
-
 # ---------------------------------------------------------------------------
 # Weight-of-evidence / information-value stats — the classic
 # credit-scoring feature-engineering op (Siddiqi 2006): for each

@@ -163,7 +163,8 @@ def ingest_csv(
     if parquet_dir:
         out = os.path.join(parquet_dir, name)
         df.write.mode("overwrite").parquet(out)
-        df = spark.read.parquet(out)
+        # read back with the schema in hand: no schema-inference job
+        df = spark.read.schema(df.schema).parquet(out)
     return register(spark, df, name)
 
 

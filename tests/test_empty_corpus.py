@@ -94,8 +94,15 @@ REPRESENTATIVES = [
     "pack_context_windows",
     "dsir_importance_weights",
     "unigram_lm_surprisal",
+    "jpeg_pixel_stats",
     "jpeg_pixel_stats_np",
     "wav_audio_stats",
+    "wav_audio_stats_np",
+    "media_pixel_stats",
+    "gif_pixel_stats",
+    "gif_video_frames",
+    "media_resize_roundtrip",
+    "media_real_decode_census",
     "csv_roundtrip_stats",
     "corpus_clean_pipeline",
     "grouped_exact_median",

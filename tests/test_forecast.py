@@ -111,3 +111,25 @@ def test_seasonal_is_default_without_prophet(spark):
     a = sorted(map(tuple, grouped_forecast(df, "group", horizon=5).collect()))
     b = sorted(map(tuple, grouped_forecast(df, "group", horizon=5).collect()))
     assert a == b and len(a) == 5
+
+
+def test_band_honours_interval_width(spark):
+    """The closed-form tiers' band is z * resid_sd with z the normal
+    quantile of the central interval_width mass: at 0.5 the half-width
+    is 0.6745 / 1.96 of the half-width at 0.95, not the 95% band."""
+    import pytest
+
+    base = dt.date(2024, 1, 1)
+    hist = [("g", base + dt.timedelta(days=i), 10.0 + i + (i % 3)) for i in range(30)]
+    df = spark.createDataFrame(hist, "group string, ds date, y double")
+
+    def half_width(w: float) -> float:
+        r = grouped_forecast(
+            df, "group", model="linear", horizon=1, interval_width=w
+        ).first()
+        return (r["yhat_upper"] - r["yhat_lower"]) / 2
+
+    assert half_width(0.5) / half_width(0.95) == pytest.approx(0.6745 / 1.96, rel=1e-4)
+    for bad in (0.0, 1.0, 1.5):
+        with pytest.raises(ValueError):
+            grouped_forecast(df, "group", model="linear", interval_width=bad)

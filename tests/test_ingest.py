@@ -352,6 +352,19 @@ def test_int_width_rule_adds_no_ingest_job(spark, tmp_path):
     assert counts["ints"] == counts["fracs"], counts
 
 
+def test_parquet_read_back_adds_only_the_write_job(spark, tmp_path):
+    """Writing the ingested table to parquet costs exactly one more
+    Spark job (the write): the read-back reuses the schema the ingest
+    already holds instead of running a schema-inference job, and
+    returns the same rows and types."""
+    path = _plants_csv(tmp_path / "plants.csv", n=200)
+    plain, n_plain = _ingest_counting_jobs(spark, path, None)
+    written, n_written = _ingest_counting_jobs(spark, path, str(tmp_path / "pq"))
+    assert n_written == n_plain + 1, (n_plain, n_written)
+    assert written.dtypes == plain.dtypes
+    assert sorted(map(tuple, written.collect())) == sorted(map(tuple, plain.collect()))
+
+
 def test_small_ingested_table_runs_a_query_as_one_job(spark, tmp_path):
     """A table under spark.sql.files.openCostInBytes registers as one
     partition, so GROUP BY + ORDER BY plan no exchange: one job."""

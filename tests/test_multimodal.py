@@ -1,5 +1,5 @@
 """Multimodal tests: schemas, determinism, batch behavior of the
-decode / frame-sample / stats tiers; the REAL stdlib header codec
+decode / resize / stats tiers; the REAL stdlib header codec
 (PNG/GIF/BMP/JPEG) and its error contract; and the pluggable-decoder
 contract that a PIL/ffmpeg pixel codec would inherit."""
 
@@ -15,7 +15,6 @@ from comperhensive_bigdata_analysis__spark.multimodal import (
     decode_media,
     fake_decoder,
     media_stats,
-    sample_frames,
 )
 from comperhensive_bigdata_analysis__spark.sources.tables import load_table
 
@@ -48,17 +47,6 @@ def test_decode_matches_local_kernel(media):
     )
 
 
-def test_frame_sampling(media):
-    frames = sample_frames(media, n_frames=3).collect()
-    n_videos = media.filter("media_type = 'video'").count()
-    assert len(frames) == 3 * n_videos
-    one = [f for f in frames if f["frame_idx"] == 1][0]
-    raw = bytes(
-        media.filter(f"id = {one['id']}").first()["content"]
-    )
-    assert one["frame_digest"] == hashlib.md5(raw + (1).to_bytes(4, "big")).hexdigest()
-
-
 def test_media_stats_jvm_only(media):
     stats = media_stats(media).collect()
     assert all(r["n_bytes"] > 0 and len(r["digest"]) == 32 for r in stats)
@@ -79,33 +67,6 @@ def test_resize_preserves_aspect_and_never_upscales(media):
             ar_out = r["target_width"] / r["target_height"]
             assert abs(ar_in - ar_out) / ar_in < 0.02
         assert r["content"] is not None
-
-
-def test_feature_extraction_feeds_similarity_tier(spark, media):
-    """The multimodal near-dup pipeline: bytes -> unit features ->
-    cosine. Duplicate payloads must surface at cosine ~1.0."""
-    from comperhensive_bigdata_analysis__spark.multimodal import extract_features
-
-    feats = extract_features(media, dim=16)
-    first = feats.first()
-    assert len(first["features"]) == 16
-    assert abs(sum(x * x for x in first["features"]) - 1.0) < 1e-9  # unit norm
-
-    # duplicate content ids (exact payload copies) must pair at ~1.0
-    import pyspark.sql.functions as F
-
-    dup = media.limit(5).select((F.col("id") + 100000).alias("id"),
-                                "content", "media_type")
-    both = extract_features(media.limit(5).unionByName(dup), dim=16)
-    vecs = {r["id"]: r["features"] for r in both.collect()}
-    ids = [r["id"] for r in media.limit(5).collect()]
-    assert len(ids) == 5
-    for i in ids:
-        a, b = vecs[i], vecs[i + 100000]
-        cos = sum(x * y for x, y in zip(a, b)) / (
-            sum(x * x for x in a) * sum(y * y for y in b)
-        ) ** 0.5
-        assert cos >= 0.999, (i, cos)
 
 
 def test_codec_decoder_raises_on_unknown_format():
@@ -215,6 +176,28 @@ def test_decode_media_on_error_skip(spark):
     assert got == {1: (10, 11)}
     with pytest.raises(Exception):
         decode_media(media, decoder=codec_decoder).collect()  # default raises
+
+
+def test_map_rows_drops_explodes_and_keeps_schema_when_empty(spark):
+    """The per-row helper every media kernel runs on: a row may yield
+    no tuple (dropped), one, or several (exploded); a batch whose rows
+    all drop still comes back with the declared schema."""
+    from comperhensive_bigdata_analysis__spark.multimodal import map_rows
+
+    df = spark.createDataFrame([(1, "a"), (2, "bb"), (3, "ccc")], "k long, s string")
+    schema = "k long, j int, tail string"
+
+    def explode(k, s):
+        for j in range(k - 1):  # k=1 drops, k=3 yields two rows
+            yield (k, j, s[j:])
+
+    out = map_rows(df, explode, schema)
+    assert out.schema.simpleString() == "struct<k:bigint,j:int,tail:string>"
+    assert sorted(map(tuple, out.collect())) == [
+        (2, 0, "bb"), (3, 0, "ccc"), (3, 1, "cc")
+    ]
+    none = map_rows(df, lambda k, s: iter(()), schema)
+    assert none.collect() == [] and none.schema == out.schema
 
 
 def test_custom_decoder_contract(spark):
@@ -365,17 +348,15 @@ def test_png_pixels_capability_and_corruption_contract():
 
 
 def test_pixel_pipeline_decode_resize_features_without_pil(spark):
-    """The whole pixel tier on REAL images, no PIL: encode gradient PNGs
-    in executors -> decode_media(pixel_decoder) recovers true dims ->
-    resize_media writes genuinely resampled PNGs (re-decoded to prove
-    validity) -> extract_features computes moments from real pixels."""
+    """The whole pixel tier on REAL images, no image package: encode
+    gradient PNGs in executors -> decode_media(pixel_decoder) recovers
+    true dims -> resize_media writes genuinely resampled PNGs
+    (re-decoded to prove validity)."""
     import pandas as pd
 
     from comperhensive_bigdata_analysis__spark.multimodal import (
         decode_media,
-        extract_features,
         pixel_decoder,
-        pixel_features,
         png_encode,
         png_pixels,
         resize_media,
@@ -412,44 +393,6 @@ def test_pixel_pipeline_decode_resize_features_without_pil(spark):
         w2, h2, _, _ = png_pixels(bytes(r["content"]))
         assert (w2, h2) == (r["target_width"], r["target_height"])
         assert max(w2, h2) == 12  # long side hits the cap exactly
-
-    # features: real pixel moments, unit-norm, equal to the local kernel
-    feats = {r["id"]: r["features"] for r in extract_features(media, dim=16).collect()}
-    for i in range(8):
-        local = pixel_features(make_png(i), 16)
-        assert feats[i] == pytest.approx(local, abs=0)
-        assert sum(x * x for x in feats[i]) == pytest.approx(1.0, abs=1e-9)
-
-
-def test_sample_frames_digests_real_pixel_bands(spark):
-    """For PNG payloads typed as video, frame i is the md5 of the i-th
-    equal-height band of DECODED pixel rows — a genuine pixel read."""
-    import hashlib as hl
-
-    import pandas as pd
-
-    from comperhensive_bigdata_analysis__spark.multimodal import (
-        png_encode,
-        png_pixels,
-        sample_frames,
-    )
-
-    pix = bytes((x + y) % 256 for y in range(12) for x in range(6) for _ in range(3))
-    png = png_encode(pix, 6, 12, 3)
-    media = spark.createDataFrame(
-        pd.DataFrame({"id": [1], "content": [png], "media_type": ["video"]})
-    )
-    frames = sorted(
-        (r["frame_idx"], r["frame_digest"])
-        for r in sample_frames(media, n_frames=4).collect()
-    )
-    w, h, ch, dec = png_pixels(png)
-    stride = w * ch
-    expect = [
-        (f, hl.md5(dec[(f * h // 4) * stride : ((f + 1) * h // 4) * stride]).hexdigest())
-        for f in range(4)
-    ]
-    assert frames == expect
 
 
 # -- stdlib GIF pixel codec (round 3) --------------------------------------
@@ -529,31 +472,27 @@ def test_gif_error_contract():
 
 
 def test_gif_feeds_pixel_features_and_frames(spark):
-    """GIF payloads now ride the REAL pixel tier end-to-end: features
-    come from decoded channel moments (solid red gif -> known vector
-    head), frame digests come from actual pixel bands."""
+    """GIF payloads ride the REAL pixel tier end-to-end: the pixel
+    decoder reads a solid red GIF back as red pixels, and decode_media
+    recovers its true dims through Spark for image and video rows."""
     from comperhensive_bigdata_analysis__spark.multimodal import (
-        extract_features,
+        decode_media,
         gif_encode,
-        pixel_features,
-        sample_frames,
+        media_pixels,
+        pixel_decoder,
     )
 
     pal = _pal4()
     solid_red = gif_encode(8, 8, bytes(64), pal)  # index 0 = (255,0,0)
-    v = pixel_features(solid_red, dim=8)
-    # channel means: r=255 -> 1.0 pre-norm, g=b=0; std all 0
-    assert v[0] > 0 and abs(v[2]) < 1e-12 and abs(v[4]) < 1e-12
+    assert media_pixels(solid_red) == (8, 8, 3, b"\xff\x00\x00" * 64)
 
     rows = [(1, "image", bytearray(solid_red)), (2, "video", bytearray(solid_red))]
     media = spark.createDataFrame(rows, "id long, media_type string, content binary")
-    feats = {r["id"]: r["features"] for r in extract_features(media, dim=8).collect()}
-    assert abs(feats[1][0] - v[0]) < 1e-12
-
-    frames = sample_frames(media, n_frames=4).collect()
-    assert len(frames) == 4
-    # solid image: every band identical -> identical digests
-    assert len({r["frame_digest"] for r in frames}) == 1
+    dims = {
+        r["id"]: (r["width"], r["height"], r["channels"])
+        for r in decode_media(media, decoder=pixel_decoder).collect()
+    }
+    assert dims == {1: (8, 8, 3), 2: (8, 8, 3)}
 
 
 def test_gif_round_trip_property():
@@ -627,7 +566,6 @@ def test_bmp_round_trip_and_contract():
         bmp_encode,
         bmp_pixels,
         media_pixels,
-        pixel_features,
     )
 
     rnd = random.Random(9)
@@ -646,10 +584,6 @@ def test_bmp_round_trip_and_contract():
     ba[28:30] = struct.pack("<H", 8)  # 8-bit palette BMP: capability seam
     with pytest.raises(NotImplementedError):
         bmp_pixels(bytes(ba))
-    # features run on real BMP pixels: solid red -> known channel head
-    red = bmp_encode(6, 6, b"\xff\x00\x00" * 36)
-    v = pixel_features(red, dim=8)
-    assert v[0] > 0 and abs(v[2]) < 1e-12 and abs(v[4]) < 1e-12
 
 
 def test_gif_trailing_subblocks_after_eoi_ignored():
@@ -921,37 +855,6 @@ def test_gif_frames_transparency_and_disposal():
     ag2[p2 + 3] = (ag2[p2 + 3] & ~0x1C) | (3 << 2)
     with pytest.raises(NotImplementedError):
         gif_frames(bytes(ag2))
-
-
-def test_sample_frames_real_temporal_frames_for_animation(spark):
-    """Video rows backed by an animated GIF digest ACTUAL temporal
-    frames, not spatial bands."""
-    import hashlib as hl
-
-    import pandas as pd
-
-    from comperhensive_bigdata_analysis__spark.multimodal import (
-        gif_encode_animated,
-        gif_frames,
-        sample_frames,
-    )
-
-    pal = _pal4()
-    frames = [bytes([f % 4]) * 36 for f in range(4)]
-    ag = gif_encode_animated(6, 6, frames, pal)
-    media = spark.createDataFrame(
-        pd.DataFrame({"id": [9], "content": [ag], "media_type": ["video"]})
-    )
-    got = sorted(
-        (r["frame_idx"], r["frame_digest"])
-        for r in sample_frames(media, n_frames=4).collect()
-    )
-    dec = gif_frames(ag)
-    expect = [(f, hl.md5(dec[f][3]).hexdigest()) for f in range(4)]
-    assert got == expect
-    # 4 distinct frames -> 4 distinct digests (bands of a still would
-    # collapse for solid frames)
-    assert len({d for _, d in got}) == 4
 
 
 def test_jpeg_block_constant_round_trip_property():

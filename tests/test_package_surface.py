@@ -1,0 +1,128 @@
+"""The package carries no code that only tests call.
+
+An AST scan of the package's top-level functions and classes: each
+must be referenced from somewhere outside ``tests/`` — the package
+itself, ``perfbench/``, ``tools/`` or ``__spark_entry__.py``. A
+``@plan``-registered function counts as used (the catalog calls it),
+and so does a dunder hook such as a module ``__getattr__`` (Python
+calls it). A reference is a name, an attribute or an imported name anywhere in
+those files other than inside the definition itself.
+
+What is kept on purpose sits in ``_TEST_ONLY_ALLOWLIST`` with its
+reason. Like ``_BROADCAST_ALLOWLIST``, the list is an exact inventory:
+an entry whose definition is gone, or that gained a production caller,
+fails too.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG = "comperhensive_bigdata_analysis__spark"
+
+#: (path under the package, name) -> why it stays with tests as its
+#: only callers.
+_TEST_ONLY_ALLOWLIST = {
+    ("export.py", "join_geo"): "paper capability: the geo join of the "
+    "reference's map export",
+    ("export.py", "color_scale_bounds"): "paper capability: the map "
+    "export's colour scale",
+    ("session.py", "create_namespace"): "paper capability: the "
+    "warehouse namespace helpers",
+    ("session.py", "drop_namespace"): "paper capability: the warehouse "
+    "namespace helpers",
+    ("session.py", "table_exists"): "paper capability: the warehouse "
+    "namespace helpers",
+    ("operators/graph.py", "pagerank"): "paper capability: graph "
+    "analytics",
+    ("sources/ingest.py", "union_evolving"): "paper capability: "
+    "schema-drifted folder ingest",
+    ("sources/ingest.py", "ingest_csv_audited"): "the quarantining "
+    "ingest ROADMAP item 3 builds on",
+    ("multimodal.py", "bmp_encode"): "builds the BMP decoder's test "
+    "inputs; moving it into the tests removes nothing",
+    ("plans/ml.py", "semdedup_dup_edges"): "the production SemDeDup "
+    "edge union; its union test cross-checks it against "
+    "semdedup_salt_recall, which does not run that union",
+    ("sources/layout.py", "overwrite_partitions"): "deployment write "
+    "path documented in DEPLOY.md and named by operators/merge.py",
+    ("sources/layout.py", "write_range_sorted"): "deployment write path "
+    "documented in DEPLOY.md",
+    ("sources/layout.py", "write_zordered"): "deployment write path "
+    "documented in DEPLOY.md; plans/layout.py checks its key math",
+}
+
+
+def _sources():
+    """Every non-test Python file the package's callers live in."""
+    roots = [os.path.join(_REPO, _PKG), os.path.join(_REPO, "perfbench"),
+             os.path.join(_REPO, "tools")]
+    for root in roots:
+        for dirpath, dirnames, filenames in os.walk(root):
+            dirnames[:] = [d for d in dirnames if d not in ("tests", "__pycache__")]
+            for fn in sorted(filenames):
+                if fn.endswith(".py"):
+                    yield os.path.join(dirpath, fn)
+    yield os.path.join(_REPO, "__spark_entry__.py")
+
+
+def _is_plan(node) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "plan"
+        for d in getattr(node, "decorator_list", [])
+    )
+
+
+def _referenced_name(node) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.alias):
+        return node.name.rsplit(".", 1)[-1]
+    return None
+
+
+def _test_only_definitions() -> set[tuple[str, str]]:
+    pkg_dir = os.path.join(_REPO, _PKG)
+    defs = {}  # (rel, name) -> (path, node)
+    refs = {}  # name -> [(path, node)]
+    for path in _sources():
+        tree = ast.parse(open(path).read())
+        if path.startswith(pkg_dir + os.sep):
+            rel = os.path.relpath(path, pkg_dir).replace(os.sep, "/")
+            for node in tree.body:
+                if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ) and not (_is_plan(node) or node.name.startswith("__")):
+                    defs[(rel, node.name)] = (path, node)
+        for node in ast.walk(tree):
+            name = _referenced_name(node)
+            if name:
+                refs.setdefault(name, []).append((path, node))
+    unused = set()
+    for (rel, name), (path, node) in defs.items():
+        own = {id(n) for n in ast.walk(node)}
+        if not any(
+            not (p == path and id(n) in own) for p, n in refs.get(name, [])
+        ):
+            unused.add((rel, name))
+    return unused
+
+
+def test_no_package_code_only_tests_call():
+    found = _test_only_definitions()
+    new = found - set(_TEST_ONLY_ALLOWLIST)
+    assert not new, (
+        f"package definition(s) {sorted(new)} have no caller outside "
+        f"tests/ — delete them with the tests that check only them, or "
+        f"allowlist them in _TEST_ONLY_ALLOWLIST with the reason they stay"
+    )
+    stale = set(_TEST_ONLY_ALLOWLIST) - found
+    assert not stale, (
+        f"allowlisted definition(s) {sorted(stale)} are gone or now have "
+        f"a caller outside tests/ — prune the allowlist so it stays an "
+        f"exact inventory"
+    )

@@ -450,7 +450,6 @@ _BROADCAST_ALLOWLIST = {
     ("plans/relational.py", "top_revenue_supplier"),
     ("plans/text.py", "corpus_similarity_matrix"),
     ("plans/training.py", "bm25_top_docs"),
-    ("plans/training.py", "ccnet_bucket_by_thresholds"),
     ("plans/training.py", "dense_month_status_grid"),
     ("plans/training.py", "sigma_clip_outliers"),
     ("plans/training.py", "source_temperature_weights"),

@@ -122,29 +122,6 @@ def test_dsir_weights_favor_target_language(spark, sf_dir):
     assert w.count() == n_docs
 
 
-def test_ccnet_threshold_tier_tracks_exact_terciles(spark, sf_dir):
-    """The sampled-threshold scale tier must put roughly a third of each
-    language's docs in each bucket (the exact-NTILE plan is the oracle-
-    checked reference; the threshold tier may differ at boundary ties
-    by the sketch error, bounded here at 20% of the tercile size)."""
-    from comperhensive_bigdata_analysis__spark.plans.training import (
-        ccnet_bucket_by_thresholds,
-    )
-
-    exact = {
-        (r["lang"], r["bucket"]): r["n_docs"]
-        for r in plans.QUERIES["ccnet_quality_buckets"](spark, sf_dir).collect()
-    }
-    approx = {
-        (r["lang"], r["bucket"]): r["n_docs"]
-        for r in ccnet_bucket_by_thresholds(spark, sf_dir).collect()
-    }
-    assert set(approx) == set(exact)
-    for key, n_exact in exact.items():
-        assert abs(approx[key] - n_exact) <= max(2, 0.2 * n_exact), (
-            key, approx[key], n_exact)
-
-
 def test_dsir_operators_fit_once_score_increments(spark, sf_dir):
     """Production DSIR contract: (1) fit+score over the full corpus
     reproduces the oracle-checked plan exactly; (2) a model fit on one
