@@ -482,8 +482,9 @@ def resize_media(media: DataFrame, max_dim: int = 256) -> DataFrame:
     palette carries over). A recognized container the stdlib codec
     can't fully decode (16-bit/Adam7 PNG: NotImplementedError) falls
     back to the metadata tier for THAT row instead of failing the job.
-    Other content keeps the metadata tier: dims from ``fake_decoder``,
-    bytes passed through, target dims computed."""
+    Other content keeps the metadata tier: bytes passed through, target
+    dims computed from the container's own dims (``codec_decoder``),
+    or from ``fake_decoder``'s where the codec cannot read them."""
 
     def resize(i, content, media_type):
         raw = bytes(content)
@@ -498,7 +499,10 @@ def resize_media(media: DataFrame, max_dim: int = 256) -> DataFrame:
         if resized is not None:
             raw, w, h, tw, th = resized
         else:
-            m = fake_decoder(raw, media_type)
+            try:
+                m = codec_decoder(raw, media_type)
+            except (NotImplementedError, ValueError):  # unknown or corrupt
+                m = fake_decoder(raw, media_type)
             w, h = m["width"], m["height"]
             tw, th = _fit_dims(w, h, max_dim)
         yield (i, media_type, w, h, tw, th, raw)

@@ -78,6 +78,13 @@ def get_spark(
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # Static and JVM-wide, so only the builder can set it. Spark's
+        # 100 compiled classes evict each other every curation round,
+        # which needs ~140 (DEPLOY.md "Session").
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # The cache key is the generated source; with the stage id in the
+        # class name, a stage AQE numbers differently compiles again.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -82,21 +82,33 @@ _TS_PATTERNS = [
     "yyyy/MM/dd",
     "MM/dd/yyyy",
 ]
+#: the patterns as SQL string literals (their quoted 'T' backslash-escaped)
+_TS_LITERALS = ["'" + p.replace("'", "\\'") + "'" for p in _TS_PATTERNS]
+
+# The profile and the projection are built as SQL text, one
+# ``selectExpr`` each: a ``functions`` call is a py4j round trip, and a
+# wide CSV's expressions cost hundreds of them.
 
 
-def _try_ts(col):
-    expr = F.lit(None).cast("timestamp")
-    for fmt in reversed(_TS_PATTERNS):
-        expr = F.coalesce(F.try_to_timestamp(col, F.lit(fmt)), expr)
-    return expr
+def _ident(name: str) -> str:
+    """SQL identifier for a column name (backticks doubled inside)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _ts_candidate(col):
-    """Cheap necessary condition for ``_try_ts(col)`` to be non-NULL:
-    every pattern starts with a digit field, which the parser accepts
-    with one leading sign. A failed ``try_to_timestamp`` costs far more
-    than this regex, and most strings in a wide CSV fail all five."""
-    return col.rlike("^[+-]?[0-9]")
+def _try_ts(col: str) -> str:
+    """SQL: the first of ``_TS_PATTERNS`` that parses ``col`` (a quoted
+    identifier), else NULL."""
+    parses = (f"try_to_timestamp({col}, {fmt})" for fmt in _TS_LITERALS)
+    return f"coalesce({', '.join(parses)})"
+
+
+def _ts_candidate(col: str) -> str:
+    """SQL: a cheap necessary condition for ``_try_ts(col)`` to be
+    non-NULL: every pattern starts with a digit field, which the parser
+    accepts with one leading sign. A failed ``try_to_timestamp`` costs
+    far more than this regex, and most strings in a wide CSV fail all
+    five."""
+    return f"{col} RLIKE '^[+-]?[0-9]'"
 
 
 def preprocess(df: DataFrame) -> DataFrame:
@@ -118,34 +130,34 @@ def preprocess(df: DataFrame) -> DataFrame:
     """
     aggs = []
     for i, (c, t) in enumerate(df.dtypes):
-        col = F.col(c)
-        aggs.append(F.count(col).alias(f"__nn_{i}"))
+        col = _ident(c)
+        aggs.append(f"count({col}) AS __nn_{i}")
         if t == "string":
             aggs.append(
-                F.count(F.when(_ts_candidate(col) & _try_ts(col).isNotNull(), 1))
-                .alias(f"__ts_{i}")
+                f"count(CASE WHEN {_ts_candidate(col)} AND {_try_ts(col)} IS NOT NULL"
+                f" THEN 1 END) AS __ts_{i}"
             )
         elif t in _INTEGRAL_TYPES:
-            aggs.append(F.min(col).alias(f"__mn_{i}"))
-            aggs.append(F.max(col).alias(f"__mx_{i}"))
-    stats = df.agg(*aggs).first()
+            aggs.append(f"min({col}) AS __mn_{i}")
+            aggs.append(f"max({col}) AS __mx_{i}")
+    stats = df.selectExpr(*aggs).first()
 
     out = []
     for i, (c, t) in enumerate(df.dtypes):
-        col = F.col(c)
+        col = _ident(c)
         nn = stats[f"__nn_{i}"]
         if nn == 0:  # all-NULL column -> drop (hu:88-90)
             continue
         if t == "string" and stats[f"__ts_{i}"] == nn:
             col = _try_ts(col)  # every non-null value is a timestamp (hu:91-95)
         elif t == "date":
-            col = col.cast("timestamp")
+            col = f"CAST({col} AS TIMESTAMP)"
         elif t in _INTEGRAL_TYPES:
             mn, mx = stats[f"__mn_{i}"], stats[f"__mx_{i}"]
             narrow = mn > -INT_WIDTH_BOUND and mx < INT_WIDTH_BOUND
-            col = col.cast("int" if narrow else "bigint")
-        out.append(col.alias(c))
-    return df.select(*out)
+            col = f"CAST({col} AS {'INT' if narrow else 'BIGINT'})"
+        out.append(f"{col} AS {_ident(c)}")
+    return df.selectExpr(*out)
 
 
 def ingest_csv(

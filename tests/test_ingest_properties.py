@@ -65,8 +65,6 @@ _TS_ALPHABET = "0123456789+-/: T\t.Zaz"
 
 @pytest.fixture(scope="module")
 def ts_probe(spark):
-    from pyspark.sql import functions as F
-
     from comperhensive_bigdata_analysis__spark.sources.ingest import (
         _try_ts,
         _ts_candidate,
@@ -76,10 +74,10 @@ def ts_probe(spark):
         df = spark.createDataFrame([(v,) for v in values], "s string")
         return {
             r["s"]: (r["gate"], r["parses"])
-            for r in df.select(
+            for r in df.selectExpr(
                 "s",
-                _ts_candidate(F.col("s")).alias("gate"),
-                _try_ts(F.col("s")).isNotNull().alias("parses"),
+                f"{_ts_candidate('s')} AS gate",
+                f"{_try_ts('s')} IS NOT NULL AS parses",
             ).collect()
         }
 

@@ -554,6 +554,27 @@ def test_gif_resize_real_pixels(spark):
     assert bytes(pix[:3]) == pal[idx[0] * 3 : idx[0] * 3 + 3]
 
 
+def test_resize_metadata_tier_reads_container_dims(spark):
+    """Content without a pixel resize tier (BMP here) is sized from its
+    own header, not from fake_decoder's digest-derived dims; payloads no
+    codec reads keep the fake dims."""
+    from comperhensive_bigdata_analysis__spark.multimodal import bmp_encode, resize_media
+
+    bmp = bmp_encode(6, 4, bytes(range(72)))
+    opaque = b"no container magic here"
+    media = spark.createDataFrame(
+        [(1, "image", bytearray(bmp)), (2, "image", bytearray(opaque))],
+        "id long, media_type string, content binary",
+    )
+    rows = {r["id"]: r for r in resize_media(media).collect()}
+    bmp_row = rows[1]
+    assert (bmp_row["width"], bmp_row["height"]) == (6, 4)
+    assert (bmp_row["target_width"], bmp_row["target_height"]) == (6, 4)
+    assert bytes(bmp_row["content"]) == bmp
+    fake = fake_decoder(opaque, "image")
+    assert (rows[2]["width"], rows[2]["height"]) == (fake["width"], fake["height"])
+
+
 # -- stdlib BMP pixel codec (round 3) --------------------------------------
 
 
