@@ -7,9 +7,9 @@ client-side with geopandas (ipynb:2678: map_df.set_index('NAME_1')
 engine; only the final, already-aggregated result crosses to the
 client — via Arrow — and the geo join receives that small frame.
 
-geopandas is not in this container; the adapter degrades to plain
-pandas joins (identical key semantics) and uses geopandas when
-importable.
+The adapter never imports geopandas: it joins through the pandas API
+(``set_index(...).join(...)``), which a geopandas GeoDataFrame also
+implements, so the caller's frame type comes back unchanged.
 """
 
 from __future__ import annotations

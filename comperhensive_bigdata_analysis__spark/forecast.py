@@ -13,11 +13,11 @@ Model tiers:
 - "linear": deterministic closed-form least squares (always available;
   what plans/analytics.py cross-checks against the DuckDB oracle).
 - "seasonal": numpy Fourier-feature ridge regression (trend + sin/cos
-  harmonics of the weekly and optional yearly cycle, closed-form
-  normal-equation solve). numpy IS in this container, so this is the
-  default middle tier standing in for Prophet's seasonal fit — it
-  reproduces the additive trend+seasonality structure the reference
-  relies on (ipynb:1048-1054, MAPE 0.02) without the package.
+  harmonics of the weekly cycle, closed-form normal-equation solve).
+  It needs only numpy, so it is the default middle tier standing in
+  for Prophet's seasonal fit — it reproduces the additive
+  trend+seasonality structure the reference relies on
+  (ipynb:1048-1054, MAPE 0.02) without the package.
 - "prophet": used when the prophet package is importable (it is not in
   this container — import-gated exactly like the optional heavy deps
   the task allows stubbing).
@@ -89,21 +89,18 @@ def _fit_predict_linear(pdf, horizon: int, interval_width: float):
     )
 
 
-def _fit_predict_seasonal(
-    pdf,
-    horizon: int,
-    interval_width: float,
-    weekly_order: int = 3,
-    yearly_order: int = 0,
-    ridge: float = 1e-6,
-):
+#: weekly harmonics of the seasonal tier, and its ridge term on them
+_WEEKLY_ORDER = 3
+_RIDGE = 1e-6
+
+
+def _fit_predict_seasonal(pdf, horizon: int, interval_width: float):
     """Fourier-feature ridge regression (VERDICT r2 ask #4): design
-    matrix [1, t, sin/cos(2*pi*k*t/7)_k<=weekly_order,
-    sin/cos(2*pi*k*t/365.25)_k<=yearly_order], solved in closed form
-    via the ridge normal equations (X'X + lambda*I)w = X'y with numpy.
-    Deterministic (no iteration, no RNG); the tiny ridge term keeps the
-    solve well-posed on short histories. Residual-sd gaussian band,
-    same convention as the linear tier."""
+    matrix [1, t, sin/cos(2*pi*k*t/7)_k<=_WEEKLY_ORDER], solved in
+    closed form via the ridge normal equations (X'X + lambda*I)w = X'y
+    with numpy. Deterministic (no iteration, no RNG); the tiny ridge
+    term keeps the solve well-posed on short histories. Residual-sd
+    gaussian band, same convention as the linear tier."""
     import numpy as np
 
     pdf = pdf.sort_values("ds")
@@ -113,19 +110,17 @@ def _fit_predict_seasonal(
     def design(t: "np.ndarray") -> "np.ndarray":
         t0 = x[0] if len(x) else 0.0
         cols = [np.ones_like(t), t - t0]
-        for period, order in ((7.0, weekly_order), (365.25, yearly_order)):
-            for k in range(1, order + 1):
-                w = 2.0 * np.pi * k / period
-                cols.append(np.sin(w * t))
-                cols.append(np.cos(w * t))
+        for k in range(1, _WEEKLY_ORDER + 1):
+            w = 2.0 * np.pi * k / 7.0
+            cols.append(np.sin(w * t))
+            cols.append(np.cos(w * t))
         return np.column_stack(cols)
 
-    nfeat = 2 + 2 * (weekly_order + yearly_order)
-    if len(x) < nfeat:  # degenerate history: fall back to the linear tier
+    if len(x) < 2 + 2 * _WEEKLY_ORDER:  # degenerate history: linear tier
         return _fit_predict_linear(pdf, horizon, interval_width)
     X = design(x)
     # Don't penalize intercept/trend; shrink only the harmonics.
-    lam = np.diag([0.0, 0.0] + [ridge] * (X.shape[1] - 2))
+    lam = np.diag([0.0, 0.0] + [_RIDGE] * (X.shape[1] - 2))
     w = np.linalg.solve(X.T @ X + lam, X.T @ y)
     resid_sd = float(np.std(y - X @ w))
     return _band_forecast(

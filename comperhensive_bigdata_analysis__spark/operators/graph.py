@@ -206,102 +206,3 @@ def survivors(
         .agg(F.min("member").alias("survivor_id"))
         .select("component", "survivor_id", "n_members", "best_quality")
     )
-
-
-def pagerank(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    damping: float = 0.85,
-    max_iter: int = 30,
-    tol: float = 1e-6,
-) -> DataFrame:
-    """Power-iteration PageRank to convergence — the iterated closure of
-    the oracle-checked single step (plans/graph.pagerank_step_parts).
-
-    ``edges`` is a DIRECTED pair list (duplicates ignored). Dangling
-    nodes (no out-edges) redistribute their mass uniformly, so the
-    scores stay a probability distribution (sum 1) at every round.
-    Returns (node, rank) for the node universe observed in edges.
-
-    Scale shape, per round: one shuffle of the rank vector onto edge
-    sources, one map-side-combined aggregate onto destinations — the
-    edge relation is localCheckpointed ONCE and reused; the rank vector
-    is O(nodes) and flows through key joins, never a broadcast. The
-    dangling-mass correction and the L1 convergence check are scalar
-    aggregates. Rounds cap at ``max_iter``; convergence is declared at
-    L1 delta < ``tol``.
-    """
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .distinct()
-        .localCheckpoint()
-    )
-    universe = (
-        e.select(F.col("s").alias("node"))
-        .union(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = universe.count()
-    if n == 0:
-        return universe.select(
-            "node", F.lit(0.0).alias("rank")
-        )  # empty graph: empty ranks, not a ZeroDivisionError
-    # loop-invariant; materialized once so the per-round actions (the
-    # dangling-mass scalar and the new_ranks checkpoint) don't re-run
-    # the degree shuffle through lineage every round
-    outdeg = (
-        e.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint()
-    )
-    ranks = universe.select("node", (F.lit(1.0) / n).alias("rank"))
-
-    for _ in range(max_iter):
-        contrib_src = ranks.join(outdeg, "node", "left").select(
-            "node",
-            "rank",
-            F.col("deg").alias("deg"),
-        )
-        # dangling mass: nodes with no out-edges spread uniformly
-        dangling = (
-            contrib_src.filter(F.col("deg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("m"))
-            .first()["m"]
-        )
-        flowed = (
-            e.join(
-                contrib_src.filter(F.col("deg").isNotNull()),
-                e["s"] == contrib_src["node"],
-            )
-            .select(F.col("d").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        base = (1.0 - damping) / n + damping * dangling / n
-        new_ranks = (
-            universe.join(flowed, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-        delta = (
-            new_ranks.join(ranks.withColumnRenamed("rank", "__old"), "node")
-            .agg(F.sum(F.abs(F.col("rank") - F.col("__old"))).alias("d"))
-            .first()["d"]
-        )
-        # the delta action was the last reader of the PREVIOUS round's
-        # checkpoint — free its storage now (ADVICE r7: otherwise up to
-        # max_iter O(nodes) checkpointed RDDs pile up in executor
-        # storage; the ContextCleaner only reclaims them on driver GC)
-        _free_local_checkpoint(ranks)
-        ranks = new_ranks
-        if delta < tol:
-            break
-    return ranks

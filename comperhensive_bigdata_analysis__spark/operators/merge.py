@@ -1,18 +1,18 @@
-"""Batch MERGE (upsert) and SCD2 history maintenance — the CDC-apply
-surface of the engine.
+"""Batch MERGE (upsert) — the CDC-apply surface of the engine.
 
 Spark's open-format parquet tables have no transactional MERGE INTO, so
 the engine expresses it as the classic two-step: (1) compute the merged
-state as a DataFrame (pure, testable), (2) swap it in — either a full
-rewrite or, when the table is hive-partitioned, a dynamic overwrite of
-ONLY the partitions the update batch touches (`overwrite_partitions`),
-which is the 100 TB posture: a daily CDC batch touching 3 of 3,000
+state as a DataFrame (pure, testable), (2) swap it in with Spark's own
+writer — a full rewrite, or, when the table is hive-partitioned, a
+dynamic partition overwrite (``spark.sql.sources.partitionOverwriteMode
+=dynamic``) of ONLY the partitions the update batch touches, which is
+the 100 TB posture: a daily CDC batch touching 3 of 3,000
 day-partitions rewrites 0.1% of the table.
 
 Join strategy: the updates side of a CDC batch is small relative to the
-target, so both the anti-join (drop stale target rows) and the SCD2
-change-detection join broadcast the updates; the big side never
-shuffles.
+target, so the anti-join that drops stale target rows broadcasts the
+updates; the big side never shuffles. SCD2 history built from snapshots
+is the catalog plan ``plans/relational.scd2_customer_history``.
 
 Reference parity: the reference overwrites whole Hive tables from
 Presto CTAS (bigdata-project-analysis (1).ipynb cells 5-11 re-create
@@ -26,9 +26,9 @@ from pyspark.sql import DataFrame, functions as F
 
 def merge_upsert(target: DataFrame, updates: DataFrame, key_cols: list[str]) -> DataFrame:
     """SCD1 MERGE: rows in ``updates`` replace same-key rows in
-    ``target``; unmatched update rows insert. Pure transform — pair with
-    ``layout.overwrite_partitions`` (partitioned tables) or a staged
-    full rewrite (``layout.compact``-style tmp+rename) to persist.
+    ``target``; unmatched update rows insert. Pure transform — persist
+    it with a dynamic partition overwrite (partitioned tables) or a
+    staged full rewrite.
 
     One broadcast anti-join + a union: the target side is never
     shuffled, so cost scales with |target partitions touched|, not
@@ -36,75 +36,3 @@ def merge_upsert(target: DataFrame, updates: DataFrame, key_cols: list[str]) -> 
     """
     kept = target.join(F.broadcast(updates.select(*key_cols)), key_cols, "left_anti")
     return kept.unionByName(updates.select(*target.columns))
-
-
-def scd2_apply(
-    history: DataFrame,
-    updates: DataFrame,
-    key_cols: list[str],
-    attr_cols: list[str],
-    batch_ts: str,
-    current_flag: str = "is_current",
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-) -> DataFrame:
-    """SCD2 MERGE: maintain full change history. ``history`` carries
-    (key_cols, attr_cols, valid_from, valid_to, is_current); ``updates``
-    carries (key_cols, attr_cols) for one batch stamped ``batch_ts``.
-
-    - unchanged current rows (attrs null-safe-equal) pass through
-      untouched — re-applying the same batch is a no-op (idempotent CDC
-      replay);
-    - changed current rows close (valid_to = batch_ts, is_current
-      false) and a new current version appends;
-    - brand-new keys append as current;
-    - already-closed rows are immutable.
-
-    A row only counts as changed when the batch MATCHED it (explicit
-    ``__upd`` indicator — a left-join miss must not read as a change)
-    AND some attribute differs under null-safe equality (<=>, so
-    NULL-to-value transitions count). The updates side broadcasts into
-    the main match join, so full history rows never shuffle; the
-    brand-new-key anti-join exchanges history KEY COLUMNS only (no
-    broadcast hint — history keys are O(table) and must not be forced
-    into memory; AQE broadcasts them at small scale where they fit).
-    """
-    upd = F.broadcast(
-        updates.select(
-            *key_cols,
-            *[F.col(c).alias(f"__u_{c}") for c in attr_cols],
-            F.lit(True).alias("__upd"),
-        )
-    )
-    cur = history.filter(F.col(current_flag))
-    closed = history.filter(~F.col(current_flag))
-
-    joined = cur.join(upd, [cur[k] == upd[k] for k in key_cols], "left")
-    attrs_equal = F.expr(" AND ".join(f"{c} <=> __u_{c}" for c in attr_cols))
-    changed = F.coalesce(F.col("__upd"), F.lit(False)) & ~attrs_equal
-
-    # current rows: close the changed ones, keep the rest verbatim
-    carried = joined.select(
-        *[cur[c] for c in key_cols + attr_cols],
-        cur[valid_from].alias(valid_from),
-        F.when(changed, F.lit(batch_ts)).otherwise(cur[valid_to]).alias(valid_to),
-        (~changed).alias(current_flag),
-    )
-    # new versions: changed keys + brand-new keys
-    new_keys = updates.join(cur.select(*key_cols), key_cols, "left_anti")
-    changed_new = (
-        joined.filter(changed)
-        .select(
-            *[cur[k].alias(k) for k in key_cols],
-            *[F.col(f"__u_{c}").alias(c) for c in attr_cols],
-        )
-        .unionByName(new_keys.select(*key_cols, *attr_cols))
-        .select(
-            *key_cols,
-            *attr_cols,
-            F.lit(batch_ts).alias(valid_from),
-            F.lit(None).cast("string").alias(valid_to),
-            F.lit(True).alias(current_flag),
-        )
-    )
-    return closed.unionByName(carried).unionByName(changed_new)

@@ -1,15 +1,11 @@
-"""Skew mitigation: salted joins (SURVEY §7.2 "salting for skew").
+"""Skew mitigation for hot keys (SURVEY §7.2 "salting for skew").
 
 AQE's skew-join splitting (enabled in session.RUNTIME_CONFS) handles
-sort-merge skew at runtime; explicit salting remains the tool when one
-join key dominates so heavily that even split partitions bottleneck, or
-when the engine must guarantee a bound on per-task key volume.
-
-Mechanics: the big (skewed) side gets a deterministic salt in
-[0, salts); the small side is replicated once per salt value; the join
-key becomes (key, salt), spreading a hot key over ``salts`` tasks.
-Cost: small side is duplicated ``salts`` times — keep salts modest
-(8-32) and the small side genuinely smaller.
+sort-merge join skew at runtime. What AQE cannot split is a window
+partition: a per-key rank or running aggregate colocates one key's
+whole mass in one task. The operators here bound that task instead —
+``salted_top_k`` by a per-(key, salt) prune, ``distributed_scan`` by a
+range-partitioned two-level scan.
 """
 
 from __future__ import annotations
@@ -18,35 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT = "__salt"
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    on: str,
-    how: str = "inner",
-    salts: int = 8,
-) -> DataFrame:
-    """Equi-join ``skewed ⋈ small`` on ``on`` with the hot keys spread
-    over ``salts`` sub-keys. Result columns = skewed ∪ (small - key),
-    same as a plain ``join(on=...)``.
-
-    The salt is derived from a hash of the skewed row's full content —
-    deterministic for a given row, ~uniform across rows of one key.
-    """
-    skewed_cols = skewed.columns
-    small_cols = [c for c in small.columns if c != on]
-    salted_left = skewed.withColumn(
-        SALT,
-        F.pmod(F.xxhash64(*[F.col(c) for c in skewed_cols]), F.lit(salts)).cast("int"),
-    )
-    replicated_right = small.withColumn(
-        SALT, F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
-    )
-    return (
-        salted_left.join(replicated_right, [on, SALT], how)
-        .select(*skewed_cols, *small_cols)
-    )
 
 
 def salted_top_k(

@@ -347,11 +347,10 @@ def pagerank_step_parts(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# PageRank FULL LOOP (VERDICT r7 ask #6): the converging operator
-# (operators/graph.pagerank) was pinned by a single-step oracle plus
-# pytest invariants; this plan runs a FIXED 5-round damped (85/100)
-# power iteration — dangling-mass redistribution included — in exact
-# 2^30 fixed-point, so the cross-round arithmetic gets the same
+# PageRank FULL LOOP (VERDICT r7 ask #6): pagerank_step_parts pins a
+# single step under the oracle; this plan runs a FIXED 5-round damped
+# (85/100) power iteration — dangling-mass redistribution included —
+# in exact 2^30 fixed-point, so the cross-round arithmetic gets the same
 # cross-engine hash guarantee as connected_components. The DuckDB
 # oracle unrolls the 5 rounds as a chained-CTE sequence generated from
 # ONE step template (recursive CTEs restrict aggregation over the
@@ -370,7 +369,7 @@ def pagerank_step_parts(spark, sf_dir):
 # edge list + one map-side-combined aggregate onto dst + a scalar
 # dangling fold carried as a 1-row frame (crossJoin — never collected
 # to the driver); rounds are localCheckpointed and the superseded
-# checkpoint is freed, exactly like the production operator.
+# checkpoint is freed, exactly like connected_components.
 # ---------------------------------------------------------------------------
 
 _PAGERANK_LOOP_ROUNDS = 5
@@ -439,8 +438,8 @@ def pagerank_loop_parts(spark, sf_dir):
     """Top-25 parts after 5 damped fixed-point PageRank rounds on the
     low->high-oriented co-purchase graph (see the section comment).
     Iterated twin of pagerank_step_parts; same loop discipline as
-    operators/graph.pagerank (per-round localCheckpoint, superseded
-    checkpoints freed)."""
+    operators/graph.connected_components (per-round localCheckpoint,
+    superseded checkpoints freed)."""
     from ..operators.graph import _free_local_checkpoint
 
     fp = _PAGERANK_FP

@@ -1,16 +1,16 @@
 """Data-layout plans: cross-engine checks for the z-order clustering
-math in sources/layout.py (write_zordered / zorder_key).
+math (``zorder_key``).
 
-The write side (range-partition + sortWithinPartitions + parquet) is
-exercised by tests/test_layout.py against real files; what a DuckDB
-oracle CAN check is the math that makes the layout work — the integer
-bucket scaling, the Morton bit interleave, and the resulting per-file
-min/max narrowing that parquet row-group stats exploit. The plan
-models "files" as equal-width z-key ranges (the footprint shape
-repartitionByRange + sortWithinPartitions produces, computed as pure
-integer arithmetic so no global window ever touches fact rows), so
-the oracle verifies the whole skipping story end-to-end without
-touching a filesystem.
+Writing a z-ordered table is Spark's own calls (range-partition on the
+z-key + ``sortWithinPartitions`` + parquet; DEPLOY.md "Data layout");
+what a DuckDB oracle CAN check is the math that makes the layout work —
+the integer bucket scaling, the Morton bit interleave, and the
+resulting per-file min/max narrowing that parquet row-group stats
+exploit. The plan models "files" as equal-width z-key ranges (the
+footprint shape repartitionByRange + sortWithinPartitions produces,
+computed as pure integer arithmetic so no global window ever touches
+fact rows), so the oracle verifies the whole skipping story end-to-end
+without touching a filesystem.
 
 Reference parity: the reference has no layout optimizer (it delegates
 storage to S3/Hive defaults, aws_utils.py); this is part of the
@@ -21,9 +21,37 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..sources.layout import zorder_key
 from ..sources.tables import load_table
 from . import plan
+
+
+def zorder_key(cols: list, bits: int = 16):
+    """Morton (Z-order) interleave of the rank-bucketed values of
+    ``cols`` (each a numeric Column already scaled to [0, 2^bits)) into
+    one BIGINT sort key. Pure JVM bit arithmetic (shiftleft/bitwise OR
+    folded per bit) — no UDF.
+
+    Raises ValueError when ``bits * len(cols) > 63``: the interleaved
+    key would need more than the 63 value bits of a signed BIGINT, and
+    the JVM's shiftleft wraps the shift amount mod 64, silently
+    aliasing high-order bits into low positions and corrupting the
+    Morton ordering. Lower ``bits`` or drop columns instead.
+    """
+    n = len(cols)
+    if bits * n > 63:
+        raise ValueError(
+            f"zorder_key: bits*len(cols) = {bits * n} exceeds 63 — the "
+            f"interleaved key overflows a signed BIGINT (JVM shiftleft "
+            f"wraps shift amounts mod 64). Use bits <= {63 // n} for "
+            f"{n} columns."
+        )
+    key = F.lit(0).cast("bigint")
+    for b in range(bits):
+        for i, c in enumerate(cols):
+            bit = F.shiftright(c.cast("bigint"), b).bitwiseAND(F.lit(1))
+            key = key.bitwiseOR(F.shiftleft(bit, b * n + i))
+    return key
+
 
 _BITS = 8
 _TOP = (1 << _BITS) - 1
@@ -83,7 +111,8 @@ _ZORDER_ORACLE = f"""
 def zorder_skipping_stats(spark, sf_dir):
     """Per-"file" min/max footprint of a 2-column z-order layout of
     orders (price cents x order day, 8 bits each), files modeled as
-    equal-width z-key range buckets (write_zordered's footprint).
+    equal-width z-key range buckets (the footprint a range-partitioned,
+    z-key-sorted write leaves).
     Narrow per-file ranges on BOTH columns = predicates on EITHER
     column skip most files via parquet stats — the claim, verified
     cross-engine down to the interleaved bits.

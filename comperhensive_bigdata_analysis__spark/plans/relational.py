@@ -1545,10 +1545,9 @@ _SCD2_ORACLE = """
 
 @plan("scd2_customer_history", _SCD2_ORACLE)
 def scd2_customer_history(spark, sf_dir):
-    """Snapshot-based SCD2 build (full snapshots -> history). The
-    incremental CDC-apply form (history + change batch -> history) is
-    operators/merge.py:scd2_apply; this plan is the bootstrap/backfill
-    path that derives the change feed from the snapshots themselves."""
+    """Snapshot-based SCD2 build (full snapshots -> history): the
+    change feed is derived from the snapshots themselves, one version
+    per change in each key's attribute."""
     from pyspark.sql.window import Window
 
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")

@@ -115,20 +115,24 @@ def preprocess(df: DataFrame) -> DataFrame:
     """Reference preprocess_file semantics (helper_utils.py:83-110) in
     two distributed passes:
 
-    pass 1 (one aggregate): per column, is it entirely NULL? per string
-      column, does every non-null value parse as a timestamp? per
-      integral column, its min and max.
+    pass 1 (one aggregate): the row count; per column, is it entirely
+      NULL? per string column, does every non-null value parse as a
+      timestamp? per integral column, its min and max.
     pass 2 (one projection): drop all-NULL columns, coerce timestamp
       strings, cast dates to timestamps (Spark's CSV inference may yield
       `date`; the reference's pandas path always lands on datetime64)
       and narrow integers.
+
+    A zero-row frame (a header-only CSV) keeps every column as typed:
+    "all NULL" and "every value parses" hold vacuously there, and
+    dropping them all would leave a table with no columns.
 
     Int-width rule (helper_utils.py:105-110): an integral column
     entirely strictly inside +/-2**30 is `int`, anything else is
     `bigint` — in BOTH directions (a value in (2**30, 2**31) fits int32
     but the reference still declares bigint).
     """
-    aggs = []
+    aggs = ["count(1) AS __rows"]
     for i, (c, t) in enumerate(df.dtypes):
         col = _ident(c)
         aggs.append(f"count({col}) AS __nn_{i}")
@@ -141,20 +145,21 @@ def preprocess(df: DataFrame) -> DataFrame:
             aggs.append(f"min({col}) AS __mn_{i}")
             aggs.append(f"max({col}) AS __mx_{i}")
     stats = df.selectExpr(*aggs).first()
+    rows = stats["__rows"]
 
     out = []
     for i, (c, t) in enumerate(df.dtypes):
         col = _ident(c)
         nn = stats[f"__nn_{i}"]
-        if nn == 0:  # all-NULL column -> drop (hu:88-90)
+        if rows and nn == 0:  # all-NULL column -> drop (hu:88-90)
             continue
-        if t == "string" and stats[f"__ts_{i}"] == nn:
+        if t == "string" and rows and stats[f"__ts_{i}"] == nn:
             col = _try_ts(col)  # every non-null value is a timestamp (hu:91-95)
         elif t == "date":
             col = f"CAST({col} AS TIMESTAMP)"
         elif t in _INTEGRAL_TYPES:
             mn, mx = stats[f"__mn_{i}"], stats[f"__mx_{i}"]
-            narrow = mn > -INT_WIDTH_BOUND and mx < INT_WIDTH_BOUND
+            narrow = rows and mn > -INT_WIDTH_BOUND and mx < INT_WIDTH_BOUND
             col = f"CAST({col} AS {'INT' if narrow else 'BIGINT'})"
         out.append(f"{col} AS {_ident(c)}")
     return df.selectExpr(*out)
@@ -195,23 +200,6 @@ def ingest_folder(
         df = ingest_csv(spark, os.path.join(folder, fname), parquet_dir=parquet_dir)
         registry[table_name_for(fname)] = df.dtypes
     return registry
-
-
-def union_evolving(dfs: list[DataFrame]) -> DataFrame:
-    """Union frames whose schemas drifted (columns added/dropped over
-    time) — the schema-evolution reality of a long-lived ingest folder.
-    Name-based alignment with missing columns null-filled; the column
-    order of the FIRST frame wins, later additions append in first-seen
-    order. Equivalent to parquet mergeSchema at read time, but usable on
-    already-transformed frames. Narrow-then-wide int drift is fine
-    (Spark widens in the union); incompatible type drift raises, which
-    is the correct loud failure for a corrupted folder."""
-    if not dfs:
-        raise ValueError("union_evolving: no frames")
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
-    return out
 
 
 def ingest_csv_audited(

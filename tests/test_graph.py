@@ -88,45 +88,11 @@ def test_cc_plan_labels_every_document(spark, sf_dir):
     assert cc.filter(F.col("component") > F.col("doc_id")).count() == 0
 
 
-def test_pagerank_converges_to_the_power_iteration_fixed_point(spark):
-    """pagerank() must converge to the same fixed point as a dense
-    numpy power iteration on the same 5-node graph (dangling node
-    included — its mass redistributes uniformly), and the scores must
-    stay a probability distribution."""
-    import numpy as np
-    from comperhensive_bigdata_analysis__spark.operators.graph import pagerank
-
-    edges = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2)]  # node 4 dangling? no: give 4 an in-edge
-    edges.append((2, 4))  # 4 has no out-edges -> dangling
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["rank"] for r in pagerank(df, "src", "dst", tol=1e-10).collect()}
-
-    n, d = 5, 0.85
-    M = np.zeros((n, n))
-    out = {}
-    for s, t in edges:
-        out.setdefault(s, []).append(t)
-    r = np.full(n, 1.0 / n)
-    for _ in range(200):
-        nxt = np.full(n, (1 - d) / n)
-        dangling = sum(r[s] for s in range(n) if s not in out)
-        nxt += d * dangling / n
-        for s, ts in out.items():
-            for t in ts:
-                nxt[t] += d * r[s] / len(ts)
-        r = nxt
-    assert abs(sum(got.values()) - 1.0) < 1e-6
-    for i in range(n):
-        assert abs(got[i] - r[i]) < 1e-6, (i, got[i], r[i])
-
-
 def test_iterative_loops_free_superseded_checkpoints(spark):
     """ADVICE r7: the per-round localCheckpoints must not accumulate —
-    after a multi-round pagerank / connected_components run, executor
-    storage holds only the loop-invariant frames plus the FINAL round's
-    checkpoint, not one rank/label vector per iteration."""
-    from comperhensive_bigdata_analysis__spark.operators.graph import pagerank
-
+    after a multi-round connected_components run, executor storage
+    holds only the loop-invariant frames plus the FINAL round's
+    checkpoint, not one label vector per iteration."""
     sc = spark.sparkContext
 
     def persisted():
@@ -136,16 +102,28 @@ def test_iterative_loops_free_superseded_checkpoints(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "src long, dst long"
     )
-    ranks = pagerank(chain, "src", "dst", max_iter=10, tol=0.0)
-    assert ranks.count() == 13
-    # loop-invariants (edges, universe, outdeg) + final ranks = 4
-    assert persisted() - before <= 4, (before, persisted())
-
-    before = persisted()
     labels = connected_components(chain, "src", "dst", max_iter=10)
     assert labels.count() == 13
     # symmetrized edges + final labels = 2
     assert persisted() - before <= 2, (before, persisted())
+
+
+def test_pagerank_loop_frees_superseded_checkpoints(spark, sf_dir):
+    """The catalog's 5-round PageRank loop frees each superseded
+    round's checkpoint: executor storage grows by fewer entries than
+    the loop has rounds (edges, universe, outdeg and the final ranks
+    are 4; without the free it would be 3 + 5)."""
+    from comperhensive_bigdata_analysis__spark.plans.graph import (
+        _PAGERANK_LOOP_ROUNDS,
+        pagerank_loop_parts,
+    )
+
+    sc = spark.sparkContext
+    before = len(sc._jsc.getPersistentRDDs())
+    top = pagerank_loop_parts(spark, sf_dir)
+    assert top.count() > 0
+    grown = len(sc._jsc.getPersistentRDDs()) - before
+    assert grown < _PAGERANK_LOOP_ROUNDS, grown
 
 
 def test_free_checkpoint_warns_when_expected_leaf_missing(spark):

@@ -135,28 +135,29 @@ def test_folder_ingest_registry(spark, csv_dir, tmp_path):
     assert os.path.isdir(str(tmp_path / "pq" / "power_plants_de"))
 
 
-def test_union_evolving_aligns_drifted_schemas(spark):
-    from comperhensive_bigdata_analysis__spark.sources.ingest import union_evolving
+def test_header_only_csv_ingests_as_empty_string_table(spark, tmp_path):
+    """A CSV with a header and no rows registers a zero-row table whose
+    columns are its sanitized headers, typed string: on zero rows no
+    column is "all NULL" or "all timestamps" — both hold vacuously."""
+    p = tmp_path / "Empty Sheet.csv"
+    p.write_text("a,b c,d-e\n")
+    df = ingest_csv(spark, str(p), parquet_dir=str(tmp_path / "pq"))
+    assert df.dtypes == [("a", "string"), ("b_c", "string"), ("d_e", "string")]
+    assert df.count() == 0
+    assert spark.table("empty_sheet").count() == 0
 
-    v1 = spark.createDataFrame([(1, "a")], "id: int, name: string")
-    v2 = spark.createDataFrame([(2, "b", 9.5)], "id: int, name: string, score: double")
-    v3 = spark.createDataFrame([(3, 7.5)], "id: bigint, score: double")  # name dropped
-    out = union_evolving([v1, v2, v3]).orderBy("id")
-    assert out.columns == ["id", "name", "score"]  # first frame order + appends
-    assert dict(out.dtypes)["id"] == "bigint"  # int widened by v3
-    rows = [tuple(r) for r in out.collect()]
-    assert rows == [(1, "a", None), (2, "b", 9.5), (3, None, 7.5)]
 
+def test_folder_ingest_survives_a_header_only_file(spark, csv_dir, tmp_path):
+    """One header-only file does not abort the folder: every other file
+    still ingests, and the empty one registers with its columns."""
+    import shutil
 
-def test_union_evolving_rejects_incompatible_drift(spark):
-    import pytest as _pytest
-
-    from comperhensive_bigdata_analysis__spark.sources.ingest import union_evolving
-
-    a = spark.createDataFrame([(1,)], "x: int")
-    b = spark.createDataFrame([(["nope"],)], "x: array<string>")
-    with _pytest.raises(Exception):
-        union_evolving([a, b]).collect()
+    d = tmp_path / "mixed"
+    shutil.copytree(csv_dir, d)
+    (d / "blank.csv").write_text("x,y\n")
+    reg = ingest_folder(spark, str(d), parquet_dir=str(tmp_path / "pq"))
+    assert reg["blank"] == [("x", "string"), ("y", "string")]
+    assert "commissioning_date" in [c for c, _ in reg["power_plants_de"]]
 
 
 def test_format_roundtrips(spark, tmp_path):

@@ -1,177 +1,16 @@
-"""Partitioned-write pruning + compaction behavior."""
+"""The z-order key of the data-layout plans (plans/layout.py)."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-import os
-
+import pytest
 from pyspark.sql import functions as F
 
-from comperhensive_bigdata_analysis__spark.sources.layout import (
-    compact,
-    write_partitioned,
-)
-from comperhensive_bigdata_analysis__spark.sources.tables import load_table
-
-
-def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
-    e = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.col("ts").cast("date")
-    )
-    out = str(tmp_path / "events_by_day")
-    write_partitioned(e, out, ["day"])
-    # hive-style directories exist
-    assert any(d.startswith("day=") for d in os.listdir(out))
-
-    back = spark.read.parquet(out)
-    one_day = back.select("day").distinct().first()["day"]
-    q = back.filter(F.col("day") == F.lit(one_day))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q.explain("formatted")
-    ex = buf.getvalue()
-    assert "PartitionFilters" in ex and "day" in ex
-    # pruned read returns exactly that day's rows
-    assert q.count() == e.filter(F.col("day") == F.lit(one_day)).count()
-
-
-def test_dynamic_partition_overwrite_is_surgical(spark, sf_dir, tmp_path):
-    from comperhensive_bigdata_analysis__spark.sources.layout import (
-        overwrite_partitions,
-    )
-
-    e = load_table(spark, sf_dir, "events").withColumn(
-        "day", F.col("ts").cast("date")
-    )
-    out = str(tmp_path / "by_day")
-    write_partitioned(e, out, ["day"])
-    total = e.count()
-    one_day = e.select("day").distinct().orderBy("day").first()["day"]
-    day_rows = e.filter(F.col("day") == F.lit(one_day))
-
-    # backfill that day with doubled values; all other days must survive
-    patched = day_rows.withColumn("value", F.col("value") * 2)
-    overwrite_partitions(patched, out, ["day"])
-
-    back = spark.read.parquet(out)
-    assert back.count() == total  # nothing else was truncated
-    got = back.filter(F.col("day") == F.lit(one_day)).agg(F.sum("value")).first()[0]
-    want = day_rows.agg(F.sum("value")).first()[0] * 2
-    assert abs(got - want) < 1e-6
-
-
-def test_compact_reduces_files_preserves_rows(spark, sf_dir, tmp_path):
-    e = load_table(spark, sf_dir, "events")
-    out = str(tmp_path / "fragmented")
-    e.repartition(40).write.parquet(out)  # simulate small-file accretion
-    n_before = sum(f.endswith(".parquet") for f in os.listdir(out))
-    rows_before = spark.read.parquet(out).count()
-
-    compact(spark, out, target_file_mb=256)
-
-    n_after = sum(f.endswith(".parquet") for f in os.listdir(out))
-    assert n_after < n_before
-    assert spark.read.parquet(out).count() == rows_before
-
-
-def test_range_sorted_write_gives_disjoint_file_ranges(spark, sf_dir, tmp_path):
-    """Files from write_range_sorted cover non-overlapping key ranges —
-    the property parquet min/max skipping needs to prune files."""
-    import pyspark.sql.functions as F
-
-    from comperhensive_bigdata_analysis__spark.sources.layout import (
-        write_range_sorted,
-    )
-    from comperhensive_bigdata_analysis__spark.sources.tables import load_table
-
-    out = str(tmp_path / "sorted_orders")
-    src = load_table(spark, sf_dir, "orders")
-    write_range_sorted(src, out, "o_totalprice", n_files=6)
-
-    per_file = (
-        spark.read.parquet(out)
-        .groupBy(F.input_file_name().alias("f"))
-        .agg(F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi"))
-        .collect()
-    )
-    assert len(per_file) >= 4  # range partitioner actually split
-    spans = sorted((r["lo"], r["hi"]) for r in per_file)
-    for (_, hi_prev), (lo_next, _) in zip(spans, spans[1:]):
-        assert hi_prev <= lo_next  # disjoint -> min/max stats prune files
-    assert spark.read.parquet(out).count() == src.count()
-
-
-def test_zordered_write_narrows_both_columns(spark, sf_dir, tmp_path):
-    """Z-ordering on (o_totalprice, o_orderdate) must make the average
-    per-file extent of EACH column materially narrower than its global
-    domain — the property multi-column min/max skipping needs. A
-    single-column sort can't do this for the second column."""
-    import pyspark.sql.functions as F
-
-    from comperhensive_bigdata_analysis__spark.sources.layout import write_zordered
-    from comperhensive_bigdata_analysis__spark.sources.tables import load_table
-
-    src = load_table(spark, sf_dir, "orders").withColumn(
-        "o_epoch_day",
-        F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01").cast("date")),
-    )
-    out = str(tmp_path / "z_orders")
-    write_zordered(src, out, ["o_totalprice", "o_epoch_day"], n_files=16)
-
-    back = spark.read.parquet(out)
-    assert back.count() == src.count()
-
-    per_file = (
-        back.groupBy(F.input_file_name().alias("f"))
-        .agg(
-            (F.max("o_totalprice") - F.min("o_totalprice")).alias("span_price"),
-            (F.max("o_epoch_day") - F.min("o_epoch_day")).alias("span_day"),
-        )
-        .collect()
-    )
-    assert len(per_file) >= 8
-    glob = src.agg(
-        (F.max("o_totalprice") - F.min("o_totalprice")).alias("p"),
-        (F.max("o_epoch_day") - F.min("o_epoch_day")).alias("d"),
-    ).collect()[0]
-    avg_p = sum(r["span_price"] for r in per_file) / len(per_file)
-    avg_d = sum(r["span_day"] for r in per_file) / len(per_file)
-    # With 16 files and 2 dims, ideal extent is ~1/4 of the domain per
-    # column; allow generous slack for bucket-boundary straddle.
-    assert avg_p < 0.6 * glob["p"]
-    assert avg_d < 0.6 * glob["d"]
+from comperhensive_bigdata_analysis__spark.plans.layout import zorder_key
 
 
 def test_zorder_key_rejects_bigint_overflow(spark):
     """bits*len(cols) > 63 would wrap JVM shiftleft amounts mod 64 and
     corrupt the Morton ordering — must refuse loudly (ADVICE r1)."""
-    import pytest as _pytest
-
-    from comperhensive_bigdata_analysis__spark.sources.layout import zorder_key
-
     cols = [F.col(c) for c in ("a", "b", "c", "d")]
-    with _pytest.raises(ValueError, match="exceeds 63"):
+    with pytest.raises(ValueError, match="exceeds 63"):
         zorder_key(cols, bits=16)  # 64 bits of key
-
-
-def test_write_zordered_clamps_bits(spark, sf_dir, tmp_path):
-    """Four columns at bits=16 would need 64 key bits; the clamp to
-    63//4=15 must keep the write working."""
-    from comperhensive_bigdata_analysis__spark.sources.layout import write_zordered
-
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .withColumn(
-            "o_epoch_day",
-            F.datediff(
-                F.to_date("o_orderdate"), F.lit("1970-01-01").cast("date")
-            ),
-        )
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_epoch_day")
-        .limit(500)
-    )
-    cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_epoch_day"]
-    out = str(tmp_path / "z6")
-    write_zordered(o, out, cols, n_files=2, bits=16)
-    assert spark.read.parquet(out).count() == 500

@@ -1,14 +1,11 @@
-"""MERGE surface: SCD1 upsert and SCD2 history semantics, including the
-idempotent-replay property a CDC pipeline depends on."""
+"""MERGE surface: SCD1 upsert semantics, and its persistence through a
+dynamic partition overwrite."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row, functions as F
 
-from comperhensive_bigdata_analysis__spark.operators.merge import (
-    merge_upsert,
-    scd2_apply,
-)
+from comperhensive_bigdata_analysis__spark.operators.merge import merge_upsert
 
 
 def _target(spark):
@@ -39,79 +36,18 @@ def test_merge_upsert_broadcasts_updates(spark):
     assert "Broadcast" in buf.getvalue()         # target side never shuffles
 
 
-def _history(spark):
-    return spark.createDataFrame(
-        [
-            # key 1: one closed + one current version; key 2: current only
-            Row(k=1, city="ume", pop=80, valid_from="t0", valid_to="t1", is_current=False),
-            Row(k=1, city="ume", pop=90, valid_from="t1", valid_to=None, is_current=True),
-            Row(k=2, city="lund", pop=95, valid_from="t0", valid_to=None, is_current=True),
-        ]
-    )
-
-
-def test_scd2_change_new_and_untouched(spark):
-    updates = spark.createDataFrame(
-        [
-            Row(k=1, city="ume", pop=91),   # changed attr -> close + new version
-            Row(k=2, city="lund", pop=95),  # identical -> no-op
-            Row(k=3, city="are", pop=3),    # brand-new key
-        ]
-    )
-    out = scd2_apply(_history(spark), updates, ["k"], ["city", "pop"], "t2")
-    rows = sorted(out.collect(), key=lambda r: (r["k"], r["valid_from"]))
-    by_key = {}
-    for r in rows:
-        by_key.setdefault(r["k"], []).append(r)
-
-    k1 = by_key[1]
-    assert [r["is_current"] for r in k1] == [False, False, True]
-    assert (k1[1]["valid_to"], k1[2]["valid_from"]) == ("t2", "t2")  # contiguous
-    assert k1[2]["pop"] == 91
-
-    (k2,) = by_key[2]                            # untouched: still one current row
-    assert k2["is_current"] and k2["valid_to"] is None
-
-    (k3,) = by_key[3]
-    assert k3["is_current"] and k3["valid_from"] == "t2"
-
-
-def test_scd2_unmatched_current_rows_survive(spark):
-    """A batch that mentions NO existing key must leave every current row
-    open (a left-join miss is not a change)."""
-    updates = spark.createDataFrame([Row(k=9, city="lulea", pop=5)])
-    out = scd2_apply(_history(spark), updates, ["k"], ["city", "pop"], "t2")
-    cur = {r["k"] for r in out.filter(F.col("is_current")).collect()}
-    assert cur == {1, 2, 9}
-    assert out.filter(~F.col("is_current")).count() == 1  # only the old t0 row
-
-
-def test_scd2_replay_is_idempotent(spark):
-    updates = spark.createDataFrame([Row(k=1, city="ume", pop=91)])
-    once = scd2_apply(_history(spark), updates, ["k"], ["city", "pop"], "t2")
-    twice = scd2_apply(once, updates, ["k"], ["city", "pop"], "t2")
-    a = sorted(map(tuple, once.collect()))
-    b = sorted(map(tuple, twice.collect()))
-    assert a == b                                # same batch applied twice: no-op
-
-
 def test_upsert_persists_via_partition_scoped_rewrite(spark, tmp_path):
     """End-to-end CDC: a partitioned target + merge_upsert + dynamic
     partition overwrite rewrites ONLY the partitions the batch touches —
     untouched partition directories keep their original files."""
     import os
 
-    from comperhensive_bigdata_analysis__spark.sources.layout import (
-        overwrite_partitions,
-        write_partitioned,
-    )
-
     path = str(tmp_path / "t")
     target = spark.createDataFrame(
         [Row(k=i, region=r, v=i * 10) for i, r in
          [(1, "eu"), (2, "eu"), (3, "us"), (4, "us"), (5, "ap")]]
     )
-    write_partitioned(target, path, ["region"])
+    target.write.partitionBy("region").parquet(path)
     files_before = {
         p: sorted(os.listdir(os.path.join(path, p)))
         for p in os.listdir(path) if p.startswith("region=")
@@ -123,7 +59,12 @@ def test_upsert_persists_via_partition_scoped_rewrite(spark, tmp_path):
     merged = merge_upsert(
         current.filter(F.col("region").isin(touched)), updates, ["k"]
     )
-    overwrite_partitions(merged, path, ["region"])
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        merged.write.mode("overwrite").partitionBy("region").parquet(path)
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     out = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert out == {1: 10, 2: 999, 3: 30, 4: 40, 5: 50}

@@ -5,8 +5,11 @@ must be referenced from somewhere outside ``tests/`` — the package
 itself, ``perfbench/``, ``tools/`` or ``__spark_entry__.py``. A
 ``@plan``-registered function counts as used (the catalog calls it),
 and so does a dunder hook such as a module ``__getattr__`` (Python
-calls it). A reference is a name, an attribute or an imported name anywhere in
-those files other than inside the definition itself.
+calls it). A reference is a use of the name — a bare name or an
+attribute — anywhere in those files other than inside the definition
+itself. An import is not a use: a ``from .x import name`` alias (a
+package ``__init__`` re-export, say) that nothing then calls does not
+keep ``name`` alive.
 
 What is kept on purpose sits in ``_TEST_ONLY_ALLOWLIST`` with its
 reason. Like ``_BROADCAST_ALLOWLIST``, the list is an exact inventory:
@@ -35,23 +38,17 @@ _TEST_ONLY_ALLOWLIST = {
     "namespace helpers",
     ("session.py", "table_exists"): "paper capability: the warehouse "
     "namespace helpers",
-    ("operators/graph.py", "pagerank"): "paper capability: graph "
-    "analytics",
-    ("sources/ingest.py", "union_evolving"): "paper capability: "
-    "schema-drifted folder ingest",
     ("sources/ingest.py", "ingest_csv_audited"): "the quarantining "
     "ingest ROADMAP item 3 builds on",
     ("multimodal.py", "bmp_encode"): "builds the BMP decoder's test "
     "inputs; moving it into the tests removes nothing",
-    ("plans/ml.py", "semdedup_dup_edges"): "the production SemDeDup "
-    "edge union; its union test cross-checks it against "
-    "semdedup_salt_recall, which does not run that union",
-    ("sources/layout.py", "overwrite_partitions"): "deployment write "
-    "path documented in DEPLOY.md and named by operators/merge.py",
-    ("sources/layout.py", "write_range_sorted"): "deployment write path "
-    "documented in DEPLOY.md",
-    ("sources/layout.py", "write_zordered"): "deployment write path "
-    "documented in DEPLOY.md; plans/layout.py checks its key math",
+    ("plans/ml.py", "semdedup_dup_edges"): "the test reference for the "
+    "census's salted union (_dup_edges_union): its test checks the "
+    "union's per-salt edge counts against semdedup_salt_recall",
+    ("sources/jdbc.py", "read_jdbc"): "paper capability: the "
+    "reference's MySQL/RDS read path (sql_utils.py, SURVEY S9)",
+    ("sources/jdbc.py", "write_jdbc"): "paper capability: the "
+    "reference's MySQL/RDS write path (sql_utils.py, SURVEY S10)",
 }
 
 
@@ -80,8 +77,6 @@ def _referenced_name(node) -> str | None:
         return node.id
     if isinstance(node, ast.Attribute):
         return node.attr
-    if isinstance(node, ast.alias):
-        return node.name.rsplit(".", 1)[-1]
     return None
 
 

@@ -408,7 +408,6 @@ def test_salted_topk_plans_keep_group_limit(spark, sf_dir, name):
 _BROADCAST_ALLOWLIST = {
     ("operators/curation.py", "dsir_score"),
     ("operators/merge.py", "merge_upsert"),
-    ("operators/merge.py", "scd2_apply"),
     ("operators/similarity.py", "brute_force_knn"),
     ("operators/skew.py", "distributed_scan"),
     ("plans/analytics.py", "_dow_offsets"),

@@ -1,16 +1,10 @@
-"""Sketch tolerance + bucketed-join Exchange elimination."""
+"""Sketch tolerance: approximate distinct counts and percentiles against
+their exact counterparts."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
 
-from comperhensive_bigdata_analysis__spark.operators.bucketing import (
-    colocated_join,
-    write_bucketed,
-)
 from comperhensive_bigdata_analysis__spark.plans.sketch import approx_distinct_users
 from comperhensive_bigdata_analysis__spark.sources.tables import load_table
 
@@ -54,34 +48,6 @@ def test_approx_percentile_close_to_exact(spark, sf_dir):
     for k in exact:
         for a, e in zip(approx[k], exact[k]):
             assert abs(a - e) / abs(e) <= 0.05, (k, a, e)
-
-
-def test_bucketed_join_eliminates_exchange(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    l = load_table(spark, sf_dir, "lineitem")
-    for t in ("b_orders", "b_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # test-scale tables would broadcast; disable so the plan shows
-        # the big-big merge path the bucketing exists for
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(o, "b_orders", "o_orderkey", buckets=8)
-        write_bucketed(l, "b_lineitem", "l_orderkey", buckets=8)
-        j = colocated_join(spark, "b_orders", "b_lineitem", "o_orderkey", "l_orderkey")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            j.explain("formatted")
-        ex = buf.getvalue()
-        assert "SortMergeJoin" in ex
-        assert "Exchange" not in ex, "bucketed join still shuffles"
-        # sanity: result matches the unbucketed join
-        expected = o.join(l, o.o_orderkey == l.l_orderkey).count()
-        assert j.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        for t in ("b_orders", "b_lineitem"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_hll_mergeable_union_within_tolerance(spark, sf_dir):
