@@ -15,14 +15,19 @@ Spark treats NULL as smallest (ASC -> NULLS FIRST). Harmless for a bare
 ORDER BY, but under a LIMIT it changes WHICH rows survive. translate()
 therefore appends an explicit NULLS LAST to every item of the final
 top-level ORDER BY that doesn't already carry a NULLS qualifier —
-giving SQL-text users Presto's semantics on Spark. (Paren-depth-aware
-AND string-literal-aware: keyword/paren positions are scanned on a
-literal-masked copy of the text, so ORDER BYs inside OVER() windows,
-subqueries, or quoted strings are untouched; trailing semicolons are
-stripped before the splice. Write explicit NULLS FIRST/LAST to opt
-out.) Tests (tests/test_reference_queries.py) replay
-the reference's Q0-Q12 verbatim to pin the pass-through behaviors;
-tests/test_sqldoor_dialect.py pins the NULL-ordering rewrite.
+giving SQL-text users Presto's semantics on Spark. Write explicit
+NULLS FIRST/LAST to opt out.
+
+Every rewrite reads one lexer, `_mask`: a copy of the text with the
+contents of string literals, quoted identifiers and `--` / `/* */`
+comments blanked, every position kept. Keyword and paren scans run on
+that copy, so an ORDER BY, a paren or a Presto spelling inside a
+literal or a comment is never rewritten, and NULLS LAST lands after an
+item's last code character, never inside a trailing comment. Trailing
+semicolons are stripped before the splice. Tests
+(tests/test_reference_queries.py) replay the reference's Q0-Q12
+verbatim to pin the pass-through behaviors; tests/test_sqldoor_dialect.py
+pins the rewrites.
 """
 
 from __future__ import annotations
@@ -32,118 +37,117 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from .session import apply_runtime_confs, register
-from .sources.ingest import ingest_csv, ingest_folder
+from .sources.ingest import ingest_csv
 
 _ORDER_BY_RE = re.compile(r"\border\s+by\b", re.IGNORECASE)
 _LIST_END_RE = re.compile(r"\b(limit|offset|fetch)\b", re.IGNORECASE)
 _NULLS_RE = re.compile(r"\bnulls\s+(first|last)\b", re.IGNORECASE)
+#: The non-code lexemes, in Presto's rules: a quote inside a literal or
+#: a quoted identifier is escaped by DOUBLING (``'it''s'``) and a
+#: backslash is an ordinary character; comments do not nest, and an
+#: unclosed ``/*`` runs to the end of the text. The last branch is a
+#: quote that never closes.
+_LEXEME_RE = re.compile(
+    r"'[^']*(?:''[^']*)*'"
+    r'|"[^"]*(?:""[^"]*)*"'
+    r"|--[^\n]*"
+    r"|/\*.*?(?:\*/|\Z)"
+    r"|['\"]",
+    re.DOTALL,
+)
+_PAREN_COMMA_RE = re.compile(r"[(),]")
 
 
-def _mask_literals(q: str) -> str:
-    """Blank out the CONTENTS of single-quoted string literals (and the
-    '' escape) AND double-quoted identifiers (ANSI/Presto spelling, ""
-    escape) with spaces, preserving every character position, so the
-    keyword/paren scans below can't be fooled by SQL text inside a
-    string or a quoted column name like "order by". Quote characters
-    themselves are kept.
+def _mask(q: str, keep_literals: bool = False) -> str:
+    """``q`` with the contents of each literal and quoted identifier
+    (quote characters kept) and each whole comment blanked to spaces,
+    every position kept — so a character is code exactly where the
+    masked text still equals ``q``. With ``keep_literals`` only the
+    comments are blanked (the text to splice into a rewrite).
 
-    Raises ValueError when a quoted region never closes: the scans
-    would otherwise treat the rest of the text as quoted content, and
-    rewrites on such garbage are not stable. Dialect contract: this
-    front door speaks PRESTO string-literal rules, where a quote inside
-    a literal is escaped by DOUBLING (``'it''s'``) and a backslash is an
-    ordinary character. Spark's non-default backslash spelling
-    (``'it\\'s'``) therefore reads as a literal ``it\\`` followed by an
-    unterminated ``s'`` and is rejected by design — matching what
-    Presto itself would do."""
-    out = list(q)
-    i, n = 0, len(q)
-    while i < n:
-        if q[i] in ("'", '"'):
-            quote = q[i]
-            j = i + 1
-            while j < n:
-                if q[j] == quote:
-                    if j + 1 < n and q[j + 1] == quote:  # doubled escape
-                        out[j] = out[j + 1] = " "
-                        j += 2
-                        continue
-                    break
-                out[j] = " "
-                j += 1
-            if j >= n:
-                raise ValueError(
-                    "unterminated quote in SQL text — refusing to rewrite "
-                    "(this Presto-dialect door escapes quotes by doubling: "
-                    "'it''s', never backslash)"
-                )
-            i = j + 1
-        else:
-            i += 1
-    return "".join(out)
+    Raises ValueError when a quote never closes: the scans would
+    otherwise treat the rest of the text as quoted content, and
+    rewrites on such garbage are not stable. Spark's non-default
+    backslash spelling (``'it\\'s'``) therefore reads as a literal
+    ``it\\`` followed by an unterminated ``s'`` and is rejected by
+    design — matching what Presto itself would do."""
 
+    def blank(m: re.Match) -> str:
+        s = m.group()
+        if s[0] not in "'\"":
+            return " " * len(s)
+        if len(s) == 1:
+            raise ValueError(
+                "unterminated quote in SQL text — refusing to rewrite "
+                "(this Presto-dialect door escapes quotes by doubling: "
+                "'it''s', never backslash)"
+            )
+        return s if keep_literals else s[0] + " " * (len(s) - 2) + s[-1]
 
-def _literal_flags(q: str) -> list[bool]:
-    """Per-character flags: True where the character sits INSIDE a
-    single-quoted string literal or a double-quoted identifier (quote
-    characters themselves are False). Same scan as _mask_literals,
-    exposed as positions so token rewrites can skip matches that start
-    inside quoted text."""
-    masked = _mask_literals(q)
-    return [m == " " and c != " " for c, m in zip(q, masked)]
+    return _LEXEME_RE.sub(blank, q)
 
 
 def _depth(q: str, upto: int) -> int:
     return q.count("(", 0, upto) - q.count(")", 0, upto)
 
 
-def _split_top_level_positions(masked: str) -> list[int]:
-    """Comma positions at paren depth 0 (computed on the masked text)."""
-    cuts, depth = [], 0
-    for i, ch in enumerate(masked):
+def _code_match(pat: re.Pattern, q: str, pos: int = 0) -> re.Match | None:
+    """The first match of ``pat`` at or after ``pos`` that starts in
+    code, not inside a literal or a comment."""
+    masked = _mask(q)
+    return next(
+        (m for m in pat.finditer(q, pos) if masked[m.start()] == q[m.start()]),
+        None,
+    )
+
+
+def _call_args(q: str, open_end: int) -> tuple[list[str], int]:
+    """The top-level arguments of the call whose ``(`` ends at
+    ``open_end``, comments blanked and whitespace stripped, and the
+    position just past its closing paren. Commas and parens inside
+    nested calls, literals and comments never split an argument."""
+    masked = _mask(q)
+    depth, cuts = 0, [open_end]
+    for p in _PAREN_COMMA_RE.finditer(masked, open_end):
+        ch = p.group()
         if ch == "(":
             depth += 1
-        elif ch == ")":
+        elif depth and ch == ")":
             depth -= 1
-        elif ch == "," and depth == 0:
-            cuts.append(i)
-    return cuts
+        elif not depth:
+            cuts.append(p.end())
+            if ch == ")":
+                args = [
+                    _mask(q[a : b - 1], keep_literals=True).strip()
+                    for a, b in zip(cuts, cuts[1:])
+                ]
+                return args, p.end()
+    raise ValueError(f"unbalanced parens after {q[:open_end][-40:]!r}")
 
 
 def _presto_null_order(q: str) -> str:
-    """Append NULLS LAST (Presto's direction-independent default) to
-    each unqualified item of the final top-level ORDER BY. Keyword and
-    paren positions come from the literal-masked text so ORDER BYs (or
-    parens) inside string literals never trigger or skew the scan."""
-    masked = _mask_literals(q)
-    last = None
-    for m in _ORDER_BY_RE.finditer(masked):
-        if _depth(masked, m.start()) == 0:
-            last = m
-    if last is None:
+    """Append NULLS LAST (Presto's direction-independent default) right
+    after the last code character of each unqualified item of the final
+    top-level ORDER BY. Keyword, paren and comma positions come from the
+    masked text, so ORDER BYs, parens or NULLS qualifiers inside
+    literals and comments never trigger or skew the scan."""
+    masked = _mask(q)
+    top = [m for m in _ORDER_BY_RE.finditer(masked) if _depth(masked, m.start()) == 0]
+    if not top:
         return q
-    start = last.end()
-    mtail = masked[start:]
-    tail = q[start:]
-    end = len(tail)
-    for m in _LIST_END_RE.finditer(mtail):
-        if _depth(mtail, m.start()) == 0:
-            end = m.start()
-            break
-    cuts = [c for c in _split_top_level_positions(mtail[:end])]
-    items = []
-    prev = 0
-    for c in cuts + [end]:
-        it = tail[prev:c]
-        s = it.strip()
-        if not s:  # degenerate/invalid item — leave untouched
-            items.append(s)
-        elif _NULLS_RE.search(_mask_literals(s)):
-            items.append(s)
-        else:
-            items.append(s + " NULLS LAST")
-        prev = c + 1
-    return q[:start] + " " + ", ".join(items) + ("\n" if end < len(tail) else "") + tail[end:]
+    start = top[-1].end()
+    end = next(
+        (m.start() for m in _LIST_END_RE.finditer(masked, start)
+         if _depth(masked, m.start()) == 0),
+        len(q),
+    )
+    commas = [i for i in range(start, end) if masked[i] == "," and _depth(masked, i) == 0]
+    for a, b in reversed(list(zip([start] + [c + 1 for c in commas], commas + [end]))):
+        item = masked[a:b].rstrip()
+        if item.strip() and not _NULLS_RE.search(item):
+            cut = a + len(item)
+            q = q[:cut] + " NULLS LAST" + q[cut:]
+    return q
 
 
 #: Presto function spellings Spark lacks, as SQL-defined scalar
@@ -211,9 +215,9 @@ def register_presto_compat(spark: SparkSession) -> None:
 
 #: Token rewrites for Presto spellings that can't be SQL UDFs: aggregate
 #: functions (SQL UDFs are scalar-only) and names that collide with
-#: 2-arg Spark builtins. Matches that START inside a single-quoted
-#: string literal are left untouched (translate checks _literal_flags),
-#: so text like '... approx_distinct(' in a literal survives verbatim.
+#: 2-arg Spark builtins. Matches that START inside a literal or a
+#: comment are left untouched (translate checks the masked text), so
+#: text like '... approx_distinct(' in a literal survives verbatim.
 def _tablesample_repl(m: re.Match) -> str:
     if m.group(1).upper() == "SYSTEM":
         raise ValueError(
@@ -269,51 +273,27 @@ def _rewrite_call(q: str, name: str, nargs: int, template) -> str:
     """Paren-aware rewrite of ``name(arg1, ..., argN)`` call sites —
     for Presto spellings whose arguments must be SPLICED into a Spark
     expression (aggregates can't be SQL UDFs, and a flat token rewrite
-    can't reuse an argument twice). Arguments are extracted with the
-    same literal-masked balanced-paren scan as UNNEST, so commas inside
-    nested calls or string literals never split, and occurrences inside
-    literals are left untouched. ``template`` receives the argument
-    texts and returns the replacement expression. Runs until no match
-    so nested occurrences (e.g. in different subqueries) all rewrite;
-    the template must not emit the rewritten name itself."""
+    can't reuse an argument twice). Arguments come from `_call_args`,
+    and occurrences inside literals or comments are left untouched.
+    ``template`` receives the argument texts and returns the
+    replacement expression. Runs until no match so nested occurrences
+    (e.g. in different subqueries) all rewrite; the template must not
+    emit the rewritten name itself."""
     pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-    pos = 0
-    while True:
-        flags = _literal_flags(q)
-        m = None
-        for cand in pat.finditer(q, pos):
-            if not flags[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            return q
-        depth, j = 1, m.end()
-        while j < len(q) and depth:
-            if not flags[j]:
-                if q[j] == "(":
-                    depth += 1
-                elif q[j] == ")":
-                    depth -= 1
-            j += 1
-        if depth:
-            raise ValueError(f"unbalanced parens in {name}(...)")
-        arg = q[m.end() : j - 1]
-        cuts = _split_top_level_positions(_mask_literals(arg))
-        args, prev = [], 0
-        for c in cuts + [len(arg)]:
-            args.append(arg[prev:c].strip())
-            prev = c + 1
+    m = _code_match(pat, q)
+    while m:
+        args, end = _call_args(q, m.end())
         if len(args) != nargs:
             raise ValueError(
                 f"{name}() takes {nargs} argument(s), got {len(args)}"
             )
-        repl = template(*args)
-        q = q[: m.start()] + repl + q[j:]
+        q = q[: m.start()] + template(*args) + q[end:]
         # rescan FROM the rewrite site, not past it: an occurrence
         # spliced through verbatim inside the arguments (e.g. in a
         # scalar subquery) still needs rewriting. Terminates because
         # each pass removes one `name(` and the template emits none.
-        pos = m.start()
+        m = _code_match(pat, q, m.start())
+    return q
 
 
 #: Presto aggregate-map spellings -> Spark catalyst compositions.
@@ -445,30 +425,23 @@ def _joda_format_to_spark(fmt: str) -> str:
     return "".join(out)
 
 
-def _format_datetime_template(t: str, f: str) -> str:
-    fs = f.strip()
-    m = re.fullmatch(r"'((?:[^']|'')*)'", fs, re.DOTALL)
-    if m is None:
-        raise ValueError(
-            "format_datetime(): the format argument must be a string "
-            "literal — spell the Spark date_format(expr, pattern) call "
-            "directly for computed formats"
-        )
-    spark_fmt = _joda_format_to_spark(m.group(1).replace("''", "'"))
-    return f"date_format({t}, '" + spark_fmt.replace("'", "''") + "')"
+def _format_template(name: str, spark_name: str, compile_format):
+    """Template for Presto ``name(x, '<format>')`` -> Spark
+    ``spark_name(x, '<compiled format>')``; the format must be a string
+    literal, compiled at translate time."""
 
+    def template(x: str, f: str) -> str:
+        m = re.fullmatch(r"'((?:[^']|'')*)'", f, re.DOTALL)
+        if m is None:
+            raise ValueError(
+                f"{name}(): the format argument must be a string literal "
+                f"— spell the Spark {spark_name}(expr, pattern) call "
+                f"directly for computed formats"
+            )
+        spark_fmt = compile_format(m.group(1).replace("''", "'"))
+        return f"{spark_name}({x}, '" + spark_fmt.replace("'", "''") + "')"
 
-def _date_parse_template(s: str, f: str) -> str:
-    fs = f.strip()
-    m = re.fullmatch(r"'((?:[^']|'')*)'", fs, re.DOTALL)
-    if m is None:
-        raise ValueError(
-            "date_parse(): the format argument must be a string "
-            "literal — spell the Spark to_timestamp(expr, pattern) "
-            "call directly for computed formats"
-        )
-    spark_fmt = _mysql_format_to_spark(m.group(1).replace("''", "'"))
-    return f"to_timestamp({s}, '" + spark_fmt.replace("'", "''") + "')"
+    return template
 
 
 def _try_template(e: str) -> str:
@@ -480,58 +453,39 @@ def _try_template(e: str) -> str:
     (...)) / TRY(to_timestamp(...)) -> their try_ builtins. Anything
     else raises with the workaround rather than silently changing
     error semantics."""
-    es = e.strip()
-    masked = _mask_literals(es)
-
-    def _spans_whole(call_match) -> bool:
-        # The matched call must BE the whole expression — a prefix
-        # match like TRY(CAST(a AS INT) / b) would otherwise rewrite
-        # to a partially-protected expression and silently change
-        # error semantics for the unprotected remainder.
-        depth, j = 1, call_match.end()
-        while j < len(es) and depth:
-            if masked[j] == "(":
-                depth += 1
-            elif masked[j] == ")":
-                depth -= 1
-            j += 1
-        return depth == 0 and es[j:].strip() == ""
-
-    m = re.match(r"^cast\s*\(", es, re.IGNORECASE)
-    if m and _spans_whole(m):
-        return "try_cast" + es[m.end() - 1 :]
-    m = re.match(
-        r"^(element_at|to_number|to_timestamp)\s*\(", es, re.IGNORECASE
-    )
-    if m and _spans_whole(m):
-        return "try_" + es
+    # e comes from _call_args: stripped, comments blanked. The matched
+    # call must BE the whole expression — a prefix match like
+    # TRY(CAST(a AS INT) / b) would otherwise rewrite to a
+    # partially-protected expression and silently change error
+    # semantics for the unprotected remainder.
+    m = re.match(r"cast\s*\(", e, re.IGNORECASE)
+    if m and _call_args(e, m.end())[1] == len(e):
+        return "try_cast" + e[m.end() - 1 :]
+    m = re.match(r"(element_at|to_number|to_timestamp)\s*\(", e, re.IGNORECASE)
+    if m and _call_args(e, m.end())[1] == len(e):
+        return "try_" + e
     # TRY(a / b) -> try_divide(a, b), but ONLY when the division is the
     # sole top-level operator of ANY kind — a second operator
     # (arithmetic, concat, comparison, or a word operator) means the
     # split would break precedence/associativity, and the expression
-    # can throw outside the rewritten division anyway.
-    if not (m and _spans_whole(m)):
-        depth = 0
-        ops = []
-        # word operators anywhere make the split unsafe; so do calls
-        # that themselves throw under ANSI (cast, element_at, ...) —
-        # try_divide would leave them unprotected inside an operand
-        other_op = re.search(
-            r"\b(and|or|not|in|is|like|between|case"
-            r"|cast|element_at|to_number|to_timestamp)\b",
-            masked,
-            re.IGNORECASE,
-        )
-        for idx, ch in enumerate(masked):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and idx > 0 and ch in "+-*/%|<>=!":
-                ops.append((ch, idx))
-        if len(ops) == 1 and ops[0][0] == "/" and other_op is None:
-            idx = ops[0][1]
-            return f"try_divide({es[:idx]}, {es[idx + 1:]})"
+    # can throw outside the rewritten division anyway. Word operators
+    # anywhere make the split unsafe; so do calls that themselves throw
+    # under ANSI (cast, element_at, ...) — try_divide would leave them
+    # unprotected inside an operand.
+    masked = _mask(e)
+    other_op = re.search(
+        r"\b(and|or|not|in|is|like|between|case"
+        r"|cast|element_at|to_number|to_timestamp)\b",
+        masked,
+        re.IGNORECASE,
+    )
+    ops = [
+        m.start()
+        for m in re.finditer(r"[-+*/%|<>=!]", masked)
+        if m.start() > 0 and _depth(masked, m.start()) == 0
+    ]
+    if len(ops) == 1 and masked[ops[0]] == "/" and other_op is None:
+        return f"try_divide({e[:ops[0]]}, {e[ops[0] + 1:]})"
     raise ValueError(
         "TRY(): only TRY(CAST(..)), TRY(a / b), TRY(element_at(..)), "
         "TRY(to_number(..)) and TRY(to_timestamp(..)) — each spanning "
@@ -575,10 +529,18 @@ _CALL_REWRITES = (
     ),
     # Presto date_parse(s, '%Y-%m-%d ...') — MySQL format tokens
     # compiled to a Spark to_timestamp pattern at translate time.
-    ("date_parse", 2, _date_parse_template),
+    (
+        "date_parse",
+        2,
+        _format_template("date_parse", "to_timestamp", _mysql_format_to_spark),
+    ),
     # Presto format_datetime(t, 'yyyy-MM-dd') — Joda pattern compiled
     # (and VALIDATED) to a java.time date_format pattern.
-    ("format_datetime", 2, _format_datetime_template),
+    (
+        "format_datetime",
+        2,
+        _format_template("format_datetime", "date_format", _joda_format_to_spark),
+    ),
     # Presto TRY(expr) -> the matching try_* builtin (see template).
     ("try", 1, _try_template),
 )
@@ -618,8 +580,9 @@ _UNNEST_TAIL_RE = re.compile(
 #: second UNNEST's view lands after the first's — Presto lets a later
 #: UNNEST argument reference an earlier one's columns, and Spark
 #: resolves chained lateral views left-to-right the same way.
+#: The pattern also matches single parens, for the depth count.
 _FROM_END_RE = re.compile(
-    r"\b(where|group|having|order|limit|offset|fetch|union|except"
+    r"[()]|\b(where|group|having|order|limit|offset|fetch|union|except"
     r"|intersect|window|qualify)\b",
     re.IGNORECASE,
 )
@@ -689,41 +652,13 @@ def _rewrite_unnest(q: str) -> str:
     functions compile to `explode(m)` (key, value columns),
     array(row)-returning ones (map_entries, zip) to `inline(a)` —
     and raises with a workaround message when a bare column leaves it
-    genuinely ambiguous. The scan respects string literals and
-    balanced parens (a regex alone cannot bound the array
-    expressions)."""
-    pos = 0
-    while True:
-        flags = _literal_flags(q)
-        m = None
-        for cand in _UNNEST_RE.finditer(q, pos):
-            if not flags[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            break
-        # balanced-paren scan for the UNNEST argument list
-        depth = 1
-        j = m.end()
-        while j < len(q) and depth:
-            if flags[j]:
-                j += 1
-                continue
-            if q[j] == "(":
-                depth += 1
-            elif q[j] == ")":
-                depth -= 1
-            j += 1
-        if depth:
-            raise ValueError("unbalanced parens in UNNEST(...)")
-        arg = q[m.end() : j - 1]
-        marg = _mask_literals(arg)
-        cuts = _split_top_level_positions(marg)
-        args, prev = [], 0
-        for c in cuts + [len(arg)]:
-            args.append(arg[prev:c].strip())
-            prev = c + 1
-        tail = _UNNEST_TAIL_RE.match(q, j)
+    genuinely ambiguous. The scan skips literals and comments and
+    reads the arguments with `_call_args` (a regex alone cannot bound
+    the array expressions)."""
+    m = _code_match(_UNNEST_RE, q)
+    while m:
+        args, j = _call_args(q, m.end())
+        tail = _UNNEST_TAIL_RE.match(_mask(q), j)  # comments read as spaces
         if not tail:
             raise NotImplementedError(
                 "UNNEST without `AS alias(col, ...)` — Spark needs the "
@@ -762,57 +697,49 @@ def _rewrite_unnest(q: str) -> str:
             gen = _unnest_generator(args, cols, bool(ordinality))
         repl = f" LATERAL VIEW {gen} {alias} AS {', '.join(cols)} "
         # remove the UNNEST text, then splice the LATERAL VIEW at the
-        # end of the enclosing FROM clause (first clause keyword at the
-        # UNNEST's own paren depth, the block's closing paren, or EOT)
+        # end of the enclosing FROM clause: the first clause keyword at
+        # the UNNEST's own paren depth, the block's closing paren, or
+        # after the last code character
         base = q[: m.start()] + " " + q[tail.end() :]
-        mbase = _mask_literals(base)
-        d0 = _depth(mbase, m.start())
-        i, depth, insert_at = m.start(), d0, len(base)
-        while i < len(base):
-            ch = mbase[i]
-            if ch == "(":
+        mbase = _mask(base)
+        insert_at, depth = len(mbase.rstrip()), 0
+        for t in _FROM_END_RE.finditer(mbase, m.start()):
+            if t.group() == "(":
                 depth += 1
-            elif ch == ")":
-                if depth == d0:
-                    insert_at = i
-                    break
+            elif depth and t.group() == ")":
                 depth -= 1
-            elif depth == d0 and (i == 0 or not mbase[i - 1].isalnum()):
-                kw = _FROM_END_RE.match(mbase, i)
-                if kw:
-                    insert_at = i
-                    break
-            i += 1
+            elif not depth:
+                insert_at = t.start()
+                break
         q = base[:insert_at] + repl + base[insert_at:]
-        pos = m.start()
+        m = _code_match(_UNNEST_RE, q, m.start())
     return q
 
 
 def translate(q: str) -> str:
-    """Presto-dialect -> Spark SQL: whitespace-normalized pass-through
-    plus the NULL-ordering rewrite and the Presto function-name token
-    rewrites (see module doc). Trailing statement semicolons are
-    stripped first — clients routinely send them, and the NULLS LAST
-    splice must not land after one."""
-    q = q.strip()
-    while q.endswith(";"):
-        q = q[:-1].rstrip()
-    if _UNNEST_RE.search(_mask_literals(q)):  # raises on an unclosed quote
-        q = _rewrite_unnest(q)
+    """Presto-dialect -> Spark SQL: pass-through plus the NULL-ordering
+    rewrite and the Presto spelling rewrites (see module doc). Trailing
+    statement semicolons are stripped first — clients routinely send
+    them, and the NULLS LAST splice must not land after one; a comment
+    after them stays."""
+    masked = _mask(q)  # raises on an unclosed quote
+    code_end = len(masked.rstrip("; \t\r\n"))
+    q = q[:code_end] + "".join(
+        c for c, mc in zip(q[code_end:], masked[code_end:]) if mc != ";"
+    )
+    q = _rewrite_unnest(q)
     for pat, repl in _TOKEN_REWRITES:
-        # recomputed per pass — earlier rewrites shift literal offsets
-        flags = _literal_flags(q)
+        masked = _mask(q)  # per pass: earlier rewrites shift offsets
 
-        def _guarded(m, _repl=repl, _flags=flags):
-            if _flags[m.start()]:
-                return m.group(0)  # spelling inside a string literal
+        def _guarded(m, _repl=repl, _q=q, _masked=masked):
+            if _masked[m.start()] != _q[m.start()]:
+                return m.group(0)  # spelling inside a literal or comment
             return _repl(m) if callable(_repl) else _repl
 
         q = pat.sub(_guarded, q)
     for name, nargs, template in _CALL_REWRITES:
-        if re.search(rf"\b{name}\s*\(", _mask_literals(q), re.IGNORECASE):
-            q = _rewrite_call(q, name, nargs, template)
-    return _presto_null_order(q)
+        q = _rewrite_call(q, name, nargs, template)
+    return _presto_null_order(q).strip()
 
 
 class Engine:
@@ -831,23 +758,10 @@ class Engine:
     def sql(self, q: str) -> DataFrame:
         return self.spark.sql(translate(q))
 
-    def to_pandas(self, q: str):
-        """Arrow-backed client handoff — the viz edge (S11)."""
-        return self.sql(q).toPandas()
-
     # -- catalog -----------------------------------------------------------
     def register(self, df: DataFrame, name: str) -> DataFrame:
         return register(self.spark, df, name)
 
-    def table_exists(self, name: str) -> bool:
-        return self.spark.catalog.tableExists(name)
-
-    def tables(self) -> list[str]:
-        return [t.name for t in self.spark.catalog.listTables()]
-
     # -- ingest ------------------------------------------------------------
     def ingest(self, csv_path: str, **kw) -> DataFrame:
         return ingest_csv(self.spark, csv_path, **kw)
-
-    def ingest_folder(self, folder: str, **kw):
-        return ingest_folder(self.spark, folder, **kw)

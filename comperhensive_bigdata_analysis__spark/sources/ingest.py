@@ -23,6 +23,7 @@ driver-side row handling.
 
 from __future__ import annotations
 
+import logging
 import os
 import re
 
@@ -35,6 +36,11 @@ from ..session import register
 #: helper_utils.py:107 — "max for int is 2**31 but we will go with 2**30"
 INT_WIDTH_BOUND = 2**30
 _INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
+_log = logging.getLogger(__name__)
+
+
+class _NoHeader(ValueError):
+    """A CSV with no header line: there is no column to ingest."""
 
 
 def sanitize_name(name: str) -> str:
@@ -173,8 +179,12 @@ def ingest_csv(
 ) -> DataFrame:
     """Full single-file pipeline (reference Main_File.py:23-35 behavior).
     Returns the registered frame (``session.register``: a small table
-    comes back as one partition)."""
+    comes back as one partition). Raises ValueError naming the file
+    when it has no header line (a 0-byte CSV): there is no column to
+    keep."""
     raw = spark.read.csv(path, header=True, inferSchema=True)
+    if not raw.columns:
+        raise _NoHeader(f"{path}: no header line, nothing to ingest")
     df = preprocess(sanitize_columns(raw))
     name = table or table_name_for(path)
     if parquet_dir:
@@ -192,12 +202,18 @@ def ingest_folder(
     extensions: tuple[str, ...] = (".csv",),
 ) -> dict[str, list[tuple[str, str]]]:
     """Directory-batch ingest (reference helper_utils.py:185-197): convert
-    every matching file, return {table_name: [(col, type), ...]}."""
+    every matching file, return {table_name: [(col, type), ...]}. A file
+    with no header line is skipped with a warning; the rest still
+    ingest."""
     registry: dict[str, list[tuple[str, str]]] = {}
     for fname in sorted(os.listdir(folder)):
         if not fname.lower().endswith(extensions):
             continue
-        df = ingest_csv(spark, os.path.join(folder, fname), parquet_dir=parquet_dir)
+        try:
+            df = ingest_csv(spark, os.path.join(folder, fname), parquet_dir=parquet_dir)
+        except _NoHeader as e:
+            _log.warning("skipping %s", e)
+            continue
         registry[table_name_for(fname)] = df.dtypes
     return registry
 

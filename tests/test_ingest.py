@@ -160,6 +160,33 @@ def test_folder_ingest_survives_a_header_only_file(spark, csv_dir, tmp_path):
     assert "commissioning_date" in [c for c, _ in reg["power_plants_de"]]
 
 
+def test_csv_without_header_line_raises_naming_the_file(spark, tmp_path):
+    """A 0-byte CSV has no header line: ingest_csv refuses it with a
+    ValueError that names the file, instead of registering a table with
+    no columns or failing in the parquet write."""
+    import pytest
+
+    p = tmp_path / "zero.csv"
+    p.write_text("")
+    with pytest.raises(ValueError, match="zero.csv"):
+        ingest_csv(spark, str(p))
+    with pytest.raises(ValueError, match="zero.csv"):
+        ingest_csv(spark, str(p), parquet_dir=str(tmp_path / "pq"))
+
+
+def test_folder_ingest_skips_a_file_without_header_line(spark, csv_dir, tmp_path):
+    """One 0-byte file does not abort the folder: it is skipped and
+    every other file still ingests."""
+    import shutil
+
+    d = tmp_path / "with_zero"
+    shutil.copytree(csv_dir, d)
+    (d / "zero.csv").write_text("")
+    reg = ingest_folder(spark, str(d), parquet_dir=str(tmp_path / "pq"))
+    assert "zero" not in reg
+    assert "commissioning_date" in [c for c, _ in reg["power_plants_de"]]
+
+
 def test_format_roundtrips(spark, tmp_path):
     """orders survives parquet/json/orc/csv round-trips value-intact
     (csv via explicit schema — inference would re-derive types)."""

@@ -1,11 +1,13 @@
 """The package carries no code that only tests call.
 
-An AST scan of the package's top-level functions and classes: each
-must be referenced from somewhere outside ``tests/`` — the package
-itself, ``perfbench/``, ``tools/`` or ``__spark_entry__.py``. A
-``@plan``-registered function counts as used (the catalog calls it),
-and so does a dunder hook such as a module ``__getattr__`` (Python
-calls it). A reference is a use of the name — a bare name or an
+An AST scan of the package's top-level functions and classes, and of
+the methods of those classes: each must be referenced from somewhere
+outside ``tests/`` — the package itself, ``perfbench/``, ``tools/`` or
+``__spark_entry__.py``. A ``@plan``-registered function counts as used
+(the catalog calls it), and so does a dunder hook such as a module
+``__getattr__`` or a class's ``__init__`` (Python calls it). A method
+is matched by its bare name, so a same-named function elsewhere keeps
+it alive. A reference is a use of the name — a bare name or an
 attribute — anywhere in those files other than inside the definition
 itself. An import is not a use: a ``from .x import name`` alias (a
 package ``__init__`` re-export, say) that nothing then calls does not
@@ -65,10 +67,15 @@ def _sources():
     yield os.path.join(_REPO, "__spark_entry__.py")
 
 
-def _is_plan(node) -> bool:
-    return any(
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _is_hook(node) -> bool:
+    """A ``@plan``-registered function (the catalog calls it) or a
+    dunder (Python calls it)."""
+    return node.name.startswith("__") or any(
         isinstance(d, ast.Call) and getattr(d.func, "id", None) == "plan"
-        for d in getattr(node, "decorator_list", [])
+        for d in node.decorator_list
     )
 
 
@@ -89,10 +96,12 @@ def _test_only_definitions() -> set[tuple[str, str]]:
         if path.startswith(pkg_dir + os.sep):
             rel = os.path.relpath(path, pkg_dir).replace(os.sep, "/")
             for node in tree.body:
-                if isinstance(
-                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-                ) and not (_is_plan(node) or node.name.startswith("__")):
+                if isinstance(node, _DEFS) and not _is_hook(node):
                     defs[(rel, node.name)] = (path, node)
+                if isinstance(node, ast.ClassDef):
+                    for meth in node.body:
+                        if isinstance(meth, _DEFS) and not _is_hook(meth):
+                            defs[(rel, f"{node.name}.{meth.name}")] = (path, meth)
         for node in ast.walk(tree):
             name = _referenced_name(node)
             if name:
@@ -101,7 +110,8 @@ def _test_only_definitions() -> set[tuple[str, str]]:
     for (rel, name), (path, node) in defs.items():
         own = {id(n) for n in ast.walk(node)}
         if not any(
-            not (p == path and id(n) in own) for p, n in refs.get(name, [])
+            not (p == path and id(n) in own)
+            for p, n in refs.get(node.name, [])
         ):
             unused.add((rel, name))
     return unused

@@ -482,6 +482,7 @@ def test_translate_fuzz_never_crashes_and_idempotent():
             "'it''s'", '"order by"', " NULLS FIRST", " map_agg(",
             " histogram(", " WITH ORDINALITY ",
             " TRY(", " date_parse(", "'%Y-%m-%d'", "CAST(x AS INT)",
+            " -- ", "\n", " /* ", " */ ",
         ]
     )
 
@@ -722,3 +723,50 @@ def test_unterminated_quote_is_rejected():
     assert translate("SELECT a FROM t WHERE b = 'it''s'") == (
         "SELECT a FROM t WHERE b = 'it''s'"
     )
+
+
+# -- SQL comments: the lexer treats them as whitespace ----------------------
+
+
+def test_comment_before_limit_keeps_presto_null_order(spark):
+    """A line comment between the ORDER BY item and LIMIT must not
+    swallow the NULLS LAST splice: Presto returns the two smallest
+    non-NULL values, not the NULL row first."""
+    eng = Engine(spark)
+    eng.register(
+        spark.sql("SELECT * FROM VALUES (1), (NULL), (3), (2) AS t(a)"),
+        "cmt_null_order",
+    )
+    rows = eng.sql(
+        "SELECT a FROM cmt_null_order ORDER BY a -- note\nLIMIT 2"
+    ).collect()
+    assert [r["a"] for r in rows] == [1, 2]
+
+
+def test_quote_inside_comment_is_not_a_literal():
+    out = translate("SELECT a FROM t -- don't\nORDER BY a")
+    assert out == "SELECT a FROM t -- don't\nORDER BY a NULLS LAST"
+
+
+def test_commented_out_unnest_stays_a_comment():
+    q = "SELECT a FROM t\n-- CROSS JOIN UNNEST(xs) AS u(x)\nWHERE a > 0"
+    assert translate(q) == q
+    q2 = "SELECT a FROM t /* CROSS JOIN UNNEST(xs) AS u(x) */ WHERE a > 0"
+    assert translate(q2) == q2
+    # a comment between a live UNNEST and its alias reads as whitespace
+    out = translate("SELECT x FROM t CROSS JOIN UNNEST(xs) /* items */ AS u(x)")
+    assert "LATERAL VIEW explode(xs) u AS x" in out
+
+
+def test_parens_inside_comments_keep_nulls_last():
+    for q in (
+        "SELECT a FROM t -- (\nORDER BY a",
+        "SELECT a FROM t /* ) */ ORDER BY a",
+    ):
+        assert _norm(translate(q)).endswith("ORDER BY a NULLS LAST"), q
+
+
+def test_trailing_semicolon_before_comment_is_stripped():
+    out = translate("SELECT a FROM t ORDER BY a; -- end")
+    assert out == "SELECT a FROM t ORDER BY a NULLS LAST -- end"
+    assert translate(out) == out
